@@ -1,38 +1,20 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` runs the flagship spatial join on sf0.001;
 ``queries()``/``oracle_sql()`` expose every implemented operator from
 SURVEY.md section 2 with DuckDB oracles (rows-only for the ops whose
 hashing/engine internals SQL cannot express — see queries_engine.py).
 
-The driver checks the FIRST 50 queries in dict order, so ordering is
-explicit here.  Standing rotation policy (round-3 VERDICT next-round #1
-+ round-4 VERDICT next-round #2):
-**(a) every oracle-backed query enters the window in its birth round;
-(b) CHANGED-MODULE RULE — a tail query whose implementing module was
-modified in the round re-enters the window that round.**  The entries
-demoted to make room are statically-green queries whose implementing
-modules are UNTOUCHED this round and whose evidence is carried by green
-driver rows in 3+ consecutive prior rounds (noted per entry below).
-Round 5 re-windows e2_explode_regex, f2_abbrev_rewrite, f4_case_fold and
-g4_lww_upsert (all downstream of the round-4 attrs.py / xml_extract.py
-rewrites and the round-5 GKN blank-owner fix) and rotates in the new
-knn_escalated gate (birth round; the bounded-iterative-disk-escalation
-path with the whole-layer fallback gated off) plus dedup_cluster_planted
-(birth round; connected-components near-dup clustering over a planted
-chain corpus vs a recursive-CTE transitive-closure oracle), plus — late
-round 5 — cell_rollup (birth round) and stream_neardup_matches (birth
-round; the stream-static near-dup join's batch twin over planted
-twins).  Demoted in exchange: j1_classifier_join, g1_segmentation,
-g2_shoelace, g3_orientation, cell_encode, text_fingerprint,
-text_tokens, text_quality — classifiers.py / functions/geometry.py /
-index/grid.py / operators/textops.py are untouched in rounds 4-5 and
-each has green driver rows in r1-r4.
-Rows-only organic variants whose recall evidence is carried by
-planted-oracle twins were removed from the registry entirely (round-3
-VERDICT next-round #8) — the operators remain in the package and in
-bench.py.  Tail queries remain fully runnable — only the driver's capped
-window skips them.
+The driver checks only the first ``DRIVER_WINDOW`` (50) queries in dict
+order, so ``queries()`` orders them explicitly: every registered query
+not named in ``_TAIL`` comes first, then the ``_TAIL`` queries in list
+order.  ``_TAIL`` holds queries whose oracle another window query
+already proves, or whose module is otherwise covered; ``queries()``
+raises if the window would exceed ``DRIVER_WINDOW``, so a new query
+means demoting one.  ``_DROPPED`` names organic rows-only variants left
+out of the registry because a planted or exact-oracle twin proves the
+same path; their operators stay in the package.  Tail queries remain
+fully runnable — tier-1 tests parametrize all registered queries.
 """
 
 from __future__ import annotations

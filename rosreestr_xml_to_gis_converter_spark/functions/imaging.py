@@ -1,20 +1,20 @@
 """Pure-python image codecs + quality metrics.
 
-No imaging library (PIL/cv2) exists in this environment, so:
+No imaging library is required.  Two formats are supported, both real
+bitstreams that any mainstream decoder reads:
 
-* PNG is implemented for real — a standard, lossless RGB8 codec
-  (zlib-deflated filter-0/1/2/3/4 scanlines, spec-conformant chunks).
-  Round-trip is exact, which satisfies the lossless branch of the
-  BASELINE.json invariant ("decoded-pixel allclose; exact for lossless").
-* JPEG decode/encode is a **clearly-marked deterministic stub**: a
-  ``FJPG``-tagged container holding 6-bit-quantized pixels (zlib).  The
-  quantization loss yields PSNR ≈ 42.7 dB >= the 40 dB gate, so the
-  lossy-path plumbing (schema, batching, PSNR check) is real and tested
-  even though the DCT codec itself is not.  Swap ``encode_fake_jpeg`` /
-  ``decode_fake_jpeg`` for Pillow's JPEG when a real codec is available.
+* PNG — lossless RGB8 (zlib-deflated scanlines; the decoder handles
+  filter types 0-4 and RGB/RGBA input).  Round-trip is exact, the
+  lossless branch of the BASELINE.json invariant ("decoded-pixel
+  allclose; exact for lossless").
+* JPEG — the baseline/progressive Huffman DCT codec in
+  :mod:`functions.jpeg`.  Its q90 round-trip clears the 40 dB PSNR gate
+  of the lossy branch.
 
-All functions operate on ``numpy uint8 (h, w, 3)`` arrays and are called
-from Arrow-batched UDFs only.
+``decode_image`` / ``encode_image`` dispatch on ``fmt`` and honour the
+backend selected in :mod:`functions.codec_backend`.  All functions
+operate on ``numpy uint8 (h, w, 3)`` arrays and are called from
+Arrow-batched UDFs only.
 """
 
 from __future__ import annotations
@@ -109,33 +109,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return np.ascontiguousarray(px[:, :, :3])
 
 
-# --- deterministic lossy stub ("jpeg" slot) --------------------------------
-
-_FJPG_SIG = b"FJPG"
-_QUANT_BITS = 2  # drop 2 LSBs -> max err 3 -> PSNR ~= 42.7 dB
-
-
-def encode_fake_jpeg(arr: np.ndarray, quality: int = 90) -> bytes:
-    """STUB lossy codec (no JPEG library in this environment).
-
-    Deterministic 6-bit quantization in an ``FJPG`` container; NOT a real
-    JPEG bitstream.  Keeps the lossy invariant (PSNR >= 40 dB) testable.
-    """
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    h, w, _ = arr.shape
-    q = (arr >> _QUANT_BITS).astype(np.uint8)
-    return _FJPG_SIG + struct.pack(">IIB", w, h, quality) + zlib.compress(q.tobytes(), 6)
-
-
-def decode_fake_jpeg(data: bytes) -> np.ndarray:
-    if data[:4] != _FJPG_SIG:
-        raise ValueError("not an FJPG stub payload")
-    w, h, _q = struct.unpack(">IIB", data[4:13])
-    q = np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8).reshape(h, w, 3)
-    # dequantize to bucket midpoint
-    return ((q.astype(np.uint16) << _QUANT_BITS) | (1 << (_QUANT_BITS - 1))).astype(np.uint8)
-
-
 def _decode_image_pure(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return decode_png(data)
@@ -157,13 +130,10 @@ def _encode_image_pure(arr: np.ndarray, fmt: str) -> bytes:
 
 
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
-    """The ONE imaging seam: every operator decodes through this exact
+    """The one imaging seam: every operator decodes through this exact
     signature, so swapping the codec (pure python <-> Pillow/libjpeg) is
     a backend selection with no plan/schema/oracle change — see
-    :mod:`functions.codec_backend` (round-4 VERDICT next-round #4)."""
-    if fmt == "jpeg" and data[:4] == _FJPG_SIG:
-        # repo-internal round-1 stub container: always the stub decoder
-        return decode_fake_jpeg(data)
+    :mod:`functions.codec_backend`."""
     from rosreestr_xml_to_gis_converter_spark.functions import codec_backend
 
     name = codec_backend.active_backend()

@@ -1,34 +1,33 @@
-"""Real baseline JPEG codec — pure python + numpy, no imaging libs.
+"""Baseline + progressive JPEG codec — pure python + numpy, no imaging libs.
 
-Implements ITU-T T.81 baseline sequential DCT (the public JPEG spec):
-JFIF container, 8-bit, 3 components, 4:4:4 (no chroma subsampling),
-standard Annex K quantization and Huffman tables.  Replaces the round-1
-``FJPG`` stub (functions/imaging.py) so the BASELINE.json lossy
-invariant (PSNR >= 40 dB) gates a real DCT codec, and files produced by
-mainstream encoders at 4:4:4 decode here.
+Implements the Huffman-coded DCT modes of ITU-T T.81 (the public JPEG
+spec) in a JFIF container, with the standard Annex K quantization and
+Huffman tables.
+
+Decoder scope: baseline (SOF0), extended sequential (SOF1, identical
+decode at 8-bit) and progressive (SOF2) DCT; 8-bit samples; 1 or 3
+components; arbitrary integer sampling factors (4:4:4, 4:2:0, 4:2:2,
+4:1:1 — chroma upsampled nearest-neighbor per A.1.1); single-scan
+interleaved or multi-scan non-interleaved (A.2) sequential streams;
+optional restart markers.  Progressive decode covers the full G.2
+surface: interleaved DC scans with successive approximation,
+non-interleaved spectral-selection AC bands, EOB runs and AC refinement
+scans.  Every other frame type (lossless, hierarchical and
+arithmetic-coded: SOF3, SOF5-7, SOF9-11, SOF13-15) raises
+``ValueError("unsupported JPEG mode (SOFn)")``.
+
+Encoders: ``encode_jpeg`` (interleaved baseline), ``encode_jpeg_multiscan``
+(one non-interleaved scan per component) and ``encode_jpeg_progressive``
+(successive-approximation progressive), each at 4:4:4 or 4:2:0
+(``subsampling='420'``, 2x2 box-decimated chroma).  All share one
+front half (:func:`_prepare_planes`), so the three decode to identical
+pixels at the same settings.
 
 Vectorization: the 2-D DCT/IDCT is two 8x8 matrix multiplies applied to
-ALL blocks of a component at once (numpy einsum); only the entropy
-coding is per-symbol python, which is fine for the Arrow-batched
-thumbnail workloads this engine processes (decode happens inside
-``mapInPandas`` batches, operators/imaging_ops.py).
-
-Decoder scope: baseline (SOF0) AND progressive (SOF2) DCT, Huffman,
-8-bit, 1 or 3 components, ARBITRARY integer sampling factors (4:4:4,
-4:2:0, 4:2:2, 4:1:1 — chroma upsampled nearest-neighbor per A.1.1),
-optional restart markers.  Progressive decode (round 4) covers the full
-T.81 G.2 surface: interleaved DC scans with successive approximation,
-non-interleaved spectral-selection AC bands, EOB runs, and AC
-refinement scans — proven by ``encode_jpeg_progressive`` roundtrips
-that reconstruct coefficients BIT-IDENTICAL to the baseline decode of
-the same image.  The encoders emit 4:4:4 (byte-identical to earlier
-rounds) or 4:2:0 (``subsampling='420'``, 2x2 box-decimated chroma),
-sequential or progressive.  SOF1 (extended sequential, identical decode
-at 8-bit) is accepted; SOF9 (sequential ARITHMETIC coding) and SOF10
-(progressive arithmetic) decode via the QM-coder in ``jpeg_arith.py``
-(round 5), including DAC conditioning and positional restarts.
-Hierarchical and lossless modes (SOF3/5/6/7/11/13-15, vanishingly
-rare) raise ``ValueError``.
+all blocks of a component at once; only the entropy coding is per-symbol
+python, which is fine for the Arrow-batched thumbnail workloads this
+engine processes (decode happens inside ``mapInPandas`` batches,
+operators/imaging_ops.py).
 """
 
 from __future__ import annotations
@@ -251,9 +250,9 @@ def _prepare_planes(
 ) -> tuple[int, int, bool, np.ndarray, np.ndarray, list[np.ndarray]]:
     """Shared encoder front half: validate, pad to the MCU multiple
     (edge-replicate), RGB->YCbCr, chroma decimation, quantized zigzag
-    blocks.  Every encoder (baseline / multiscan / progressive and their
-    arithmetic twins) goes through here, which is what makes their
-    decoded pixels identical at the same settings.
+    blocks.  Every encoder (baseline / multiscan / progressive) goes
+    through here, which is what makes their decoded pixels identical at
+    the same settings.
 
     Returns ``(h, w, sub, ql, qc, comps_zz)`` — the true image dims for
     the SOF header, the subsampling flag, the flat quant tables for DQT,
@@ -323,8 +322,8 @@ def _true_block_grid(
 ) -> tuple[int, int]:
     """(nbx, nby): a component's TRUE block grid — ceil of its sampled
     dimensions over 8 (T.81 A.2; MCU padding blocks excluded).  The one
-    formula every non-interleaved scan walk (encode and decode, Huffman
-    and arithmetic) must agree on."""
+    formula every non-interleaved scan walk (encode and decode) must
+    agree on."""
     bw = (w * hi + hmax - 1) // hmax
     bh = (h * vi + vmax - 1) // vmax
     return (bw + 7) // 8, (bh + 7) // 8
@@ -364,10 +363,9 @@ def encode_jpeg(
 ) -> bytes:
     """RGB8 (h, w, 3) -> baseline JFIF bytes.
 
-    ``subsampling``: '444' (default, one block of each component per MCU
-    — byte-identical to the pre-round-4 encoder) or '420' (2x2 luma
-    blocks + one box-averaged block of each chroma per MCU, the layout
-    virtually every camera/web encoder emits).  ``restart_interval`` > 0
+    ``subsampling``: '444' (default, one block of each component per MCU)
+    or '420' (2x2 luma blocks + one box-averaged block of each chroma per
+    MCU, the layout virtually every camera/web encoder emits).  ``restart_interval`` > 0
     emits a DRI segment and RSTn markers every that many MCUs (DC
     predictors reset) — what camera firmware writes for error
     resilience."""
@@ -571,9 +569,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     restart_interval = 0
     scan_start = None
     progressive = False
-    arith = False  # SOF9: sequential arithmetic (QM) entropy coding
-    dc_cond: dict[int, tuple[int, int]] = {}  # DAC conditioning per table
-    ac_cond: dict[int, int] = {}
     baseline_scanned = False  # at least one ns<ncomp baseline scan decoded
     frame = None  # geometry + coefficient planes, built at first SOS
     while pos < len(data):
@@ -602,12 +597,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 tbl = np.frombuffer(seg[p + 1 : p + 65], dtype=np.uint8).astype(np.int32)
                 qt[tq] = tbl[UNZIGZAG].reshape(8, 8)
                 p += 65
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
+        elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline / SOF1 extended sequential (identical decode
-            # at 8-bit) / SOF2 progressive / SOF9 sequential arithmetic /
-            # SOF10 progressive arithmetic
-            progressive = marker in (0xC2, 0xCA)
-            arith = marker in (0xC9, 0xCA)
+            # at 8-bit) / SOF2 progressive
+            progressive = marker == 0xC2
             _prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if _prec != 8:
                 # 12-bit sequential/progressive is legal T.81; the 8-bit
@@ -618,17 +611,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 cid, samp, tq = seg[p], seg[p + 1], seg[p + 2]
                 comps.append((cid, samp, tq))
                 p += 3
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xCB):
+        elif 0xC3 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            # every other SOFn (lossless, hierarchical, arithmetic-coded);
+            # C4 DHT, C8 JPG and CC DAC share the range but are not frames
             raise ValueError(f"unsupported JPEG mode (SOF{marker & 0xF})")
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb, cs = seg[p] >> 4, seg[p] & 0xF, seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)  # (L, U)
-                else:
-                    ac_cond[tb] = cs  # Kx
-                p += 2
         elif marker == 0xC4:  # DHT
             p = 0
             while p < len(seg):
@@ -652,26 +638,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             scan_start = pos + seglen
             if frame is None:
                 frame = _build_frame(h, w, comps)
-            if arith:
-                end = _find_entropy_end(data, scan_start)
-                if progressive:  # SOF10
-                    from .jpeg_arith import decode_arith_progressive_scan
-
-                    decode_arith_progressive_scan(
-                        data[scan_start:end], scan_comps, ss, se, ah, al,
-                        frame, restart_interval, dc_cond, ac_cond,
-                    )
-                else:  # SOF9
-                    from .jpeg_arith import decode_arith_scan
-
-                    decode_arith_scan(
-                        data[scan_start:end], scan_comps, frame,
-                        restart_interval, dc_cond, ac_cond,
-                    )
-                pos = end
-                scan_start = None
-                baseline_scanned = True  # reuse the coefficient-finish path
-                continue
             if not progressive:
                 if ns == len(comps):
                     break  # single whole-image interleaved scan, fast path below
@@ -727,8 +693,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     # when its full code length of real bits is present — so restart
     # markers surface exactly where a bit-by-bit reader would raise, and
     # the <=7 pre-restart padding bits can never complete a phantom
-    # symbol the retried MCU wouldn't discard anyway.  Versus the
-    # round-3 per-bit method-call reader this is ~3x per-symbol.
+    # symbol the retried MCU wouldn't discard anyway.  About 3x faster
+    # per symbol than a per-bit method-call reader.
     scan_len = len(scan)
     pos = acc = nbits = 0
     marker: int | None = None

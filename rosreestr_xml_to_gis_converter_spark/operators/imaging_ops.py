@@ -1,17 +1,14 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image/video) column operators.
 
 The payload is an opaque ``binary`` column with typed metadata
 (input_hint: ``bytes, w, h, fmt``); all decode/feature/resize/sample work
-happens in Arrow-batched ``mapInPandas`` stages.  PNG decode is real
-(pure-python codec); JPEG / video / audio use clearly-marked
-deterministic fake containers (see functions/imaging.py) so the Spark
-plumbing — schema, batch shape, partitioning — is real and tested even
-though the heavy codecs are not available in this environment.
+happens in Arrow-batched ``mapInPandas`` stages.  Images are PNG or JPEG
+and decode through ``functions.imaging.decode_image``; videos are raw
+MJPEG (concatenated JPEG frames).
 """
 
 from __future__ import annotations
 
-import zlib
 import struct
 from typing import Iterator
 
@@ -115,16 +112,15 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 # --- video -------------------------------------------------------------------
 #
-# Round 2: the REAL container is raw MJPEG — a concatenated sequence of
+# The container is raw MJPEG — a concatenated sequence of
 # baseline JPEG frames (what ffmpeg reads/writes as `.mjpeg`), each frame
 # produced by the real codec in functions/jpeg.py.  Frame boundaries are
 # found by scanning SOI/EOI markers (EOI cannot appear unescaped inside
 # entropy data), so frame-sampling SEEKS: unsampled frames are never
 # entropy-decoded — the property that matters when sampling 1-of-N frames
-# from 10^12 videos.  The round-1 FVID stub still decodes for compat.
+# from 10^12 videos.
 
 _SOI = b"\xff\xd8"
-_EOI = b"\xff\xd9"
 
 
 def encode_mjpeg(frames: np.ndarray, quality: int = 90) -> bytes:
@@ -192,48 +188,15 @@ def decode_mjpeg(data: bytes, indices: list[int] | None = None) -> np.ndarray:
     return np.stack([decode_jpeg(data[spans[i][0] : spans[i][1]]) for i in take])
 
 
-def decode_video(data: bytes) -> np.ndarray:
-    if data[:4] == _FVID_SIG:
-        return decode_fake_video(data)
-    if data[:2] == _SOI:
-        return decode_mjpeg(data)
-    raise NotImplementedError(
-        "unsupported video container (raw MJPEG and the FVID stub are supported)"
-    )
-
-
-_FVID_SIG = b"FVID"
-
-
-def encode_fake_video(frames: np.ndarray) -> bytes:
-    """STUB video container: (n, h, w, 3) uint8 -> FVID bytes (zlib raw).
-    Deterministic stand-in for a real codec; swap for pyav/ffmpeg where
-    available."""
-    n, h, w, _ = frames.shape
-    return _FVID_SIG + struct.pack(">III", n, w, h) + zlib.compress(
-        np.ascontiguousarray(frames, dtype=np.uint8).tobytes(), 6
-    )
-
-
-def decode_fake_video(data: bytes) -> np.ndarray:
-    if data[:4] != _FVID_SIG:
-        raise NotImplementedError(
-            "real video decode unavailable in this environment (no ffmpeg); "
-            "only the FVID deterministic stub container is supported"
-        )
-    n, w, h = struct.unpack(">III", data[4:16])
-    return np.frombuffer(zlib.decompress(data[16:]), dtype=np.uint8).reshape(n, h, w, 3)
-
-
 FRAME_SAMPLE_SCHEMA = "video_id string, frame_idx int, bytes binary, w int, h int"
 
 
 def sample_frames(videos: DataFrame, every_k: int) -> DataFrame:
-    """Frame-sample a video binary column: every k-th frame re-encoded as
-    PNG.  ``videos``: (video_id string, bytes binary).
+    """Frame-sample a raw-MJPEG video binary column: every k-th frame
+    re-encoded as PNG.  ``videos``: (video_id string, bytes binary).
 
-    MJPEG videos are sampled with a marker-level seek: unsampled frames
-    are never entropy-decoded (decode_mjpeg(indices=...)), so the cost is
+    Sampling is a marker-level seek: unsampled frames are never
+    entropy-decoded (decode_mjpeg(indices=...)), so the cost is
     proportional to frames KEPT, not frames stored."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -241,14 +204,8 @@ def sample_frames(videos: DataFrame, every_k: int) -> DataFrame:
             rows = []
             for r in pdf.itertuples(index=False):
                 data = bytes(r.bytes)
-                if data[:2] == _SOI:
-                    n = len(mjpeg_frame_spans(data))
-                    idxs = list(range(0, n, every_k))
-                    frames = decode_mjpeg(data, idxs)
-                else:
-                    all_frames = decode_fake_video(data)
-                    idxs = list(range(0, len(all_frames), every_k))
-                    frames = all_frames[idxs]
+                idxs = list(range(0, len(mjpeg_frame_spans(data)), every_k))
+                frames = decode_mjpeg(data, idxs)
                 for idx, frame in zip(idxs, frames):
                     png = encode_image(frame, "png")
                     rows.append((r.video_id, idx, png, frame.shape[1], frame.shape[0]))

@@ -86,10 +86,6 @@ def build_parcel_cover(
     return cov.withMetadata("cell", {"res": res})
 
 
-# backwards-compatible alias (res is always recorded in column metadata)
-build_parcel_cover_with_res = build_parcel_cover
-
-
 # Boundary-geometry volume above which the cover is NOT pinned on the
 # workers: the broadcast dict passes through driver memory, so an unguarded
 # 10^7-parcel layer would OOM the driver.  256 MB is comfortably inside a

@@ -938,12 +938,12 @@ WHERE in00 OR in10 OR in01 OR in11 OR crossed
 TILE_MASKS_SQL = _tile_masks_sql()
 
 
-# planted image fixtures with arithmetically-known invariants (VERDICT r2
-# ask #7): flat r=g=b JPEGs round-trip exactly through the real baseline
-# codec (DC quant error < 0.5 at q90; proven by the green
-# video_frame_sample pixel oracle), and an x-gradient PNG has closed-form
-# channel means and aHash — so ok/width/height/means/ahash all get an
-# exact DuckDB oracle.  MD5-of-mask-style internals stay pytest-verified.
+# planted image fixtures with closed-form invariants: flat r=g=b JPEGs
+# (baseline and progressive) round-trip exactly through the in-repo codec
+# (DC quant error < 0.5 at q90; also proven by the video_frame_sample
+# pixel oracle), and an x-gradient PNG has closed-form channel means and
+# aHash — so ok/width/height/means/ahash all get an exact DuckDB oracle.
+# MD5-of-mask-style internals stay pytest-verified.
 
 _N_PLANTED_IMGS = 120
 # gradient gray = 16*x; 8x8 box-resize -> small[i,j] = 32j+8, mean 120,
@@ -955,6 +955,10 @@ def _planted_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from rosreestr_xml_to_gis_converter_spark.functions.imaging import encode_image
+    from rosreestr_xml_to_gis_converter_spark.functions.jpeg import (
+        encode_jpeg,
+        encode_jpeg_progressive,
+    )
     from rosreestr_xml_to_gis_converter_spark.schemas import IMAGES_SCHEMA
 
     from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
@@ -979,43 +983,17 @@ def _planted_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 d = int(d)
                 if d % 2 == 0:
                     # flat color decodes EXACTLY (DC-only block) under
-                    # every entropy layer, so the closed-form oracle
-                    # (mean == c) gates all four decoders: baseline
-                    # Huffman, progressive (SOF2), and the round-5 QM
-                    # arithmetic coders (sequential SOF9 + progressive
-                    # SOF10)
+                    # both entropy layers, so the closed-form oracle
+                    # (mean == c) gates the baseline and progressive
+                    # decoders.  Encoders are called directly, not via
+                    # encode_image: under SPARK_GRAFT_IMAGE_BACKEND=system
+                    # that would emit Pillow bytes, whose fixed-point
+                    # YCbCr round-trip can shift flat means by +/-1 and
+                    # break the exact oracle
                     c = (d * 13 + 7) % 256
                     arr = np.full((16, 16, 3), c, np.uint8)
-                    if d % 8 == 0:
-                        # pinned to the in-repo encoder like the three
-                        # sibling branches (round-5 ADVICE): under
-                        # SPARK_GRAFT_IMAGE_BACKEND=system the dispatched
-                        # encode_image would emit Pillow bytes, whose
-                        # fixed-point YCbCr round-trip can shift flat
-                        # means by +/-1 and break the exact oracle
-                        from rosreestr_xml_to_gis_converter_spark.functions.jpeg import (
-                            encode_jpeg,
-                        )
-
-                        data = encode_jpeg(arr)
-                    elif d % 8 == 2:
-                        from rosreestr_xml_to_gis_converter_spark.functions.jpeg import (
-                            encode_jpeg_progressive,
-                        )
-
-                        data = encode_jpeg_progressive(arr)
-                    elif d % 8 == 4:
-                        from rosreestr_xml_to_gis_converter_spark.functions.jpeg_arith import (
-                            encode_jpeg_arith,
-                        )
-
-                        data = encode_jpeg_arith(arr)
-                    else:
-                        from rosreestr_xml_to_gis_converter_spark.functions.jpeg_arith import (
-                            encode_jpeg_arith_progressive,
-                        )
-
-                        data = encode_jpeg_arith_progressive(arr)
+                    encode = encode_jpeg_progressive if d % 4 == 2 else encode_jpeg
+                    data = encode(arr)
                     fmt = "jpeg"
                 else:
                     data, fmt = grad_png, "png"

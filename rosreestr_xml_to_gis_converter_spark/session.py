@@ -14,6 +14,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, in whole GiB (at least 1g)."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, ram // (4 << 30))}g"
+
+
 def get_spark(
     app_name: str = "rosreestr_gis_spark",
     cores: int | None = None,
@@ -27,9 +33,7 @@ def get_spark(
     proxy for the N vs 4N executor scaling criterion in BASELINE.json).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(cores, DEFAULT_SHUFFLE_PARTITIONS)))
-    )
+    shuffle = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -37,31 +41,28 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # round-6 skew tuning (guide §2.5): the default 256 MB skew
-        # threshold never fires on a hot join KEY whose partition is
-        # "only" ~100 MB but carries minutes of per-row (Python PIP)
-        # work.  16 MB + the unchanged 5x-median factor catches it while
-        # leaving healthy jobs alone — at cluster scale the factor
-        # dominates (median-sized partitions are far above 16 MB), so
-        # the low threshold is scale-safe.  Split chunks target the
-        # advisory size; forceOptimizeSkewedJoin accepts the extra
-        # shuffle a split can introduce (a skewed straggler always costs
-        # more than one more exchange of its bytes).  All overridable.
-        .config(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            os.environ.get("SPARK_GRAFT_SKEW_THRESHOLD", "16m"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"),
-        )
+        # the default 256 MB skew threshold never fires on a hot join
+        # KEY whose partition is "only" ~100 MB but carries minutes of
+        # per-row (Python PIP) work.  16 MB + the unchanged 5x-median
+        # factor catches it while leaving healthy jobs alone — at cluster
+        # scale the factor dominates (median-sized partitions are far
+        # above 16 MB), so the low threshold is scale-safe.  Split chunks
+        # target the advisory size; forceOptimizeSkewedJoin accepts the
+        # extra shuffle a split can introduce (a skewed straggler always
+        # costs more than one more exchange of its bytes).  ``extra_conf``
+        # overrides both.
+        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # local mode: the driver JVM is the whole cluster — size its heap
         # like the sum of executors, not like a driver
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -115,27 +115,3 @@ def test_mirror_backend_spark_query_unchanged(spark, tmp_path):
     assert got_rows == [tuple(r) for r in want_rows]
     assert lines["SCHEMA"] == want_schema
 
-
-def test_arithmetic_stream_detection_routes_to_pure():
-    """The system backend must hand arithmetic-coded JPEG (SOF9/SOF10) to
-    the pure decoder: libjpeg builds commonly omit arithmetic decoding,
-    and the planted arithmetic fixtures gate exact-value oracles.  The
-    detector is pure marker-walking, so it is testable without Pillow."""
-    from rosreestr_xml_to_gis_converter_spark.functions.codec_backend import (
-        jpeg_uses_arithmetic,
-    )
-    from rosreestr_xml_to_gis_converter_spark.functions.jpeg import (
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from rosreestr_xml_to_gis_converter_spark.functions.jpeg_arith import (
-        encode_jpeg_arith,
-        encode_jpeg_arith_progressive,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
-    assert not jpeg_uses_arithmetic(encode_jpeg(img))
-    assert not jpeg_uses_arithmetic(encode_jpeg_progressive(img))
-    assert jpeg_uses_arithmetic(encode_jpeg_arith(img))
-    assert jpeg_uses_arithmetic(encode_jpeg_arith_progressive(img))

@@ -9,7 +9,6 @@ import pytest
 from rosreestr_xml_to_gis_converter_spark.functions.imaging import (
     decode_image,
     decode_png,
-    encode_fake_jpeg,
     encode_png,
     psnr,
 )
@@ -69,15 +68,6 @@ def test_png_decode_all_filter_types():
             + _chunk(b"IEND", b"")
         )
         assert np.array_equal(decode_png(data), arr), f"filter {ftype}"
-
-
-def test_fake_jpeg_psnr_above_gate():
-    rng = np.random.default_rng(3)
-    arr = gen_image_array(rng, 64, 64)
-    out = decode_image(encode_fake_jpeg(arr), "jpeg")
-    assert out.shape == arr.shape
-    p = psnr(arr, out)
-    assert p >= 40.0, p
 
 
 def test_gen_images_deterministic_and_decodable():
@@ -162,19 +152,6 @@ def test_real_jpeg_quality_monotonic():
     assert sizes == sorted(sizes)  # ...and bigger files
 
 
-def test_fjpg_stub_payloads_still_decode():
-    """Backward compat: round-1 FJPG payloads route through the stub
-    decoder; new encodes are real JPEG bitstreams."""
-    rng = np.random.default_rng(15)
-    arr = gen_image_array(rng, 32, 32)
-    old = encode_fake_jpeg(arr)
-    assert decode_image(old, "jpeg").shape == arr.shape
-    from rosreestr_xml_to_gis_converter_spark.functions.imaging import encode_image
-
-    new = encode_image(arr, "jpeg")
-    assert new[:2] == b"\xff\xd8" and new[:4] != b"FJPG"
-
-
 def test_real_jpeg_rejects_non_baseline():
     from rosreestr_xml_to_gis_converter_spark.functions.jpeg import (
         decode_jpeg,
@@ -183,21 +160,21 @@ def test_real_jpeg_rejects_non_baseline():
 
     with pytest.raises(ValueError):
         decode_jpeg(b"\x00\x01not a jpeg")
-    # hierarchical modes are guarded boundaries, not wrong answers (SOF2
-    # progressive is supported since round 4, SOF9/SOF10 arithmetic since
-    # round 5; a baseline stream relabeled SOF2 or SOF10 still errors
-    # because its scan violates G.1 -- a DC band with Se=63)
+    # every SOFn other than C0/C1/C2 (lossless, hierarchical,
+    # arithmetic-coded) is rejected with the same error; C4 DHT, C8 JPG
+    # and CC DAC share the marker range but are not frame headers
     rng = np.random.default_rng(16)
     data = bytearray(encode_jpeg(gen_image_array(rng, 16, 16), 90))
     sof = data.index(b"\xff\xc0")
-    for bad in (0xC3, 0xC5):
+    for bad in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
         data[sof + 1] = bad
-        with pytest.raises(ValueError, match="unsupported JPEG mode"):
+        with pytest.raises(ValueError, match=rf"unsupported JPEG mode \(SOF{bad & 0xF}\)"):
             decode_jpeg(bytes(data))
-    for prog in (0xC2, 0xCA):
-        data[sof + 1] = prog
-        with pytest.raises(ValueError, match="Se=0"):
-            decode_jpeg(bytes(data))
+    # a baseline stream relabeled SOF2 errors because its scan violates
+    # G.1 (a DC band with Se=63)
+    data[sof + 1] = 0xC2
+    with pytest.raises(ValueError, match="Se=0"):
+        decode_jpeg(bytes(data))
     # SOF1 (extended sequential) decodes identically to the same stream
     # labeled SOF0 at 8-bit precision
     data[sof + 1] = 0xC1

@@ -9,7 +9,7 @@ import pytest
 from rosreestr_xml_to_gis_converter_spark.functions.geometry import points_in_rings
 from rosreestr_xml_to_gis_converter_spark.index.grid import latlng_to_cell
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import (
-    build_parcel_cover_with_res,
+    build_parcel_cover,
     spatial_join,
 )
 from rosreestr_xml_to_gis_converter_spark.schemas import IMAGES_SCHEMA
@@ -49,7 +49,7 @@ def test_join_matches_brute_force_general_polygons(spark, seed, n_img, n_parcels
     # remap phash into the box-straddling range: keep as-is (box covers the
     # full 2^32 fraction range by construction)
     images = spark.createDataFrame(pdf, schema=IMAGES_SCHEMA)
-    cover = build_parcel_cover_with_res(spark, parcels, RES)
+    cover = build_parcel_cover(spark, parcels, RES)
     got = {
         (r.image_id, r.cad_number, r.cell)
         for r in spatial_join(images, cover, TESTDATA_BOX).collect()
@@ -63,7 +63,7 @@ def test_join_rectangle_layer_and_salted_path_agree(spark):
     parcels = _parcels_rings()
     pdf = _strip_bytes(gen_images_pdf(5, 600))
     images = spark.createDataFrame(pdf, schema=IMAGES_SCHEMA)
-    cover = build_parcel_cover_with_res(spark, parcels, RES)
+    cover = build_parcel_cover(spark, parcels, RES)
     plain = {
         (r.image_id, r.cad_number)
         for r in spatial_join(images, cover, TESTDATA_BOX).collect()
@@ -82,8 +82,8 @@ def test_join_rectangle_layer_and_salted_path_agree(spark):
 def test_distributed_cover_equals_driver_cover(spark):
     parcels = gen_parcels(3, 10)
     contours = spark.createDataFrame(parcels_to_contours_pdf(parcels))
-    dist = build_parcel_cover_with_res(spark, contours, RES)
-    local = build_parcel_cover_with_res(spark, parcels, RES)
+    dist = build_parcel_cover(spark, contours, RES)
+    local = build_parcel_cover(spark, parcels, RES)
     a = {(r.cell, r.cad_number, r.full) for r in dist.collect()}
     b = {(r.cell, r.cad_number, r.full) for r in local.collect()}
     assert a == b
@@ -99,7 +99,7 @@ def test_join_plan_is_codegen_and_broadcast(spark, tmp_path):
         _strip_bytes(gen_images_pdf(7, 50)), schema=IMAGES_SCHEMA
     ).write.parquet(path)
     images = spark.read.parquet(path)
-    cover = build_parcel_cover_with_res(spark, parcels, RES)
+    cover = build_parcel_cover(spark, parcels, RES)
     out = spatial_join(images, cover, TESTDATA_BOX)
     out.collect()  # AQE finalizes (and codegen-compiles) the plan on execution
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -129,7 +129,7 @@ def test_broadcast_cover_size_guard_falls_back(spark):
     parcels = _parcels_rings()
     pdf = _strip_bytes(gen_images_pdf(11, 300))
     images = spark.createDataFrame(pdf, schema=IMAGES_SCHEMA)
-    cover = build_parcel_cover_with_res(spark, parcels, RES)
+    cover = build_parcel_cover(spark, parcels, RES)
     want = {(i, c) for i, c, _ in brute_force_join(pdf, parcels, TESTDATA_BOX)}
 
     # explicit prepare over the limit raises instead of collecting
