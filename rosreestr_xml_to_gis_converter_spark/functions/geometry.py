@@ -10,10 +10,12 @@ Reproduces the reference's geometry semantics exactly, but batched:
   negative, conditional reverse — /root/reference/real_estate.py:764-780.
 * ``segment_rings``     — flat vertex stream -> rings, boundary where the
   vertex label repeats (ring closure) — /root/reference/real_estate.py:735-757.
-* ``points_in_rings``   — even-odd ray-cast point-in-polygon over a ring
-  set (holes handled by parity), the exact-refine kernel of the spatial
-  join.  Boundary convention: half-open ``[min, max)`` in both axes for
-  axis-aligned edges, which is what the SQL oracles mirror.
+* ``points_in_polygons`` — even-odd ray-cast point-in-polygon of each
+  point against its own polygon, over a flat edge table (``edge_table``);
+  holes are handled by parity.  The exact-refine kernel of the spatial
+  join; ``points_in_rings`` is its one-polygon case.  Boundary
+  convention: half-open ``[min, max)`` in both axes for axis-aligned
+  edges, which is what the SQL oracles mirror.
 
 All functions are pure, vectorized over numpy arrays, and called only from
 ``pandas_udf`` / ``mapInPandas`` stages — never from row-at-a-time Python
@@ -135,43 +137,87 @@ def segment_rings(
     return rings
 
 
+def edge_table(polygons: Sequence[Sequence[np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """Multi-ring polygons -> flat edge table for :func:`points_in_polygons`.
+
+    Returns ``(edges, starts)``: ``edges`` is a ``(4, m)`` float64 array
+    whose rows are ``x1, y1, x2, y2``, and polygon ``j`` owns columns
+    ``starts[j]:starts[j + 1]``.  A ring that does not repeat its first
+    vertex gets its closing edge; a ring with fewer than 3 vertices adds
+    no edge.
+    """
+    parts: list[np.ndarray] = []
+    counts = np.zeros(len(polygons), dtype=np.int64)
+    for j, rings in enumerate(polygons):
+        for ring in rings:
+            r = np.asarray(ring, dtype=np.float64)
+            if len(r) < 3:
+                continue
+            if r[0, 0] != r[-1, 0] or r[0, 1] != r[-1, 1]:
+                r = np.vstack([r, r[:1]])
+            parts.append(np.vstack([r[:-1].T, r[1:].T]))
+            counts[j] += len(r) - 1
+    edges = np.concatenate(parts, axis=1) if parts else np.empty((4, 0), dtype=np.float64)
+    starts = np.zeros(len(polygons) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    return edges, starts
+
+
+def points_in_polygons(
+    px: np.ndarray,
+    py: np.ndarray,
+    poly: np.ndarray,
+    edges: np.ndarray,
+    starts: np.ndarray,
+) -> np.ndarray:
+    """Even-odd (ray-cast) containment of point ``i`` in polygon ``poly[i]``.
+
+    ``edges``/``starts`` come from :func:`edge_table`.  Every point is
+    tested against each edge of its own polygon only, and the crossing
+    parity is summed over all of the polygon's rings, so holes (later
+    rings) subtract naturally.  Edge rule: an edge is counted when
+    ``(y1 > py) != (y2 > py)`` and the horizontal ray to +inf crosses it
+    strictly right of the point — for an axis-aligned rectangle this
+    makes containment exactly ``xmin <= px < xmax AND ymin <= py < ymax``,
+    the convention the DuckDB oracles mirror.
+
+    The loop runs over edge ranks, not points: pass ``r`` tests every
+    point whose polygon has more than ``r`` edges against that polygon's
+    ``r``-th edge, so each pass is one vectorized step over at most
+    ``len(px)`` elements.
+    """
+    poly = np.asarray(poly, dtype=np.int64)
+    lo = starts[poly]
+    cnt = starts[poly + 1] - lo
+    # most edges first: the points still active at pass r are a prefix,
+    # active[r] long
+    order = np.argsort(-cnt, kind="stable")
+    lo, neg_cnt = lo[order], -cnt[order]
+    active = np.searchsorted(neg_cnt, -np.arange(cnt.max(initial=0)), side="left")
+    pxs = np.asarray(px, dtype=np.float64)[order]
+    pys = np.asarray(py, dtype=np.float64)[order]
+    x1, y1, x2, y2 = edges
+    parity = np.zeros(len(order), dtype=bool)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for r, m in enumerate(active.tolist()):
+            e = lo[:m] + r
+            ex1, ey1, ey2 = x1[e], y1[e], y2[e]
+            qy = pys[:m]
+            cond = (ey1 > qy) != (ey2 > qy)
+            xint = (x2[e] - ex1) * (qy - ey1) / (ey2 - ey1) + ex1
+            parity[:m] ^= cond & (pxs[:m] < xint)
+    inside = np.empty(len(order), dtype=bool)
+    inside[order] = parity
+    return inside
+
+
 def points_in_rings(
     px: np.ndarray, py: np.ndarray, rings: Sequence[np.ndarray]
 ) -> np.ndarray:
-    """Even-odd (ray-cast) containment of points in a multi-ring polygon.
-
-    Vectorized over points x edges.  Parity across *all* rings means holes
-    (later rings) subtract naturally.  Edge rule: an edge is counted when
-    ``(y1 > py) != (y2 > py)`` and the horizontal ray to +inf crosses it
-    strictly right of the point — for an axis-aligned rectangle this makes
-    containment exactly ``xmin <= px < xmax AND ymin <= py < ymax``, the
-    convention the DuckDB oracles mirror.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    inside = np.zeros(px.shape, dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        if len(r) < 3:
-            continue
-        x1, y1 = r[:-1, 0], r[:-1, 1]
-        x2, y2 = r[1:, 0], r[1:, 1]
-        # ensure closure: if the ring does not repeat its first vertex,
-        # add the closing edge
-        if r[0, 0] != r[-1, 0] or r[0, 1] != r[-1, 1]:
-            x1 = np.append(x1, r[-1, 0])
-            y1 = np.append(y1, r[-1, 1])
-            x2 = np.append(x2, r[0, 0])
-            y2 = np.append(y2, r[0, 1])
-        # (points, edges) broadcast
-        pyc = py[:, None]
-        pxc = px[:, None]
-        cond = (y1[None, :] > pyc) != (y2[None, :] > pyc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (x2 - x1)[None, :] * (pyc - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
-        crossed = cond & (pxc < xint)
-        inside ^= (crossed.sum(axis=1) % 2).astype(bool)
-    return inside
+    """Even-odd containment of every point in one multi-ring polygon: the
+    one-polygon case of :func:`points_in_polygons`."""
+    edges, starts = edge_table([rings])
+    return points_in_polygons(px, py, np.zeros(len(px), dtype=np.int64), edges, starts)
 
 
 def segments_intersect_rect(

@@ -1,28 +1,37 @@
 """kNN-to-nearest-parcel (the no-match fallback of the spatial join).
 
 Images whose point lies in no parcel polygon are assigned their k nearest
-parcels (by centroid distance, planar).  Two strategies:
+parcels (by centroid distance, planar).  Ranking is deterministic: ties
+are broken by ``cad_number``.  Three entry points:
 
-* ``knn_bruteforce`` — broadcast cross-join + ranking window.  The right
-  plan when the parcel-centroid side is broadcastable (it usually is:
-  even 10^7 centroids is ~200 MB); cost is O(|images| * |parcels|) inside
-  codegen, no shuffle of the big side beyond the final window.
-* ``knn_grid`` — the scale path (SURVEY.md §2.2): encode both sides at a
-  coarse resolution, explode the small side over a bounded ``grid_disk``
-  (a literal (dx,dy) offset array — JVM-side, no UDF), equi-join on cell,
-  then rank.  Exact whenever the disk radius covers the true kNN radius;
-  ``knn_grid`` therefore takes the radius explicitly and the caller
-  (or a test) asserts parity against brute force on representative
-  layers.  This is the grid-based distributed kNN-join pattern
-  (cf. PAPERS.md, stream kNN-join literature).
+* ``knn_bruteforce`` — broadcast cross-join + per-image ranking
+  aggregate, all relational; the baseline the other paths are tested
+  against.
+* ``knn_grid`` — the scale path: encode both sides at a coarse
+  resolution and rank, per image, only the centroids within a bounded
+  ``grid_disk`` of its cell (the grid-candidate / per-point top-k split
+  of distributed kNN joins, cf. PAPERS.md).  For a dimension-sized layer
+  (the whole-layer gate, see :func:`knn_grid`) the layer is collected
+  once, its per-cell candidate lists are built in numpy and broadcast,
+  and one ``mapInArrow`` stage ranks every image batch with the numpy
+  top-k below; an image whose disk holds fewer than k centroids ranks
+  the whole layer.  Huge layers stay JVM-side: a broadcast per-cell
+  candidate map plus a bounded escalation ladder.
+* ``knn_literal`` — a centroid list given in Python becomes the broadcast
+  layer directly, and every image ranks the whole layer with the same
+  numpy top-k.
 
-Ranking is deterministic: ties broken by ``cad_number``.
+The numpy top-k computes ``sqrt(dx*dx + dy*dy)`` with the same IEEE
+double operations in the same order as the Column expression, so
+distances are bit-identical to the relational paths, and orders
+candidates by ``(dist, cad_number)`` through one ``lexsort``.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,11 +40,12 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     _IX_SHIFT,
     _RES_SHIFT,
     cell_col,
+    cell_id,
+    cell_ij,
+    latlng_to_cell,
 )
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import with_geotag
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
-
-KNN_OUT_COLS = ["image_id", "cad_number", "rank", "dist"]
 
 
 def _dist(lon: Column, lat: Column, clon: Column, clat: Column) -> Column:
@@ -87,40 +97,30 @@ def knn_literal(
     box: GeoBox,
     k: int,
 ) -> DataFrame:
-    """Zero-shuffle kNN for a small centroid set (the common
-    parcel-layer-as-dimension case).
+    """Zero-shuffle kNN for a small centroid set given as a Python list
+    of ``(cad_number, clon, clat)`` (the parcel-layer-as-dimension case).
 
-    The centroids become a literal array of structs; per image row a
-    higher-order ``transform`` computes every distance, ``array_sort``
-    orders (dist, cad) lexicographically — identical tie-breaking to the
-    window/agg paths — and ``slice`` keeps k.  Everything stays inside
-    WholeStageCodegen: no shuffle, no aggregation state, perfectly linear
-    in |images|.  Use ``knn_grid`` when the centroid side is too large to
-    inline/broadcast.
+    The list becomes the broadcast layer table directly — no Spark job
+    collects it — and every image row ranks the whole layer in one
+    ``mapInArrow`` stage, with the same numpy top-k and tie-breaking as
+    :func:`knn_grid`.  Use ``knn_grid`` when the centroid side is too
+    large to rank per image.
     """
-    pts = with_geotag(images, box).select("image_id", "lon", "lat")
-    cen_arr = F.array(
-        *[
-            F.struct(
-                F.lit(clon).alias("clon"), F.lit(clat).alias("clat"), F.lit(cad).alias("cad")
-            )
-            for cad, clon, clat in centroids
-        ]
+    import pyarrow as pa
+
+    layer = pa.table(
+        {
+            "cad_number": pa.array([c[0] for c in centroids], pa.string()),
+            "clon": pa.array([c[1] for c in centroids], pa.float64()),
+            "clat": pa.array([c[2] for c in centroids], pa.float64()),
+        }
     )
-    scored = F.transform(
-        cen_arr,
-        lambda c: F.struct(
-            _dist(F.col("lon"), F.col("lat"), c["clon"], c["clat"]).alias("dist"),
-            c["cad"].alias("cad_number"),
-        ),
+    # no cell column: a null cell matches no candidate list, so every row
+    # ranks the whole layer
+    pts = with_geotag(images, box).select(
+        "image_id", "lon", "lat", F.lit(None).cast("long").alias("cell")
     )
-    top = F.slice(F.array_sort(scored), 1, k)
-    return pts.select("image_id", F.posexplode(top).alias("pos", "t")).select(
-        "image_id",
-        F.col("t.cad_number").alias("cad_number"),
-        (F.col("pos") + 1).alias("rank"),
-        F.col("t.dist").alias("dist"),
-    )
+    return _numpy_topk(pts, layer, k)
 
 
 # Worst-case euclidean ground distance (in LAT-cell units) covered by one
@@ -157,60 +157,62 @@ def knn_grid(
 
     Exact iff every image's true k nearest centroids fall inside that
     disk; pick ``res``/``disk`` so the disk's ground extent exceeds the
-    worst-case kNN radius of the layer (asserted in tests).  Candidate
-    expansion replicates the SMALL side (2*disk+1)^2 times — the 10^12-row
-    image side is never exploded.
+    worst-case kNN radius of the layer (asserted in tests).  The image
+    side is scanned once and never shuffled or exploded; only the small
+    centroid side is replicated over the disk's (2*disk+1)^2 cells.
 
-    Precondition: ``image_id`` must be unique in ``images`` (true of a
-    real image table).  Top-k is computed per input ROW — duplicate ids
-    would each emit their own k rows; callers joining from tables with
-    repeated keys (e.g. the driver testdata's duplicate (orderkey,
-    linenumber) pairs) must ``dropDuplicates(["image_id"])`` first, as
-    the gate queries do.  Deduping here would force a shuffle of the big
-    side on every call, which the zero-shuffle design exists to avoid.
+    Top-k is computed per input ROW: duplicate ``image_id`` rows each
+    emit their own k rows.  Callers joining from tables with repeated
+    keys (e.g. images derived from lineitem, whose (orderkey,
+    linenumber) pairs repeat) must ``dropDuplicates`` first, as the
+    gate queries do; deduping here would shuffle the big side on every
+    call.
 
-    Completeness (SURVEY §2.2 "unmatched images -> k nearest", round-4
-    VERDICT next-round #3): an image whose disk holds fewer than ``k``
-    candidates (sparse region) is NOT dropped — it escalates through
-    BOUNDED ITERATIVE RING EXPANSION: for each multiplier m in
-    ``escalate`` a further broadcast map carries, for ONLY the cells
-    still short at the previous level, the candidates within the exact
-    disk ``_exact_disk(disk*m)`` plus the count within ``disk*m``; the
-    first level whose count reaches k supplies the candidate list, and
-    because that list spans the conservative exact disk the result is
-    TRUE kNN for escalated rows (no caller-tuned radius needed).  All
-    levels are broadcast left-joins on the same cell key: the image side
-    is scanned ONCE and never shuffles (pinned by a plan test); the
-    escalation maps cover only under-covered cells, so their size scales
-    with the layer's sparse boundary, not with the layer.
+    **Whole-layer gate open** (dimension-sized layers): ``layer_fallback
+    =True``, or ``None`` (auto) when the layer has at most
+    ``layer_fallback_max_rows`` rows.  The auto gate collects at most
+    ``layer_fallback_max_rows + 1`` centroid rows as Arrow and decides
+    from what came back; that one collect also feeds the ranking, so no
+    separate sizing job runs.  The layer is ordered by ``cad_number``,
+    its per-cell candidate lists are built in numpy and broadcast, and a
+    single ``mapInArrow`` stage ranks every image: against its cell's
+    list when that holds at least k centroids, otherwise against the
+    whole layer.  Output is exactly min(k, |centroids|) rows per input
+    row.  An image with a null point ranks the whole layer with null
+    ``dist``, i.e. in ``cad_number`` order.  ``escalate`` is ignored
+    here: the whole layer already gives the true kNN of every short
+    image.
 
-    Images short even at the largest escalation fall to a whole-layer
-    broadcast ranking — SIZE-GATED (round-4 ADVICE): built when
-    ``layer_fallback`` is True, or when it is None (auto) and the layer
-    has at most ``layer_fallback_max_rows`` rows (one count() on the
-    dimension side; callers who KNOW the layer is dimension-sized
-    should pass ``layer_fallback=True`` — the auto count() costs a full
-    job launch per call, ~0.4 s of overhead even on a literal layer).  With the gate open the output is exactly
-    min(k, |centroids|) rows per image; with it closed (huge layers)
-    a still-short image ranks the nearest available escalated candidates
-    and may emit fewer than k rows — at 10^7-centroid density the
-    escalation ladder makes that combination practically unreachable.
-
-    ``escalate=None`` (default) is AUTO: when the layer gate is open the
-    ladder is skipped entirely — for a dimension-sized layer the
-    whole-layer terminal already yields the identical TRUE-kNN result
-    for every frontier row, so the ladder would only add centroid-side
-    stages (measured: +50% on the sf0.1 gate query for zero output
-    change); when the gate is closed the ladder defaults to (2, 4).
-    Pass an explicit tuple to force it (e.g. to bound per-frontier-row
-    ranking cost on a near-cap layer), or ``()`` to disable it.
+    **Gate closed** (huge layers): a short image escalates through
+    bounded iterative ring expansion, all JVM-side.  For each multiplier
+    m in ``escalate`` (default ``(2, 4)``) a further broadcast map
+    carries, for only the cells still short at the previous level, the
+    candidates within the exact disk ``_exact_disk(disk*m)`` plus the
+    count within ``disk*m``; the first level whose count reaches k
+    supplies the candidate list, and because that list spans the
+    conservative exact disk the result is the true kNN.  All levels are
+    broadcast left-joins on the same cell key, so the image side is
+    scanned once and never shuffles, and the escalation maps scale with
+    the layer's sparse boundary, not with the layer.  An image still
+    short at the largest level ranks the nearest escalated candidates it
+    has and may emit fewer than k rows; pass ``()`` to disable the
+    ladder.
     """
     pts = with_geotag(images, box).select("image_id", "lon", "lat")
     pts = pts.withColumn("cell", cell_col(F.col("lat"), F.col("lon"), res))
-    return _knn_grid_join(
-        pts, centroids, k, res, disk, escalate, layer_fallback,
-        layer_fallback_max_rows,
-    )
+    layer = None
+    if layer_fallback is not False:
+        cen = centroids.select(
+            "cad_number", F.col("clon").cast("double"), F.col("clat").cast("double")
+        )
+        if layer_fallback is None:
+            cen = cen.limit(layer_fallback_max_rows + 1)
+        layer = cen.toArrow()
+        if layer_fallback is None and layer.num_rows > layer_fallback_max_rows:
+            layer = None
+    if layer is not None:
+        return _numpy_topk(pts, layer, k, res, disk)
+    return _knn_ladder(pts, centroids, k, res, disk, (2, 4) if escalate is None else escalate)
 
 
 def _exploded_cells(centroids: DataFrame, res: int, outer: int) -> DataFrame:
@@ -247,27 +249,16 @@ def _exploded_cells(centroids: DataFrame, res: int, outer: int) -> DataFrame:
     )
 
 
-def _cen_cells(
-    centroids: DataFrame,
-    res: int,
-    outer: int,
-    inner: int,
-    cand_cols: tuple[str, ...] = ("clon", "clat", "cad_number"),
-) -> DataFrame:
+def _cen_cells(centroids: DataFrame, res: int, outer: int, inner: int) -> DataFrame:
     """Centroids exploded over the (2*outer+1)^2 neighbor offsets ->
     one row per covered cell: ``_cands`` (all candidates within Chebyshev
-    ``outer``) + ``_cnt`` (how many lie within ``inner``).
-
-    ``cand_cols`` picks the fields packed per candidate — the whole-layer
-    gate path substitutes an integer ``_ord`` for the cad string so the
-    per-row top-k sorts a numeric-only struct (see ``_knn_grid_join``).
-    """
+    ``outer``) + ``_cnt`` (how many lie within ``inner``)."""
     cen = _exploded_cells(centroids, res, outer).withColumn(
         "_in",
         ((F.abs(F.col("_dx")) <= inner) & (F.abs(F.col("_dy")) <= inner)).cast("int"),
     )
     return cen.groupBy("cell").agg(
-        F.collect_list(F.struct(*cand_cols)).alias("_cands"),
+        F.collect_list(F.struct("clon", "clat", "cad_number")).alias("_cands"),
         F.sum("_in").alias("_cnt"),
     )
 
@@ -286,61 +277,24 @@ def _cen_counts(centroids: DataFrame, res: int, d: int) -> DataFrame:
     )
 
 
-def _knn_grid_join(
+def _knn_ladder(
     pts: DataFrame,
     centroids: DataFrame,
     k: int,
     res: int,
     disk: int,
-    escalate: tuple[int, ...] | None = (),
-    layer_fallback: bool | None = None,
-    layer_fallback_max_rows: int = 1_000_000,
+    escalate: tuple[int, ...],
 ) -> DataFrame:
-    use_layer = layer_fallback
-    if use_layer is None:
-        # auto gate (round-4 ADVICE): the whole-layer single-row broadcast
-        # is only safe for dimension-sized layers — one cheap count() on
-        # the small side decides, no manual knob
-        use_layer = centroids.count() <= layer_fallback_max_rows
-    if escalate is None:
-        # AUTO ladder: redundant (identical output, extra stages) while
-        # the whole-layer terminal exists; the scale path without it
-        escalate = () if use_layer else (2, 4)
-    # Candidate encoding (round-6 optimization, guide §2 "per-task work"):
-    # with the whole-layer gate OPEN the layer is dimension-sized, so each
-    # centroid gets an integer ``_ord`` = its rank by cad_number (layer-
-    # wide window on the SMALL side only) and candidates travel as
-    # struct(dist, _ord) — the per-row transform/array_sort then touches
-    # only fixed-width numerics instead of copying/comparing cad strings
-    # (measured: the string-struct transform was ~2.4 s of the 2.7 s
-    # top-k cost at sf1.0).  ``(dist, _ord)`` orders identically to
-    # ``(dist, cad_number)`` because _ord is rank-by-cad (ties on equal
-    # cads emit identical rows either way); the string reappears only in
-    # the final projection via one element_at into the rank->cad array.
-    # Gate CLOSED (huge layer) keeps the string encoding: a layer-wide
-    # window/array would violate the no-whole-layer-materialization rule.
-    if use_layer:
-        from pyspark.sql import Window
-
-        cen = centroids.withColumn(
-            "_ord", F.row_number().over(Window.orderBy("cad_number"))
-        )
-        cand_cols: tuple[str, ...] = ("clon", "clat", "_ord")
-    else:
-        cen = centroids
-        cand_cols = ("clon", "clat", "cad_number")
-    # ZERO-SHUFFLE top-k: every candidate of an image comes from the one
-    # broadcast-join row that matched its cell, so a groupBy/window over
-    # exploded candidate rows would shuffle 8-10x the output for nothing
-    # (measured: the agg was ~90% of the query's wall time).  Instead the
-    # SMALL side is pre-aggregated per cell (still broadcast-sized), the
-    # join is 1:1, and top-k is a higher-order array expression — the big
-    # side never shuffles and the whole query stays in codegen.
-    levels = [_cen_cells(cen, res, disk, disk, cand_cols)]
+    """The gate-closed realization of :func:`knn_grid`, all JVM-side."""
+    # every candidate of an image comes from the one broadcast-join row
+    # that matched its cell, so the small side is pre-aggregated per cell
+    # (still broadcast-sized), the join is 1:1, and top-k is an array
+    # expression: the big side never shuffles
+    levels = [_cen_cells(centroids, res, disk, disk)]
     prev_d = disk
     for mult in escalate:
         d_i = disk * mult
-        mi_full = _cen_cells(cen, res, _exact_disk(d_i), d_i, cand_cols)
+        mi_full = _cen_cells(centroids, res, _exact_disk(d_i), d_i)
         # keep only cells the PREVIOUS level left short: the escalation
         # maps' size tracks the sparse boundary, not the whole layer.
         # The filter reads a counts-only map (not the previous full map,
@@ -354,7 +308,7 @@ def _knn_grid_join(
         prev_d = d_i
     # All levels join the image side as broadcast LEFT joins on the same
     # cell key — SINGLE-PASS: no union of covered/frontier branches (that
-    # would rescan the 10^12-row table once per level), no shuffle of the
+    # would rescan the image table once per level), no shuffle of the
     # big side; codegen evaluates each level's array lazily, so covered
     # rows never touch the escalation columns.
     joined = pts
@@ -370,50 +324,13 @@ def _knn_grid_join(
             "cell",
             "left",
         )
-    if use_layer:
-        all_cands = cen.groupBy().agg(
-            F.collect_list(F.struct(*cand_cols)).alias("_all"),
-            # rank->cad lookup for the final projection: position i holds
-            # the cad_number whose _ord is i (array_sort on (ord, cad)
-            # structs orders by the unique ord)
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_ord", "cad_number"))),
-                lambda s: s["cad_number"],
-            ).alias("_cads"),
-        )
-        joined = joined.crossJoin(F.broadcast(all_cands))
-        terminal = F.col("_all")
-    else:
-        # huge layer, gate closed: rank the nearest available escalated
-        # candidates (documented: may yield < k rows for an image with
-        # nothing within the largest escalation disk)
-        terminal = F.coalesce(
-            *[F.col(f"_cands{i}") for i in reversed(range(len(levels)))]
-        )
-    cands = terminal
+    # a row short at every level ranks the nearest escalated candidates
+    # it has (documented: may yield < k rows)
+    cands = F.coalesce(*[F.col(f"_cands{i}") for i in reversed(range(len(levels)))])
     for i in reversed(range(len(levels))):
         cands = F.when(
             F.coalesce(F.col(f"_cnt{i}"), F.lit(0)) >= k, F.col(f"_cands{i}")
         ).otherwise(cands)
-    if use_layer:
-        scored = F.transform(
-            cands,
-            lambda c: F.struct(
-                _dist(F.col("lon"), F.col("lat"), c["clon"], c["clat"]).alias("dist"),
-                c["_ord"].alias("_ord"),
-            ),
-        )
-        # numeric struct sort == (dist ASC, _ord ASC) == (dist ASC,
-        # cad_number ASC): _ord is rank-by-cad_number
-        top = F.slice(F.array_sort(scored), 1, k)
-        return joined.select(
-            "image_id", "_cads", F.posexplode(top).alias("pos", "t")
-        ).select(
-            "image_id",
-            F.element_at(F.col("_cads"), F.col("t._ord")).alias("cad_number"),
-            (F.col("pos") + 1).alias("rank"),
-            F.col("t.dist").alias("dist"),
-        )
     scored = F.transform(
         cands,
         lambda c: F.struct(
@@ -422,11 +339,131 @@ def _knn_grid_join(
         ),
     )
     # lexicographic struct sort == (dist ASC, cad_number ASC) tie-breaking,
-    # identical to the window/agg realizations
+    # identical to the other realizations
     top = F.slice(F.array_sort(scored), 1, k)
     return joined.select("image_id", F.posexplode(top).alias("pos", "t")).select(
         "image_id",
         F.col("t.cad_number").alias("cad_number"),
         (F.col("pos") + 1).alias("rank"),
         F.col("t.dist").alias("dist"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# numpy top-k over Arrow batches (whole-layer gate open, and knn_literal)
+# ---------------------------------------------------------------------------
+
+_OUT_SCHEMA = "image_id string, cad_number string, rank int, dist double"
+
+# candidate pairs ranked per numpy pass: bounds the top-k temporaries
+# when many rows of a batch rank a large whole layer
+_PAIRS_PER_PASS = 1 << 20
+
+
+def _layer_table(layer, res: int | None, disk: int) -> tuple:
+    """Driver side of the numpy top-k: the layer ordered by ``cad_number``
+    (row ``i`` has rank ``_ord = i``) and its per-cell candidate lists.
+
+    Returns ``(clon, clat, cnull, cads, keys, offsets, pool)``.  Cell
+    ``keys[i]`` holds the ``_ord`` of every centroid within Chebyshev
+    ``disk`` of it, ascending, in ``pool[offsets[i]:offsets[i + 1]]`` —
+    the numpy twin of :func:`_cen_cells`, with ``latlng_to_cell``
+    bit-identical to ``cell_col``.  ``pool[offsets[-1]:]`` is the whole
+    layer.  A trailing int64-max key with an empty list makes every
+    ``searchsorted`` position valid.  ``res=None`` builds no cell lists.
+    """
+    import pyarrow.compute as pc
+
+    layer = layer.take(
+        pc.sort_indices(layer, [("cad_number", "ascending")], null_placement="at_start")
+    )
+    clon = layer.column("clon").to_numpy()
+    clat = layer.column("clat").to_numpy()
+    # a null coordinate gives a null dist, which Spark orders first
+    cnull = np.isnan(clon) | np.isnan(clat)
+    keys = np.empty(0, dtype=np.int64)
+    cand = np.empty(0, dtype=np.int64)
+    first = np.empty(0, dtype=np.int64)
+    if res is not None:
+        ords = np.flatnonzero(~cnull)
+        ix, iy = cell_ij(latlng_to_cell(clat[ords], clon[ords], res))
+        off = np.arange(-disk, disk + 1)
+        dx, dy = (d.ravel() for d in np.meshgrid(off, off))
+        nx, ny = ix[:, None] + dx, iy[:, None] + dy
+        ok = (nx >= 0) & (nx < 1 << res) & (ny >= 0) & (ny < 1 << res)
+        cells = cell_id(nx[ok], ny[ok], res)
+        cand = np.broadcast_to(ords[:, None], ok.shape)[ok]
+        o = np.lexsort((cand, cells))
+        keys, first = np.unique(cells[o], return_index=True)
+        cand = cand[o]
+    keys = np.append(keys, np.iinfo(np.int64).max)
+    offsets = np.concatenate([first, [len(cand)] * 2])
+    pool = np.concatenate([cand, np.arange(len(clon))])
+    cads = layer.column("cad_number").combine_chunks()
+    return clon, clat, cnull, cads, keys, offsets, pool
+
+
+def _topk_batches(layer_bc, k: int):
+    """Worker side: per Arrow batch of ``(image_id, lon, lat, cell)``,
+    look each row's cell up in the broadcast lists (``searchsorted``),
+    expand the ragged candidate lists, compute the distances, sort with
+    ``lexsort((_ord, dist, row))`` and keep the first k per row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def topk(batches):
+        clon, clat, cnull, cads, keys, offsets, pool = layer_bc.value
+        for batch in batches:
+            lon, lat = batch.column("lon"), batch.column("lat")
+            rnull = pc.or_(pc.is_null(lon), pc.is_null(lat)).to_numpy(zero_copy_only=False)
+            lon = lon.to_numpy(zero_copy_only=False)
+            lat = lat.to_numpy(zero_copy_only=False)
+            cell = pc.fill_null(batch.column("cell"), -1).to_numpy()
+            pos = np.searchsorted(keys, cell)
+            start = offsets[pos]
+            cnt = np.where(keys[pos] == cell, offsets[pos + 1] - start, 0)
+            short = cnt < k
+            start = np.where(short, offsets[-1], start)
+            cnt = np.where(short, len(clon), cnt)
+            ends = np.cumsum(cnt)
+            a = 0
+            while a < len(cnt):
+                done = ends[a - 1] if a else 0
+                b = max(a + 1, int(np.searchsorted(ends, done + _PAIRS_PER_PASS, side="right")))
+                c = cnt[a:b]
+                row = np.repeat(np.arange(a, b), c)
+                local = np.arange(len(row)) - np.repeat(ends[a:b] - c - done, c)
+                ords = pool[np.repeat(start[a:b], c) + local]
+                dx = lon[row] - clon[ords]
+                dy = lat[row] - clat[ords]
+                dist = np.sqrt(dx * dx + dy * dy)
+                dnull = rnull[row] | cnull[ords]
+                o = np.lexsort((ords, np.where(dnull, -np.inf, dist), row))
+                # rows stay contiguous and in place under the sort (row is
+                # its primary key), so ``local`` is each sorted pair's rank
+                sel = local < k
+                idx = o[sel]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column("image_id").take(row[idx]),
+                        cads.take(ords[idx]),
+                        pa.array(local[sel] + 1, pa.int32()),
+                        pa.array(dist[idx], mask=dnull[idx]),
+                    ],
+                    names=["image_id", "cad_number", "rank", "dist"],
+                )
+                a = b
+
+    return topk
+
+
+def _numpy_topk(
+    pts: DataFrame, layer, k: int, res: int | None = None, disk: int = 0
+) -> DataFrame:
+    """Rank ``pts`` (image_id, lon, lat, cell) against the Arrow ``layer``
+    (cad_number, clon, clat) in one ``mapInArrow`` stage; the layer table
+    travels to the workers as one broadcast."""
+    bc = pts.sparkSession.sparkContext.broadcast(_layer_table(layer, res, disk))
+    return pts.select("image_id", "lon", "lat", "cell").mapInArrow(
+        _topk_batches(bc, k), schema=_OUT_SCHEMA
     )

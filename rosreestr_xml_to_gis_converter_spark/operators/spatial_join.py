@@ -9,7 +9,8 @@ contour) to web scale:
       |  cell-encode at res R                  -- pure Column arithmetic
       |  equi-join on cell with parcel cover   -- Catalyst BHJ/SMJ (+AQE)
       |  full-cell fast path: cell entirely inside polygon -> emit
-      |  boundary cells: exact point-in-polygon -- Arrow-batched numpy
+      |  boundary cells: exact point-in-polygon -- one numpy edge-table
+      |                                             kernel per Arrow batch
       v
     (image_id, cad_number, cell)
 
@@ -17,9 +18,15 @@ Scale properties:
 * The big side is touched only by codegen'd expressions until after the
   join has already cut it down to candidates; Python sees only boundary
   candidates, in Arrow batches.
-* Geometry travels as a packed binary column (WKB-analog), only on
-  boundary cover cells — the full-cell fast path (the bulk of a large
-  parcel's area) never moves geometry or enters Python at all.
+* Boundary geometry reaches the workers once, as a broadcast flat edge
+  table (``PreparedCover``); a layer too large for that rides the join
+  rows as a packed binary column (WKB-analog) instead.  Either way it
+  exists only for boundary cover cells — the full-cell fast path (the
+  bulk of a large parcel's area) never moves geometry or enters Python.
+* The refine runs one vectorized point-in-polygon call per Arrow batch,
+  each row against its own parcel's edges: its cost is linear in the
+  boundary rows and their polygons' edge counts, whatever the number of
+  distinct parcels in the batch.
 * A coarse parent-cell column (``cell_parent_col``) is the intended
   storage partition key — the equi-join then prunes file groups from
   parquet/Iceberg stats without any custom planner rule.
@@ -37,7 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rosreestr_xml_to_gis_converter_spark.functions.geometry import (
+    edge_table,
     pack_rings,
+    points_in_polygons,
     unpack_rings,
 )
 from rosreestr_xml_to_gis_converter_spark.index.grid import cell_col, polygon_to_cells
@@ -99,8 +108,8 @@ class CoverTooLargeError(ValueError):
 
 def _boundary_geom_bytes(cover: DataFrame, max_bytes: int) -> int:
     """Distinct boundary-geometry bytes, measured BEFORE any driver-side
-    collect so oversized layers never reach the driver (round-1
-    perf-weak #3).  Two-tier to keep the common case cheap:
+    collect so oversized layers never reach the driver.  Two-tier to
+    keep the common case cheap:
 
     1. shuffle-free upper bound: sum of geometry lengths over ALL
        boundary rows (each parcel counted once per boundary cell — an
@@ -126,8 +135,12 @@ def _boundary_geom_bytes(cover: DataFrame, max_bytes: int) -> int:
 
 class PreparedCover:
     """Build-once join state for a parcel cover: the slim broadcastable
-    cover relation plus the worker-side geometry dict (broadcast once,
-    reused by every subsequent join against this layer).
+    cover relation plus the boundary geometry as one flat edge table,
+    built on the driver and broadcast once as ``geom_bc`` — a
+    ``(pks, edges, starts)`` tuple where polygon ``j`` (edge columns
+    ``starts[j]:starts[j + 1]``, see ``geometry.edge_table``) belongs to
+    the parcel whose ``xxhash64(cad_number)`` is ``pks[j]``, and ``pks``
+    is sorted.  Every later join against this layer reuses it.
 
     Raises :class:`CoverTooLargeError` when the distinct boundary geometry
     exceeds ``max_bytes`` — callers (``spatial_join``) fall back to the
@@ -144,15 +157,16 @@ class PreparedCover:
                 "use spatial_join(..., broadcast_cover=False) (shuffled path) "
                 "or raise max_bytes explicitly"
             )
-        geom_rows = (
+        geom_rows = sorted(
             cover.filter(~F.col("full"))
             .select(F.xxhash64("cad_number").alias("pk"), "geom")
             .distinct()
-            .collect()
+            .collect(),
+            key=lambda r: r.pk,
         )
-        self.geom_bc = spark.sparkContext.broadcast(
-            {r.pk: bytes(r.geom) for r in geom_rows}
-        )
+        pks = np.array([r.pk for r in geom_rows], dtype=np.int64)
+        edges, starts = edge_table([unpack_rings(r.geom) for r in geom_rows])
+        self.geom_bc = spark.sparkContext.broadcast((pks, edges, starts))
         self.slim = cover.select("cell", "cad_number", "full")
 
 
@@ -171,82 +185,61 @@ _REFINE_SCHEMA = "image_id string, cad_number string, cell long"
 
 
 def _refine_batches(batches):
-    """Exact PIP on boundary candidates (geometry carried per row),
-    Arrow-native (round-6 optimization, guide §4).
+    """Exact PIP on boundary candidates whose geometry rides the rows
+    (the shuffled path, for layers too large to pin on the workers).
 
-    The previous ``mapInPandas`` realization materialized every
-    image_id/cad_number as a Python string and ran a pandas groupby per
-    batch — ~1M rows/s/core.  Here the string/binary columns stay Arrow
-    buffers end to end: ``dictionary_encode`` collapses the per-row geom
-    bytes to (indices, uniques) in native code, PIP runs per unique
-    geometry on zero-copy lon/lat numpy views, and the passthrough
-    columns are filtered natively.  Used on the non-broadcast path where
-    the parcel layer is too large to pin on the workers — geometry rides
-    the join rows instead.
+    The string/binary columns stay Arrow buffers end to end:
+    ``dictionary_encode`` collapses the per-row geom bytes to (indices,
+    uniques) in native code, the batch's uniques become one edge table,
+    and a single :func:`points_in_polygons` call tests every row against
+    its own polygon on zero-copy lon/lat numpy views; the passthrough
+    columns are filtered natively.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from rosreestr_xml_to_gis_converter_spark.functions.geometry import points_in_rings
-
-    ring_cache: dict[bytes, list[np.ndarray]] = {}
     for batch in batches:
         if batch.num_rows == 0:
             continue
         gd = pc.dictionary_encode(batch.column("geom"))
-        idx = gd.indices.to_numpy(zero_copy_only=False)
-        lon = batch.column("lon").to_numpy(zero_copy_only=False)
-        lat = batch.column("lat").to_numpy(zero_copy_only=False)
-        keep = np.zeros(len(idx), dtype=bool)
-        uniques = gd.dictionary
-        for i in range(len(uniques)):
-            geom = uniques[i].as_py()
-            rings = ring_cache.get(geom)
-            if rings is None:
-                rings = unpack_rings(geom)
-                ring_cache[geom] = rings
-            sel = idx == i
-            keep[sel] = points_in_rings(lon[sel], lat[sel], rings)
+        edges, starts = edge_table([unpack_rings(g) for g in gd.dictionary.to_pylist()])
+        keep = points_in_polygons(
+            batch.column("lon").to_numpy(zero_copy_only=False),
+            batch.column("lat").to_numpy(zero_copy_only=False),
+            gd.indices.to_numpy(zero_copy_only=False),
+            edges,
+            starts,
+        )
         yield batch.select(["image_id", "cad_number", "cell"]).filter(pa.array(keep))
 
 
 def _refine_arrow_broadcast(geom_bc):
-    """Arrow-native refine for the broadcast path.
+    """Exact PIP for the broadcast path.
 
-    Two transport optimizations over a naive pandas UDF:
-    * boundary rows carry NO geometry (a 100+-byte packed-rings column per
-      candidate row dominates the transfer otherwise) — workers look rings
-      up by ``pk`` (xxhash64 of cad_number, computed JVM-side) in a
-      broadcast dict deserialized once per worker;
-    * ``mapInArrow`` instead of ``mapInPandas``: the string columns
-      (image_id, cad_number) pass through as Arrow buffers and are
-      filtered natively — they are never materialized as Python objects,
-      which is what caps Arrow->pandas throughput at ~1M rows/s/core.
-    Only lon/lat/pk are touched, zero-copy to numpy.
+    Boundary rows carry no geometry, only ``pk`` (xxhash64 of cad_number,
+    computed JVM-side): a ``searchsorted`` into the broadcast table's
+    sorted ``pks`` gives each row its polygon, and one
+    :func:`points_in_polygons` call tests the whole batch.  ``mapInArrow``
+    keeps the string columns (image_id, cad_number) as Arrow buffers that
+    are filtered natively; only lon/lat/pk are touched, zero-copy to
+    numpy.
     """
     import pyarrow as pa
 
-    from rosreestr_xml_to_gis_converter_spark.functions.geometry import points_in_rings
-
     def refine(batches):
-        ring_cache: dict[int, list[np.ndarray]] = {}
-        geom_map = geom_bc.value
+        pks, edges, starts = geom_bc.value
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             pk = batch.column("pk").to_numpy(zero_copy_only=False)
-            lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False)
-            keep = np.zeros(len(pk), dtype=bool)
-            for key in np.unique(pk):
-                rings = ring_cache.get(key)
-                if rings is None:
-                    rings = unpack_rings(geom_map[int(key)])
-                    ring_cache[key] = rings
-                sel = pk == key
-                keep[sel] = points_in_rings(lon[sel], lat[sel], rings)
-            out = batch.select(["image_id", "cad_number", "cell"]).filter(pa.array(keep))
-            yield out
+            keep = points_in_polygons(
+                batch.column("lon").to_numpy(zero_copy_only=False),
+                batch.column("lat").to_numpy(zero_copy_only=False),
+                np.searchsorted(pks, pk),
+                edges,
+                starts,
+            )
+            yield batch.select(["image_id", "cad_number", "cell"]).filter(pa.array(keep))
 
     return refine
 
@@ -273,7 +266,7 @@ def spatial_join(
     """
     prepared = isinstance(cover, PreparedCover)
     res = cover.res if prepared else _cover_res(cover)
-    # input-skew guard (round 6, guide §2.5): a low-row-group parquet
+    # input-skew guard: a low-row-group parquet
     # concentrates the whole scan on a handful of tasks, throttling the
     # join+refine stage fused behind it; the size-gated hash repartition
     # on image_id spreads it across all cores and is skipped for
@@ -295,9 +288,9 @@ def spatial_join(
             warnings.warn(f"spatial_join: {exc}; falling back to shuffled join")
             use_arrow_refine = False
     if use_arrow_refine:
-        # geometry goes to workers ONCE as a broadcast dict keyed by
-        # xxhash64(cad_number); the join and the Arrow hop ship only slim
-        # (cell, cad, full) rows
+        # geometry goes to workers ONCE as the broadcast edge table keyed
+        # by xxhash64(cad_number); the join and the Arrow hop ship only
+        # slim (cell, cad, full) rows
         if prepared:
             pc = cover
         geom_bc = pc.geom_bc

@@ -9,8 +9,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rosreestr_xml_to_gis_converter_spark.functions.geometry import (
+    edge_table,
     gauss_area,
     normalize_rings,
+    points_in_polygons,
     points_in_rings,
     polygon_centroid,
     segment_rings,
@@ -133,3 +135,64 @@ def _slow_pip(x: float, y: float, ring: np.ndarray) -> bool:
             if x < xint:
                 inside = not inside
     return inside
+
+
+def _pip_per_ring(px, py, rings):
+    """Reference: one (points x edges) broadcast per ring, parity XORed
+    across rings — the per-polygon arithmetic the edge-table kernel must
+    reproduce bit for bit."""
+    inside = np.zeros(px.shape, dtype=bool)
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        if len(r) < 3:
+            continue
+        if r[0, 0] != r[-1, 0] or r[0, 1] != r[-1, 1]:
+            r = np.vstack([r, r[:1]])
+        x1, y1, x2, y2 = r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1]
+        pyc, pxc = py[:, None], px[:, None]
+        cond = (y1 > pyc) != (y2 > pyc)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x2 - x1) * (pyc - y1) / (y2 - y1) + x1
+        inside ^= ((cond & (pxc < xint)).sum(axis=1) % 2).astype(bool)
+    return inside
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_points_in_polygons_matches_per_polygon_loop(seed):
+    """The flat edge-table kernel over many polygons == a per-polygon
+    ``points_in_rings`` loop == the per-ring reference, bit for bit.
+    Coordinates sit on a half-unit lattice so axis-aligned edges (the
+    half-open ``[min, max)`` convention) and points exactly on vertices
+    are common; polygons mix closed and unclosed rings, holes, rings of
+    fewer than 3 vertices and polygons with no edge at all."""
+    rng = np.random.default_rng(seed)
+    polys = []
+    for j in range(60):
+        rings = [SQUARE + j % 5, HOLE + j % 5] if j % 7 == 0 else []
+        for _ in range(rng.integers(0, 4)):
+            pts = np.round(rng.uniform(0, 10, (rng.integers(1, 10), 2)) * 2) / 2
+            if rng.random() < 0.5:
+                pts = np.vstack([pts, pts[:1]])  # closed ring
+            rings.append(pts)
+        polys.append(rings)
+    n = 5000
+    px = np.round(rng.uniform(-1, 11, n) * 2) / 2
+    py = np.round(rng.uniform(-1, 11, n) * 2) / 2
+    # a fifth of the points sit exactly on a vertex of their polygon
+    poly = rng.integers(0, len(polys), n)
+    for i in np.flatnonzero(rng.random(n) < 0.2):
+        verts = [v for r in polys[poly[i]] for v in r]
+        if verts:
+            px[i], py[i] = verts[rng.integers(len(verts))]
+    edges, starts = edge_table(polys)
+    got = points_in_polygons(px, py, poly, edges, starts)
+    loop = np.zeros(n, dtype=bool)
+    ref = np.zeros(n, dtype=bool)
+    for j, rings in enumerate(polys):
+        sel = poly == j
+        loop[sel] = points_in_rings(px[sel], py[sel], rings)
+        ref[sel] = _pip_per_ring(px[sel], py[sel], rings)
+    assert np.array_equal(got, loop)
+    assert np.array_equal(got, ref)
+    assert 0 < got.sum() < n  # fixture sanity: both outcomes occur
+    assert (np.diff(starts) == 0).any()  # a polygon with no edge

@@ -319,3 +319,64 @@ def test_escalation_auto_gate_closes_on_small_broadcast_cap(spark, images):
     merged = a.merge(brute, on=key, suffixes=("", "_b"))
     assert len(merged) == len(a)
     assert (merged["cad_number"] == merged["cad_number_b"]).all()
+
+
+def _one_img_rows(spark, rows):
+    """(image_id, phash) pairs -> an images frame (phash may be None)."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [(i, None, 1, 1, "png", "c", ph) for i, ph in rows],
+            columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
+        ).astype({"phash": "Int64"}),
+        schema=IMAGES_SCHEMA,
+    )
+
+
+def test_numpy_topk_edge_cases_match_bruteforce(spark):
+    """Gate-open knn_grid and knn_literal against knn_bruteforce, with
+    ``dist`` compared as exact doubles: an equidistant pair (tie broken
+    by cad_number), an image whose disk is empty and one whose disk is
+    short (both rank the whole layer), one whose disk holds >= k, a
+    duplicated image_id (k rows per input ROW), a null phash (k rows of
+    null dist in cad_number order), and k > |layer| (min(k, |layer|)
+    rows per row)."""
+    from collections import Counter
+
+    from rosreestr_xml_to_gis_converter_spark.operators.knn import knn_literal
+
+    b = TESTDATA_BOX
+    # phash -> (lon0 + fx * dlon, lat0 + fy * dlat) for fractions f / 2^32
+    quarter = (1 << 30 << 32) | (1 << 30)  # (lon0 + 3, lat0 + 1.5)
+    far = (1 << 29 << 32) | (1 << 31)  # (lon0 + 6, lat0 + 0.75)
+    layer = [
+        ("b", b.lon0 + 1.0, b.lat0),  # equidistant from phash 0 ...
+        ("a", b.lon0 - 1.0, b.lat0),  # ... so a ranks before b
+        ("c", b.lon0 + 5.0, b.lat0 + 3.0),
+        ("e4", b.lon0 + 3.04, b.lat0 + 1.5),
+        ("e1", b.lon0 + 3.01, b.lat0 + 1.5),
+        ("e3", b.lon0 + 3.0, b.lat0 + 1.53),
+        ("e2", b.lon0 + 2.98, b.lat0 + 1.5),
+    ]
+    cen = spark.createDataFrame(
+        pd.DataFrame(layer, columns=["cad_number", "clon", "clat"])
+    )
+    rows = [("tie", 0), ("empty", far), ("full", quarter), ("dup", quarter), ("null", None)]
+    images = _one_img_rows(spark, rows + [("dup", quarter)])
+
+    def bag(df):
+        return Counter((r.image_id, r.cad_number, r["rank"], r.dist) for r in df.collect())
+
+    for k in (3, len(layer) + 2):
+        want = bag(knn_bruteforce(_one_img_rows(spark, rows), cen, b, k=k))
+        want.update({key: n for key, n in want.items() if key[0] == "dup"})
+        grid = knn_grid(images, cen, b, k=k, res=9, disk=1, layer_fallback=True)
+        literal = knn_literal(images, layer, b, k=k)
+        for got in (bag(grid), bag(literal)):
+            assert got == want
+        n = min(k, len(layer))
+        assert sum(want.values()) == n * (len(rows) + 1)
+        ranked = sorted(want, key=lambda t: (t[0], t[2]))
+        assert [t[1] for t in ranked if t[0] == "tie"][:2] == ["a", "b"]
+        nulls = [t for t in ranked if t[0] == "null"]
+        assert [t[1] for t in nulls] == sorted(c for c, _, _ in layer)[:n]
+        assert all(t[3] is None for t in nulls)

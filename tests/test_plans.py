@@ -132,16 +132,23 @@ def test_knn_grid_fallback_single_scan_no_shuffle(spark, sf_dir):
     """The <k-candidates whole-layer fallback must NOT rescan the image
     side (a covered/frontier union would scan it twice — the bug class
     this pins) and must add no Exchange on the big side: one parquet
-    scan of lineitem, broadcast joins only."""
+    scan of lineitem, one Arrow top-k stage, and no Exchange other than
+    the gate query's dropDuplicates on the lineitem keys."""
     from rosreestr_xml_to_gis_converter_spark.queries_engine import knn_parcels
 
     df = knn_parcels(spark, sf_dir)
     pc = plan_checks(df, execute=True)
-    assert pc.python_stages() == 0
+    # every image row is ranked in exactly one Python (Arrow) stage
+    assert pc.python_stages() == 1
     # exactly ONE scan of the image-side parquet (lineitem)
     assert pc.final.count("Scan parquet") - pc.final.count("Scan parquet spark_catalog") <= 2
     assert pc.final.lower().count("lineitem") <= 2  # scan + its reuse marker at most
-    # the big side never shuffles: every Exchange in the plan belongs to
-    # the (tiny) centroid-side aggregations or the gate's dropDuplicates
-    # -- assert the join itself is broadcast
-    assert pc.has_broadcast_join()
+    # the big side never shuffles: the only Exchange in the plan is the
+    # dropDuplicates on (l_orderkey, l_linenumber) in knn_parcels — a
+    # rescan (its own or a Reused Exchange) or any repartition of the
+    # image rows adds another
+    exchanges = [ln.strip() for ln in pc.final.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith(
+        "+- Exchange hashpartitioning(l_orderkey#"
+    ) and ", l_linenumber#" in exchanges[0], exchanges

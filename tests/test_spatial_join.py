@@ -54,8 +54,15 @@ def test_join_matches_brute_force_general_polygons(spark, seed, n_img, n_parcels
         (r.image_id, r.cad_number, r.cell)
         for r in spatial_join(images, cover, TESTDATA_BOX).collect()
     }
+    # the shuffled path (geometry on the rows, per-batch edge table)
+    # refines with the same kernel and must agree exactly
+    shuffled = {
+        (r.image_id, r.cad_number, r.cell)
+        for r in spatial_join(images, cover, TESTDATA_BOX, broadcast_cover=False).collect()
+    }
     want = brute_force_join(pdf, parcels, TESTDATA_BOX)
     assert got == want
+    assert shuffled == want
     assert len(want) > 0  # fixture sanity: some images actually fall inside
 
 
