@@ -259,16 +259,6 @@ def segments_intersect_rect(
     return hit
 
 
-def rings_bbox(rings: Sequence[np.ndarray]) -> tuple[float, float, float, float]:
-    allpts = np.concatenate([np.asarray(r, dtype=np.float64) for r in rings], axis=0)
-    return (
-        float(allpts[:, 0].min()),
-        float(allpts[:, 1].min()),
-        float(allpts[:, 0].max()),
-        float(allpts[:, 1].max()),
-    )
-
-
 def polygon_centroid(rings: Sequence[np.ndarray]) -> tuple[float, float]:
     """Area-weighted centroid of a multi-ring polygon (holes subtract via
     signed areas; falls back to vertex mean for zero-area rings)."""

@@ -8,7 +8,6 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     cell_to_bounds,
     cell_to_center,
     grid_disk,
-    grid_disk_offsets,
     latlng_to_cell,
     polygon_to_cells,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "cell_to_bounds",
     "cell_to_center",
     "grid_disk",
-    "grid_disk_offsets",
     "latlng_to_cell",
     "polygon_to_cells",
 ]

@@ -121,10 +121,44 @@ def grid_disk(cell: int, k: int) -> np.ndarray:
     return cell_id(nx[ok], ny[ok], res)
 
 
-def grid_disk_offsets(k: int) -> list[tuple[int, int]]:
-    """(dx, dy) offsets of the k-disk — literal array for the Column-side
-    explode-based candidate expansion (JVM-side, no UDF)."""
-    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
+# ---------------------------------------------------------------------------
+# Per-cell entry lists (CSR), shared by the point-side join and kNN: built
+# on the driver, broadcast, looked up and expanded in numpy on the workers
+# ---------------------------------------------------------------------------
+
+def cell_lists(cells: np.ndarray, *cols: np.ndarray) -> tuple[np.ndarray, np.ndarray, list]:
+    """Group entries by cell: ``(keys, offsets, cols)``, where cell
+    ``keys[i]`` (ascending) owns ``col[offsets[i]:offsets[i + 1]]`` of each
+    returned col, ordered by ``cols[0]``.  A trailing int64-max key with an
+    empty list keeps every ``searchsorted`` position valid."""
+    o = np.lexsort((cols[0], cells))
+    keys, first = np.unique(np.asarray(cells, dtype=np.int64)[o], return_index=True)
+    offsets = np.concatenate([first, [len(o)] * 2])
+    return np.append(keys, np.iinfo(np.int64).max), offsets, [c[o] for c in cols]
+
+
+def cell_list_spans(keys: np.ndarray, offsets: np.ndarray, cell: np.ndarray) -> tuple:
+    """``(start, count)`` of each query cell's list in a :func:`cell_lists`
+    index; count 0 for a cell without one (or -1, the null stand-in)."""
+    pos = np.searchsorted(keys, cell)
+    start = offsets[pos]
+    return start, np.where(keys[pos] == cell, offsets[pos + 1] - start, 0)
+
+
+def expand_spans(start: np.ndarray, count: np.ndarray, max_pairs: int):
+    """Yield ``(row, local, start[row] + local)`` for every ``local <
+    count[row]``, rows in order, in passes of about ``max_pairs`` pairs
+    (one row's span is never split)."""
+    ends = np.cumsum(count)
+    a = 0
+    while a < len(count):
+        done = ends[a - 1] if a else 0
+        b = max(a + 1, int(np.searchsorted(ends, done + max_pairs, side="right")))
+        c = count[a:b]
+        row = np.repeat(np.arange(a, b), c)
+        local = np.arange(len(row)) - np.repeat(ends[a:b] - c - done, c)
+        yield row, local, np.repeat(start[a:b], c) + local
+        a = b
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Engine operators.
 
-``spatial_join``  cell-encode -> cover equi-join -> exact PIP refine
+``spatial_join``  cell-encode -> broadcast per-cell cover index -> exact PIP refine
 ``knn``           grid-disk candidate expansion -> ranked distance window
 ``tiling``        raster<->vector: per-cell parcel masks
 ``attrs``         reference-semantics relational operators (SURVEY.md §2.1)

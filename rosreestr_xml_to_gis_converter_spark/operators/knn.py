@@ -42,9 +42,15 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     cell_col,
     cell_id,
     cell_ij,
+    cell_list_spans,
+    cell_lists,
+    expand_spans,
     latlng_to_cell,
 )
-from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import with_geotag
+from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import (
+    _PAIRS_PER_PASS,
+    with_geotag,
+)
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
 
 
@@ -355,22 +361,18 @@ def _knn_ladder(
 
 _OUT_SCHEMA = "image_id string, cad_number string, rank int, dist double"
 
-# candidate pairs ranked per numpy pass: bounds the top-k temporaries
-# when many rows of a batch rank a large whole layer
-_PAIRS_PER_PASS = 1 << 20
-
 
 def _layer_table(layer, res: int | None, disk: int) -> tuple:
     """Driver side of the numpy top-k: the layer ordered by ``cad_number``
     (row ``i`` has rank ``_ord = i``) and its per-cell candidate lists.
 
-    Returns ``(clon, clat, cnull, cads, keys, offsets, pool)``.  Cell
-    ``keys[i]`` holds the ``_ord`` of every centroid within Chebyshev
-    ``disk`` of it, ascending, in ``pool[offsets[i]:offsets[i + 1]]`` —
-    the numpy twin of :func:`_cen_cells`, with ``latlng_to_cell``
-    bit-identical to ``cell_col``.  ``pool[offsets[-1]:]`` is the whole
-    layer.  A trailing int64-max key with an empty list makes every
-    ``searchsorted`` position valid.  ``res=None`` builds no cell lists.
+    Returns ``(clon, clat, cnull, cads, keys, offsets, pool)``, a
+    :func:`cell_lists` index: cell ``keys[i]`` holds the ``_ord`` of every
+    centroid within Chebyshev ``disk`` of it, ascending, in
+    ``pool[offsets[i]:offsets[i + 1]]`` — the numpy twin of
+    :func:`_cen_cells`, with ``latlng_to_cell`` bit-identical to
+    ``cell_col``.  ``pool[offsets[-1]:]`` is the whole layer.
+    ``res=None`` builds no cell lists.
     """
     import pyarrow.compute as pc
 
@@ -381,9 +383,7 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
     clat = layer.column("clat").to_numpy()
     # a null coordinate gives a null dist, which Spark orders first
     cnull = np.isnan(clon) | np.isnan(clat)
-    keys = np.empty(0, dtype=np.int64)
-    cand = np.empty(0, dtype=np.int64)
-    first = np.empty(0, dtype=np.int64)
+    cells = cand = np.empty(0, dtype=np.int64)
     if res is not None:
         ords = np.flatnonzero(~cnull)
         ix, iy = cell_ij(latlng_to_cell(clat[ords], clon[ords], res))
@@ -393,11 +393,7 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
         ok = (nx >= 0) & (nx < 1 << res) & (ny >= 0) & (ny < 1 << res)
         cells = cell_id(nx[ok], ny[ok], res)
         cand = np.broadcast_to(ords[:, None], ok.shape)[ok]
-        o = np.lexsort((cand, cells))
-        keys, first = np.unique(cells[o], return_index=True)
-        cand = cand[o]
-    keys = np.append(keys, np.iinfo(np.int64).max)
-    offsets = np.concatenate([first, [len(cand)] * 2])
+    keys, offsets, (cand,) = cell_lists(cells, cand)
     pool = np.concatenate([cand, np.arange(len(clon))])
     cads = layer.column("cad_number").combine_chunks()
     return clon, clat, cnull, cads, keys, offsets, pool
@@ -405,9 +401,10 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
 
 def _topk_batches(layer_bc, k: int):
     """Worker side: per Arrow batch of ``(image_id, lon, lat, cell)``,
-    look each row's cell up in the broadcast lists (``searchsorted``),
-    expand the ragged candidate lists, compute the distances, sort with
-    ``lexsort((_ord, dist, row))`` and keep the first k per row."""
+    look each row's cell up in the broadcast lists (``cell_list_spans``),
+    expand the ragged candidate lists (``expand_spans``), compute the
+    distances, sort with ``lexsort((_ord, dist, row))`` and keep the
+    first k per row."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -419,21 +416,12 @@ def _topk_batches(layer_bc, k: int):
             lon = lon.to_numpy(zero_copy_only=False)
             lat = lat.to_numpy(zero_copy_only=False)
             cell = pc.fill_null(batch.column("cell"), -1).to_numpy()
-            pos = np.searchsorted(keys, cell)
-            start = offsets[pos]
-            cnt = np.where(keys[pos] == cell, offsets[pos + 1] - start, 0)
+            start, cnt = cell_list_spans(keys, offsets, cell)
             short = cnt < k
             start = np.where(short, offsets[-1], start)
             cnt = np.where(short, len(clon), cnt)
-            ends = np.cumsum(cnt)
-            a = 0
-            while a < len(cnt):
-                done = ends[a - 1] if a else 0
-                b = max(a + 1, int(np.searchsorted(ends, done + _PAIRS_PER_PASS, side="right")))
-                c = cnt[a:b]
-                row = np.repeat(np.arange(a, b), c)
-                local = np.arange(len(row)) - np.repeat(ends[a:b] - c - done, c)
-                ords = pool[np.repeat(start[a:b], c) + local]
+            for row, local, idx in expand_spans(start, cnt, _PAIRS_PER_PASS):
+                ords = pool[idx]
                 dx = lon[row] - clon[ords]
                 dy = lat[row] - clat[ords]
                 dist = np.sqrt(dx * dx + dy * dy)
@@ -442,17 +430,16 @@ def _topk_batches(layer_bc, k: int):
                 # rows stay contiguous and in place under the sort (row is
                 # its primary key), so ``local`` is each sorted pair's rank
                 sel = local < k
-                idx = o[sel]
+                top = o[sel]
                 yield pa.RecordBatch.from_arrays(
                     [
-                        batch.column("image_id").take(row[idx]),
-                        cads.take(ords[idx]),
+                        batch.column("image_id").take(row[top]),
+                        cads.take(ords[top]),
                         pa.array(local[sel] + 1, pa.int32()),
-                        pa.array(dist[idx], mask=dnull[idx]),
+                        pa.array(dist[top], mask=dnull[top]),
                     ],
                     names=["image_id", "cad_number", "rank", "dist"],
                 )
-                a = b
 
     return topk
 

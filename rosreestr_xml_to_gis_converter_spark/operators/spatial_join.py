@@ -2,40 +2,35 @@
 
 Generalizes the reference's geometry-attributes denormalization join
 (/root/reference/main.py:379-412 repeats the full attribute record per
-contour) to web scale:
+contour) to web scale, as a point-side broadcast join:
 
     images (10^12 rows, input_hint shape)
-      |  derive (lon, lat) from phash          -- pure Column arithmetic
-      |  cell-encode at res R                  -- pure Column arithmetic
-      |  equi-join on cell with parcel cover   -- Catalyst BHJ/SMJ (+AQE)
-      |  full-cell fast path: cell entirely inside polygon -> emit
-      |  boundary cells: exact point-in-polygon -- one numpy edge-table
-      |                                             kernel per Arrow batch
+      |  derive (lon, lat) from phash, cell-encode  -- Column arithmetic
+      |  one mapInArrow stage, each image row crossing once:
+      |    look its cell up in the broadcast cover index (PreparedCover)
+      |    full entries (cell inside the polygon) -> emit
+      |    boundary entries -> numpy edge-table point-in-polygon test
       v
     (image_id, cad_number, cell)
 
 Scale properties:
-* The big side is touched only by codegen'd expressions until after the
-  join has already cut it down to candidates; Python sees only boundary
-  candidates, in Arrow batches.
-* Boundary geometry reaches the workers once, as a broadcast flat edge
-  table (``PreparedCover``); a layer too large for that rides the join
-  rows as a packed binary column (WKB-analog) instead.  Either way it
-  exists only for boundary cover cells — the full-cell fast path (the
-  bulk of a large parcel's area) never moves geometry or enters Python.
-* The refine runs one vectorized point-in-polygon call per Arrow batch,
-  each row against its own parcel's edges: its cost is linear in the
-  boundary rows and their polygons' edge counts, whatever the number of
-  distinct parcels in the batch.
-* A coarse parent-cell column (``cell_parent_col``) is the intended
-  storage partition key — the equi-join then prunes file groups from
-  parquet/Iceberg stats without any custom planner rule.
-* Skew (hot cadastral quarters): AQE skew-join is on by default; an
-  explicit salting path is provided for the pathological case.
+* The image side is scanned once and never shuffled (bar the size-gated
+  spread of a starved scan).  Candidate (image, parcel) pairs exist only
+  as numpy index arrays inside the Arrow stage, a bounded number per pass.
+* The parcel layer reaches the workers once, as one broadcast table: its
+  sorted ``cad_number``s, a CSR index from cover cell to ``(parcel
+  ordinal, full)`` entries and the boundary edge table.  A size guard
+  bounds it; a larger layer takes the shuffled path.
+* The shuffled path (``broadcast_cover=False``) is a Catalyst equi-join on
+  ``cell`` with AQE skew handling and optional salting; only boundary rows
+  enter Python, carrying their packed geometry (WKB-analog).  A coarse
+  parent-cell column (``cell_parent_col``) is its intended storage
+  partition key, so parquet/Iceberg stats prune the equi-join.
 """
 
 from __future__ import annotations
 
+import warnings
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -49,7 +44,13 @@ from rosreestr_xml_to_gis_converter_spark.functions.geometry import (
     points_in_polygons,
     unpack_rings,
 )
-from rosreestr_xml_to_gis_converter_spark.index.grid import cell_col, polygon_to_cells
+from rosreestr_xml_to_gis_converter_spark.index.grid import (
+    cell_col,
+    cell_list_spans,
+    cell_lists,
+    expand_spans,
+    polygon_to_cells,
+)
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
 
 COVER_SCHEMA = "cell long, cad_number string, full boolean, geom binary"
@@ -95,79 +96,90 @@ def build_parcel_cover(
     return cov.withMetadata("cell", {"res": res})
 
 
-# Boundary-geometry volume above which the cover is NOT pinned on the
-# workers: the broadcast dict passes through driver memory, so an unguarded
-# 10^7-parcel layer would OOM the driver.  256 MB is comfortably inside a
-# default driver heap while covering any dimension-sized parcel layer.
+# Bytes above which the cover is NOT pinned on the workers: the broadcast
+# table passes through driver memory, so an unguarded 10^7-parcel layer
+# would OOM the driver.  256 MB is comfortably inside a default driver
+# heap while covering any dimension-sized parcel layer.
 BROADCAST_COVER_MAX_BYTES = 256 << 20
+
+# most broadcast bytes one cover row adds besides its cad_number: cell key
+# and offset (16), ordinal and full flag (5), edge start and string offset (12)
+_INDEX_ROW_BYTES = 33
 
 
 class CoverTooLargeError(ValueError):
     pass
 
 
-def _boundary_geom_bytes(cover: DataFrame, max_bytes: int) -> int:
-    """Distinct boundary-geometry bytes, measured BEFORE any driver-side
-    collect so oversized layers never reach the driver.  Two-tier to
-    keep the common case cheap:
-
-    1. shuffle-free upper bound: sum of geometry lengths over ALL
-       boundary rows (each parcel counted once per boundary cell — an
-       overcount, i.e. safe).  Under the limit -> broadcast, zero extra
-       shuffle paid.
-    2. only when the bound trips: the exact per-parcel distinct sum
-       (one shuffle) decides.
-    """
-    boundary = cover.filter(~F.col("full"))
-    upper = boundary.agg(
-        F.coalesce(F.sum(F.length("geom")), F.lit(0)).alias("total")
-    ).first()["total"]
-    if int(upper) <= max_bytes:
-        return int(upper)
-    row = (
-        boundary.select("cad_number", F.length("geom").alias("nb"))
+def _broadcast_bytes(cover: DataFrame, max_bytes: int) -> int:
+    """Upper bound on what :class:`PreparedCover` broadcasts, measured
+    BEFORE any driver-side collect: every cover row's index entry and
+    ``cad_number``, plus each distinct boundary geometry's edge table (at
+    most twice its packed bytes: 32 per edge, 16 per vertex).  The
+    shuffle-free first tier counts geometry once per boundary cell (an
+    overcount); only when that trips does the exact per-parcel distinct
+    sum (one shuffle) decide."""
+    row = cover.agg(
+        F.count(F.lit(1)) * _INDEX_ROW_BYTES
+        + F.coalesce(F.sum(F.length("cad_number")), F.lit(0)),
+        F.coalesce(F.sum(F.length("geom")), F.lit(0)),
+    ).first()
+    index, total = int(row[0]), int(row[0]) + 2 * int(row[1])
+    if total <= max_bytes:
+        return total
+    geom = (
+        cover.filter(~F.col("full"))
+        .select("cad_number", F.length("geom").alias("nb"))
         .distinct()
         .agg(F.coalesce(F.sum("nb"), F.lit(0)).alias("total"))
-        .first()
+        .first()["total"]
     )
-    return int(row["total"])
+    return index + 2 * int(geom)
 
 
 class PreparedCover:
-    """Build-once join state for a parcel cover: the slim broadcastable
-    cover relation plus the boundary geometry as one flat edge table,
-    built on the driver and broadcast once as ``geom_bc`` — a
-    ``(pks, edges, starts)`` tuple where polygon ``j`` (edge columns
-    ``starts[j]:starts[j + 1]``, see ``geometry.edge_table``) belongs to
-    the parcel whose ``xxhash64(cad_number)`` is ``pks[j]``, and ``pks``
-    is sorted.  Every later join against this layer reuses it.
+    """Build-once join state for one parcel cover: one table built on the
+    driver and broadcast once as ``geom_bc``, reused by every join against
+    the layer.  ``geom_bc.value`` is ``(cads, keys, offsets, ords, full,
+    edges, starts)``: the distinct ``cad_number``s, sorted, as an Arrow
+    string array (a parcel's ordinal is its position); a ``cell_lists``
+    index with one ``(ords, full)`` entry per cover row; and the boundary
+    geometry as one ``edge_table`` whose polygon ``j`` is parcel ``j``.
 
-    Raises :class:`CoverTooLargeError` when the distinct boundary geometry
-    exceeds ``max_bytes`` — callers (``spatial_join``) fall back to the
-    shuffled geometry-on-rows path instead of OOMing the driver.
+    Raises :class:`CoverTooLargeError` when the table would exceed
+    ``max_bytes`` (``spatial_join`` then falls back to the shuffled path),
+    and ``ValueError`` when a ``cad_number`` has two boundary geometries.
     """
 
     def __init__(self, cover: DataFrame, max_bytes: int = BROADCAST_COVER_MAX_BYTES):
-        spark = cover.sparkSession
+        import pyarrow.compute as pc
+
         self.res = _cover_res(cover)
-        total = _boundary_geom_bytes(cover, max_bytes)
+        total = _broadcast_bytes(cover, max_bytes)
         if total > max_bytes:
             raise CoverTooLargeError(
-                f"boundary geometry is {total} bytes > max_bytes={max_bytes}; "
-                "use spatial_join(..., broadcast_cover=False) (shuffled path) "
-                "or raise max_bytes explicitly"
+                f"cover index and boundary geometry are {total} bytes > "
+                f"max_bytes={max_bytes}; use spatial_join(..., broadcast_cover=False) "
+                "(shuffled path) or raise max_bytes explicitly"
             )
-        geom_rows = sorted(
-            cover.filter(~F.col("full"))
-            .select(F.xxhash64("cad_number").alias("pk"), "geom")
-            .distinct()
-            .collect(),
-            key=lambda r: r.pk,
+        rows = cover.select("cell", "cad_number", "full").toArrow()
+        geoms = cover.filter(~F.col("full")).select("cad_number", "geom").distinct().toArrow()
+        cads = pc.unique(rows.column("cad_number"))
+        cads = cads.take(pc.sort_indices(cads))
+        gords = pc.index_in(geoms.column("cad_number"), value_set=cads).to_numpy()
+        if len(np.unique(gords)) < len(gords):
+            raise ValueError("cover holds more than one boundary geometry for a cad_number")
+        polygons: list[list[np.ndarray]] = [[] for _ in range(len(cads))]
+        for j, g in zip(gords.tolist(), geoms.column("geom").to_pylist()):
+            polygons[j] = unpack_rings(g)
+        keys, offsets, (ords, full) = cell_lists(
+            rows.column("cell").to_numpy(),
+            pc.index_in(rows.column("cad_number"), value_set=cads).to_numpy(),
+            rows.column("full").to_numpy(),
         )
-        pks = np.array([r.pk for r in geom_rows], dtype=np.int64)
-        edges, starts = edge_table([unpack_rings(r.geom) for r in geom_rows])
-        self.geom_bc = spark.sparkContext.broadcast((pks, edges, starts))
-        self.slim = cover.select("cell", "cad_number", "full")
+        self.geom_bc = cover.sparkSession.sparkContext.broadcast(
+            (cads, keys, offsets, ords, full, *edge_table(polygons))
+        )
 
 
 def prepare_cover(cover: DataFrame, max_bytes: int = BROADCAST_COVER_MAX_BYTES) -> PreparedCover:
@@ -181,7 +193,40 @@ def with_geotag(images: DataFrame, box: GeoBox) -> DataFrame:
     )
 
 
-_REFINE_SCHEMA = "image_id string, cad_number string, cell long"
+_JOIN_SCHEMA = "image_id string, cad_number string, cell long"
+
+# candidate pairs expanded per numpy pass (point-side join and kNN top-k):
+# bounds the temporaries when a batch's rows have long candidate lists
+_PAIRS_PER_PASS = 1 << 20
+
+
+def _point_join_batches(cover_bc, max_pairs: int):
+    """Worker side of the point-side join, per Arrow batch of ``(image_id,
+    lon, lat, cell)``: expand each row's cell entries, about ``max_pairs``
+    per pass; keep full entries and test boundary ones with one
+    :func:`points_in_polygons` call.  A null cell matches nothing, as in
+    the equi-join; strings stay Arrow buffers (``take``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def join(batches):
+        cads, keys, offsets, ords, full, edges, starts = cover_bc.value
+        for batch in batches:
+            cell = batch.column("cell")
+            start, cnt = cell_list_spans(keys, offsets, pc.fill_null(cell, -1).to_numpy())
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            for row, _, idx in expand_spans(start, cnt, max_pairs):
+                ord_, keep = ords[idx], full[idx]
+                bnd = np.flatnonzero(~keep)
+                keep[bnd] = points_in_polygons(lon[row[bnd]], lat[row[bnd]], ord_[bnd], edges, starts)
+                row = row[keep]
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("image_id").take(row), cads.take(ord_[keep]), cell.take(row)],
+                    names=["image_id", "cad_number", "cell"],
+                )
+
+    return join
 
 
 def _refine_batches(batches):
@@ -213,37 +258,6 @@ def _refine_batches(batches):
         yield batch.select(["image_id", "cad_number", "cell"]).filter(pa.array(keep))
 
 
-def _refine_arrow_broadcast(geom_bc):
-    """Exact PIP for the broadcast path.
-
-    Boundary rows carry no geometry, only ``pk`` (xxhash64 of cad_number,
-    computed JVM-side): a ``searchsorted`` into the broadcast table's
-    sorted ``pks`` gives each row its polygon, and one
-    :func:`points_in_polygons` call tests the whole batch.  ``mapInArrow``
-    keeps the string columns (image_id, cad_number) as Arrow buffers that
-    are filtered natively; only lon/lat/pk are touched, zero-copy to
-    numpy.
-    """
-    import pyarrow as pa
-
-    def refine(batches):
-        pks, edges, starts = geom_bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            pk = batch.column("pk").to_numpy(zero_copy_only=False)
-            keep = points_in_polygons(
-                batch.column("lon").to_numpy(zero_copy_only=False),
-                batch.column("lat").to_numpy(zero_copy_only=False),
-                np.searchsorted(pks, pk),
-                edges,
-                starts,
-            )
-            yield batch.select(["image_id", "cad_number", "cell"]).filter(pa.array(keep))
-
-    return refine
-
-
 def spatial_join(
     images: DataFrame,
     cover: DataFrame | PreparedCover,
@@ -252,77 +266,58 @@ def spatial_join(
     salt: int | None = None,
     broadcast_max_bytes: int = BROADCAST_COVER_MAX_BYTES,
 ) -> DataFrame:
-    """images x parcel-cover -> exact containment rows.
+    """images x parcel-cover -> ``(image_id, cad_number, cell)``, one row
+    per image row and cover row of its cell whose parcel contains it.
 
-    ``broadcast_cover=True`` for small/medium parcel layers (the common
-    case: parcel layer << image table); otherwise a shuffled equi-join on
-    ``cell`` with AQE skew handling.  The broadcast path is size-guarded:
-    when the distinct boundary geometry exceeds ``broadcast_max_bytes``
-    the join falls back to the shuffled geometry-on-rows path instead of
-    collecting the layer through driver memory.  ``salt`` explicitly
-    replicates the cover side ``salt`` ways for pathological hot cells.
-    Pass a :class:`PreparedCover` to amortize the geometry broadcast
-    across many joins against the same layer.
+    ``broadcast_cover=True`` (parcel layer << image table) or a
+    :class:`PreparedCover`: the point-side join, each image row crossing
+    into one ``mapInArrow`` stage.  Pass a ``PreparedCover`` to amortize
+    its build across joins; one built here is size-guarded, and over
+    ``broadcast_max_bytes`` the join warns and takes the shuffled path.
+    There is no join to salt, so ``salt > 1`` raises ``ValueError``.
+
+    ``broadcast_cover=False``: a shuffled equi-join on ``cell`` with AQE
+    skew handling; ``salt`` replicates the cover side ``salt`` ways for
+    pathological hot cells.
     """
     prepared = isinstance(cover, PreparedCover)
+    salted = salt is not None and salt > 1
+    if salted and (broadcast_cover or prepared):
+        raise ValueError("salt applies only to the shuffled join: pass broadcast_cover=False")
     res = cover.res if prepared else _cover_res(cover)
-    # input-skew guard: a low-row-group parquet
-    # concentrates the whole scan on a handful of tasks, throttling the
-    # join+refine stage fused behind it; the size-gated hash repartition
-    # on image_id spreads it across all cores and is skipped for
-    # production-scale inputs (which have ample row groups already)
+    # input-skew guard: a low-row-group parquet concentrates the scan, and
+    # the join fused behind it, on a few tasks; the size-gated repartition
+    # on image_id spreads it (production-scale inputs are left alone)
     from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
 
     images = spread_input_by(images, "image_id")
     pts = with_geotag(images, box).withColumn(
         "cell", cell_col(F.col("lat"), F.col("lon"), res=res)
     )
-    use_arrow_refine = broadcast_cover or prepared
-    pc: PreparedCover | None = None
-    if use_arrow_refine and not prepared:
+    pc = cover if prepared else None
+    if broadcast_cover and not prepared:
         try:
             pc = PreparedCover(cover, max_bytes=broadcast_max_bytes)
         except CoverTooLargeError as exc:
-            import warnings
-
             warnings.warn(f"spatial_join: {exc}; falling back to shuffled join")
-            use_arrow_refine = False
-    if use_arrow_refine:
-        # geometry goes to workers ONCE as the broadcast edge table keyed
-        # by xxhash64(cad_number); the join and the Arrow hop ship only
-        # slim (cell, cad, full) rows
-        if prepared:
-            pc = cover
-        geom_bc = pc.geom_bc
-        cov = F.broadcast(pc.slim)
-        boundary_cols = [
-            "image_id",
-            "cad_number",
-            "cell",
-            F.xxhash64("cad_number").alias("pk"),
-            "lon",
-            "lat",
-        ]
-    else:
-        cov = cover
-        boundary_cols = ["image_id", "cad_number", "cell", "geom", "lon", "lat"]
-    if salt is not None and salt > 1:
+    if pc is not None:
+        return pts.select("image_id", "lon", "lat", "cell").mapInArrow(
+            _point_join_batches(pc.geom_bc, _PAIRS_PER_PASS), schema=_JOIN_SCHEMA
+        )
+    cov = cover
+    if salted:
         pts = pts.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
         cov = cov.withColumn("_salt", F.explode(F.array([F.lit(i) for i in range(salt)])))
         joined = pts.join(cov, ["cell", "_salt"], "inner").drop("_salt")
     else:
         joined = pts.join(cov, "cell", "inner")
     # full-interior cells are already exact matches: emit them on the pure
-    # relational path — only boundary candidates pay the Python/Arrow hop
-    # (for a large parcel the interior dominates, so at scale the Arrow
-    # stage sees a small perimeter-proportional fraction of candidates)
+    # relational path — only boundary candidates pay the Arrow hop
     full_rows = joined.filter(F.col("full")).select("image_id", "cad_number", "cell")
-    boundary = joined.filter(~F.col("full")).select(*boundary_cols)
-    if use_arrow_refine:
-        refined = boundary.mapInArrow(_refine_arrow_broadcast(geom_bc), schema=_REFINE_SCHEMA)
-    else:
-        refined = boundary.mapInArrow(_refine_batches, schema=_REFINE_SCHEMA)
-    return full_rows.unionByName(refined)
+    boundary = joined.filter(~F.col("full")).select(
+        "image_id", "cad_number", "cell", "geom", "lon", "lat"
+    )
+    return full_rows.unionByName(boundary.mapInArrow(_refine_batches, schema=_JOIN_SCHEMA))
 
 
 def _cover_res(cover: DataFrame) -> int:

@@ -138,19 +138,15 @@ FROM pts GROUP BY 2
 
 # --- flagship: spatial join --------------------------------------------------
 
-# PreparedCover amortizes the broadcast-size guard + geometry broadcast
-# across every join against the same parcel layer (round-2 VERDICT: the
-# per-call guard aggregation was pure overhead on the headline query).
-# Keyed by Spark application id so a fresh session rebuilds its own
-# broadcast instead of reusing a stopped context's.
+# One PreparedCover per parcel layer: its size guard, collect and broadcast
+# are paid once, not per join.  Keyed by Spark application id so a fresh
+# session builds its own broadcast instead of reusing a stopped context's.
 _PREPARED: dict[tuple[str, int], PreparedCover] = {}
 
 
 def testdata_prepared_cover(spark: SparkSession, res: int = JOIN_RES) -> PreparedCover:
     app_id = spark.sparkContext.applicationId
-    # evict entries built under a previous (stopped) SparkContext so the
-    # process-lifetime dict can't accumulate stale broadcast handles
-    # (round-3 ADVICE)
+    # evict entries of stopped SparkContexts: their broadcasts are dead
     for k in [k for k in _PREPARED if k[0] != app_id]:
         del _PREPARED[k]
     key = (app_id, res)
@@ -189,7 +185,7 @@ def flagship_spatial_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def flagship_spatial_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same join via the non-broadcast shuffled path (huge parcel layers):
-    geometry rides the join rows, pandas refine — same oracle."""
+    geometry rides the join rows into the Arrow refine — same oracle."""
     img = images_from_lineitem(spark, sf_dir)
     cover = build_parcel_cover(spark, testdata_parcels_rings(), JOIN_RES)
     return spatial_join(img, cover, TESTDATA_BOX, broadcast_cover=False)
