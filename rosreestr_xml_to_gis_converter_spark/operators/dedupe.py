@@ -5,7 +5,10 @@ banding, and verification are Column expressions / higher-order array
 functions — no Python UDFs, so these run at full codegen speed over
 10^12-row corpora.  The LSH self-joins are equi-joins on (band, hash)
 buckets, which Catalyst shuffles on the bucket key (the standard
-MinHash-LSH dedup shape used by web-scale corpus pipelines).
+MinHash-LSH dedup shape used by web-scale corpus pipelines).  No
+operator caches, so a call leaves no persisted relation behind in a
+long-lived session; where a self-join would compute its input twice,
+both sides read one reused shuffle exchange instead.
 """
 
 from __future__ import annotations
@@ -146,9 +149,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All-pairs n-gram Jaccard (exact, quadratic) — the small-N oracle
     baseline; MinHash-LSH below is the scale path with the same verify."""
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    ).cache()  # both self-join sides reuse the shingled relation
+    sh = df.select(F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     return (
@@ -192,15 +193,13 @@ def minhash_lsh_pairs(
             word_shingles(F.col(text_col), k).alias("sh"),
         )
         .filter(F.size("sh") > 0)
-        .cache()
     )
     sig = sh.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
-    # SLIM band rows (round-6 optimization, guide §2.3/§8): the bucket
-    # self-join carries only (id, band, bucket) — the earlier realization
-    # shipped every doc's full shingle array `bands`x through the join's
-    # build side (~1 KB/row at 8 copies per doc), which dominated the
-    # query; shingles are re-attached below to the (tiny) surviving
-    # candidate-pair set only.
+    # SLIM band rows (guide §2.3/§8): the bucket self-join carries only
+    # (id, band, bucket) — shipping every doc's full shingle array
+    # `bands`x through the join's build side (~1 KB/row at 8 copies per
+    # doc) would dominate the query; shingles are re-attached below to
+    # the (tiny) surviving candidate-pair set only.
     banded = sig.select(
         "id",
         F.explode(
@@ -216,11 +215,10 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket").cache()
-    # caches: the bucket self-join would otherwise recompute the full
-    # shingle->minhash->band pipeline for BOTH sides, and the verify
-    # joins would re-shingle (at scale: persist the signature table once,
-    # join from there)
+    ).select("id", "bb.band", "bb.bucket").repartition("band", "bucket")
+    # one exchange on the bucket key: both self-join sides read it (Spark
+    # reuses it), so the minhash runs once per call, and the shuffled
+    # join at scale needs exactly this partitioning anyway
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -236,10 +234,9 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    # re-attach shingles to candidates only; AQE turns these into
-    # broadcast joins of the candidate side at realistic duplicate rates
-    # (candidates << corpus), so the cached shingle relation is streamed,
-    # never shuffled
+    # re-attach shingles to the candidate pairs only (candidates <<
+    # corpus at realistic duplicate rates); both lookups read one
+    # shingle relation, broadcast while it fits
     cand = cand.join(
         sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
     ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -493,7 +490,7 @@ def hamming_near_pairs(
     never all-pairs — the same 10^12-row shape as the MinHash/SimHash
     paths.  Remainder bits are distributed so no bit is dropped.
 
-    ``chunks_per_band`` (round 5) is the SCALE knob the single-chunk
+    ``chunks_per_band`` is the SCALE knob the single-chunk
     layout lacks: with n_bands = max_hamming + 1 the band keys are only
     ~n_bits/(r+1) bits wide (13 for a 64-bit pHash at r=4), so on a
     near-uniform corpus the bucket join goes quadratic past ~10^6 rows
@@ -616,9 +613,9 @@ def connected_components(
             .limit(1)
             .count()
         )
-        # release the superseded round's checkpointed blocks (round-5
-        # ADVICE): without this every iteration pins another full labels
-        # RDD in executor storage for the rest of the run
+        # release the superseded round's checkpointed blocks: without
+        # this every iteration pins another full labels RDD in executor
+        # storage for the rest of the run
         _unpersist_checkpoint(labels)
         labels = new
         if changed == 0:

@@ -31,8 +31,10 @@ def get_spark(
     ``cores`` drives both master parallelism and shuffle partitions so the
     same job can be benchmarked at two parallelism levels (the sandbox
     proxy for the N vs 4N executor scaling criterion in BASELINE.json).
+    It defaults to ``SPARK_GRAFT_CPUS``, else to the cores this process
+    may run on.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -10,6 +10,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from rosreestr_xml_to_gis_converter_spark.operators.dedupe import (
@@ -536,3 +537,225 @@ def test_with_rights_strings_rejects_temp_collisions(spark):
     )
     with _pytest.raises(ValueError, match="_w_"):
         with_rights_strings(df)
+
+
+# --- numpy sign-LSH kernel against the Column forms ---------------------------
+# Reference: the Column signature and quantized cosine the kernel replaced.
+
+
+def _col_quantized(v):
+    return F.transform(v, lambda x: F.round(x.cast("double") * F.lit(1000.0)))
+
+
+def _col_dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, t: acc + t
+    )
+
+
+def _col_signature(vec, planes):
+    sig = F.lit(0).cast("long")
+    for i, p in enumerate(planes):
+        proj = F.aggregate(
+            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in p]), lambda x, y: x.cast("double") * y),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+        sig = sig + F.when(proj > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
+    return sig
+
+
+def _edge_frame(spark, seed=17, dim=8):
+    """Seeded vectors plus every irregular case the kernel must treat as
+    the Column forms do."""
+    rng = np.random.default_rng(seed)
+    inf, nan = float("inf"), float("nan")
+    rows = [rng.standard_normal(dim).astype(np.float32).tolist() for _ in range(12)]
+    rows += [
+        None,  # null vector
+        [0.1, None, 0.2, 0.3, 0.1, 0.2, 0.3, 0.4],  # null element
+        [0.3, -0.2, 0.5],  # two wrong-length rows of the same length ...
+        [0.1, 0.7, -0.4],
+        [0.2, 0.1, -0.3, 0.4, 0.5],  # ... and one of another length
+        [nan, 0.1, -0.2, 0.3, 0.4, -0.5, 0.6, 0.7],
+        [inf, 0.1, -0.2, 0.3, 0.4, -0.5, 0.6, 0.7],
+        [-inf, inf, 0.2, 0.3, 0.4, -0.5, 0.6, 0.7],
+        # x * 1000 lands exactly on .5: HALF_UP, not half-to-even
+        [0.0625, -0.0625, 0.1875, -0.1875, 0.0625, 0.5, -0.5, 0.3125],
+        # negatives that round to 0.0, not -0.0
+        [-0.0003, 0.2, -0.0004, 0.3, -0.0001, 0.1, -0.0002, 0.4],
+        # products past 2^53: sums are inexact, so their order shows
+        [1e30, -1e30, 3e29, 0.5, -7e28, 1e30, 2.5, -1e29],
+        [3e29, 1e30, -1e30, 0.25, 1e30, -7e28, 1.5, 2e29],
+    ]
+    return spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<float>"
+    )
+
+
+def test_lsh_signature_kernel_matches_column_form(spark):
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import (
+        _planes,
+        _signatures,
+        _unpack,
+    )
+
+    df = _edge_frame(spark)
+    tables = [_planes(5 + t, 12, 8) for t in range(3)]
+    want = df.select(
+        "vec_id", *[_col_signature(F.col("embedding"), p).alias(f"s{t}") for t, p in enumerate(tables)]
+    ).orderBy("vec_id").toPandas()
+    col = df.orderBy("vec_id").toArrow().column("embedding").combine_chunks()
+    with np.errstate(all="ignore"):
+        got = _signatures(_unpack(col), 8, tables)
+    assert got.tolist() == want[["s0", "s1", "s2"]].to_numpy().tolist()
+    assert got[12:15].tolist() == [[0, 0, 0]] * 3  # null / null element / short
+    assert (got[17] != 0).all()  # a NaN projection counts as > 0, as in Spark
+
+
+def test_lsh_topk_cosines_match_column_form(spark):
+    """With one plane every query probes both buckets, so ``lsh_topk``
+    scores every pair: each cosine (null, NaN and inf included) and rank
+    must equal the Column cross-join's, bit for bit."""
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import lsh_topk
+
+    df = _edge_frame(spark)
+    n = df.count()
+    e = df.select(
+        F.col("vec_id").alias("cand_id"), _col_quantized(F.col("embedding")).alias("qv")
+    ).withColumn("qn", _col_dot(F.col("qv"), F.col("qv")))
+    q = df.select(
+        F.col("vec_id").alias("query_id"), _col_quantized(F.col("embedding")).alias("qqv")
+    ).withColumn("qqn", _col_dot(F.col("qqv"), F.col("qqv")))
+    cos = _col_dot(F.col("qv"), F.col("qqv")) / F.sqrt(F.col("qn") * F.col("qqn"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
+    want = (
+        e.crossJoin(q).filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", cos.alias("cosine"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .select("query_id", "cand_id", "rank", "cosine")
+    )
+    got = lsh_topk(df, df, k=n, n_planes=1, dim=8)
+
+    def rows(frame):
+        return sorted(
+            (r.query_id, r.cand_id, r.rank, None if r.cosine is None else r.cosine.hex())
+            for r in frame.collect()
+        )
+
+    ref = rows(want)
+    assert len(ref) == n * (n - 1)
+    assert rows(got) == ref
+    cos_of = {(qq, c): x for qq, c, _, x in ref}
+    assert cos_of[(14, 15)] is not None  # two short rows of one length: real cosine
+    assert cos_of[(14, 16)] is None and cos_of[(12, 0)] is None and cos_of[(13, 0)] is None
+
+
+def _brute_topk(ids, vecs, q_ids, q_vecs, k, n_planes, seed, n_tables):
+    """Multi-probe sign-LSH top-k by definition: per table t the planes
+    are ``default_rng(seed + 7919 t)``; a candidate shares the query's
+    signature or differs in one bit in some table; exact integer cosine
+    descending, then id; one row per (query, candidate)."""
+    x = np.asarray(vecs, np.float32).astype(np.float64)
+    qx = np.asarray(q_vecs, np.float32).astype(np.float64)
+
+    def sigs(m, planes):
+        out = np.zeros(len(m), np.int64)
+        for i, p in enumerate(planes):
+            proj = np.zeros(len(m))
+            for d in range(m.shape[1]):
+                proj = proj + m[:, d] * p[d]
+            out |= (proj > 0).astype(np.int64) << i
+        return out
+
+    def quant(m):
+        v = m * 1000.0
+        return np.sign(v) * np.floor(np.abs(v) + 0.5)
+
+    tables = [np.random.default_rng(seed + 7919 * t).standard_normal((n_planes, x.shape[1]))
+              for t in range(n_tables)]
+    cs = [sigs(x, p) for p in tables]
+    qs = [sigs(qx, p) for p in tables]
+    cq, qq = quant(x), quant(qx)
+    out = set()
+    for j, qid in enumerate(q_ids):
+        cand = {}
+        for t in range(n_tables):
+            near = [bin(int(s)).count("1") <= 1 for s in cs[t] ^ qs[t][j]]
+            for i in np.flatnonzero(near):
+                if ids[i] != qid:
+                    cand[ids[i]] = float(cq[i] @ qq[j] / np.sqrt((cq[i] @ cq[i]) * (qq[j] @ qq[j])))
+        ranked = sorted(cand.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        out |= {(qid, c, r + 1, s) for r, (c, s) in enumerate(ranked)}
+    return out
+
+
+@pytest.mark.parametrize("n_tables", [1, 4])
+def test_lsh_topk_matches_multiprobe_bruteforce(spark, n_tables):
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import lsh_topk
+
+    rng = np.random.default_rng(23)
+    dim, n_planes, seed = 8, 6, 41
+    # the corpus leaves every bucket `lonely` probes empty in every table
+    lonely = rng.standard_normal(dim).astype(np.float32)
+    x = np.stack([
+        v for v in rng.standard_normal((90, dim)).astype(np.float32)
+        if not _brute_topk([0], [v], [999], [lonely], 5, n_planes, seed, n_tables)
+    ])
+    x[10] = x[3] + 1e-3  # a near twin
+    ids = list(range(len(x))) + [7, 8]  # ids 7 and 8 appear twice (same vectors)
+    vecs = np.concatenate([x, x[[7, 8]]])
+    q_ids = [3, 10, 7, 7, 999, 20]  # query 7 twice
+    q_vecs = np.concatenate([x[[3, 10, 7, 7]], [lonely], x[[20]]])
+    emb = spark.createDataFrame(
+        [(int(i), [float(t) for t in v]) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(int(i), [float(t) for t in v]) for i, v in zip(q_ids, q_vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    want = _brute_topk(ids, vecs, q_ids, q_vecs, 5, n_planes, seed, n_tables)
+    assert not {r for r in want if r[0] == 999}
+    for d in (dim, None):
+        got = lsh_topk(emb, queries, k=5, n_planes=n_planes, seed=seed, dim=d, n_tables=n_tables)
+        assert {tuple(r) for r in got.collect()} == want
+    empty = lsh_topk(emb, queries.limit(0), k=5, n_planes=n_planes, seed=seed, n_tables=n_tables)
+    assert empty.collect() == []
+    assert empty.columns == ["query_id", "cand_id", "rank", "cosine"]
+
+
+def test_lsh_topk_zero_norm_candidate_fails_like_column_division(spark):
+    """A zero quantized norm makes the cosine divide by zero: under ANSI
+    (Spark's default) the job fails, as the Column division did; with
+    ANSI off the cosine is null."""
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import lsh_topk
+
+    df = spark.createDataFrame(
+        [(0, [0.3, -0.2, 0.5]), (1, [0.0001, -0.0002, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    q = df.filter(F.col("vec_id") == 0)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        lsh_topk(df, q, k=1, n_planes=1).collect()
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        assert [tuple(r) for r in lsh_topk(df, q, k=1, n_planes=1).collect()] == [(0, 1, 1, None)]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_dedupe_operators_release_their_relations(spark):
+    """Neither MinHash pairs nor n-gram Jaccard pairs may leave a cached
+    relation behind: a long-lived session would pin one shingle table
+    (and a band table) per call."""
+
+    def n_persistent():
+        return len(spark._jsc.sc().getRDDStorageInfo()), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    fresh = spark.createDataFrame(_corpus(5, 30))
+    before = n_persistent()
+    assert minhash_lsh_pairs(fresh, threshold=0.5, n_hashes=16, bands=8).count() > 0
+    assert ngram_jaccard_pairs(fresh, threshold=0.5).count() > 0
+    assert n_persistent() == before

@@ -152,3 +152,28 @@ def test_knn_grid_fallback_single_scan_no_shuffle(spark, sf_dir):
     assert exchanges[0].startswith(
         "+- Exchange hashpartitioning(l_orderkey#"
     ) and ", l_linenumber#" in exchanges[0], exchanges
+
+
+def test_lsh_topk_plan_one_python_stage_one_scan(spark, tmp_path):
+    """Sign-LSH top-k: the query side is collected and broadcast as a
+    probe index before the plan runs, so the executed plan holds exactly
+    one Python (``MapInArrow``) stage over one scan of the embeddings
+    parquet, and no broadcast hash join — the bucket join happens inside
+    the kernel."""
+    import numpy as np
+
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import lsh_topk
+
+    rng = np.random.default_rng(3)
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(
+        [(i, rng.standard_normal(8).astype(np.float32).tolist()) for i in range(400)],
+        "vec_id long, embedding array<float>",
+    ).write.parquet(path)
+    emb = spark.read.parquet(path)
+    pc = plan_checks(lsh_topk(emb, emb.filter(F.col("vec_id") < 6), k=3, n_planes=4), execute=True)
+    assert pc.python_stages() == 1, pc.final
+    assert pc.final.count("MapInArrow") == 1, pc.final
+    scans = [ln for ln in pc.final.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "/emb]" in scans[0], scans
+    assert not pc.has_broadcast_join(), pc.final
