@@ -47,9 +47,9 @@ from rosreestr_xml_to_gis_converter_spark.queries_ref import (  # noqa: E402
 
 DRIVER_WINDOW = 50
 
-# Removed from the registry entirely (round-3 VERDICT next-round #8):
-# rows-only organic variants carry no oracle signal in a capped gate; the
-# planted-oracle twins in the window prove the same recall paths exactly.
+# Removed from the registry entirely: rows-only organic variants carry no
+# oracle signal in a capped gate; the planted-oracle twins in the window
+# prove the same recall paths exactly.
 # The operators stay in the package and keep their bench.py entries.
 _DROPPED = [
     "dedup_minhash_lsh",   # planted twin: dedup_minhash_planted
@@ -61,43 +61,33 @@ _DROPPED = [
 ]
 
 # Deprioritized to the tail (positions > DRIVER_WINDOW): redundant
-# re-proofs of oracles that a window query already proves, plus
-# statically-green scalar queries with green driver rows in three
-# consecutive rounds (r01+r02+r03) — demoted per the standing rotation
-# policy to make room for the round-3/4 oracle queries listed above.
+# re-proofs of oracles that a window query already proves, plus scalar
+# reference queries over stable modules, so the window holds the oracle
+# queries that exercise the engine.
 _TAIL = [
     "flagship_spatial_join_salted",    # same oracle as flagship_spatial_join
     "flagship_spatial_join_shuffle",   # same oracle as flagship_spatial_join
     "knn_parcels_brute",               # same oracle as knn_parcels
     "knn_parcels_literal",             # same oracle as knn_parcels
-    "setops",                          # green r02+r03; generic SQL breadth
-    "cube_agg",                        # green r02+r03; rollup_agg covers the family
-    "s1_scan",                         # green r01+r02+r03
-    "p2_filter_anti",                  # green r01+r02+r03
-    "e1_explode_entry",                # green r01+r02+r03
-    "a2_set_dedup",                    # green r01+r02+r03
-    "a3_conditional_default",          # green r01+r02+r03
-    "f1_regex_cleanup",                # green r01+r02+r03
-    "f3_date_invert",                  # green r01+r02+r03
-    "f5_collision_suffix",             # green r01+r02+r03
-    # demoted in round 5 under the changed-module rule's converse:
-    # modules untouched in r4-r5, green driver rows r01-r04
-    "j1_classifier_join",              # classifiers.py untouched; green r01-r04
-    "g1_segmentation",                 # functions/geometry.py untouched; green r01-r04
-    "g2_shoelace",                     # functions/geometry.py untouched; green r01-r04
-    "g3_orientation",                  # functions/geometry.py untouched; green r01-r04
-    "cell_encode",                     # index/grid.py untouched; green r01-r04
-    "text_fingerprint",                # operators/textops.py untouched; green r01-r04
-    # demoted late round 5 to admit cell_rollup (birth round: the
-    # multi-resolution hypertable rollup over cell_parent_col, the one
-    # grid primitive that had no oracle query); same grounds as
-    # text_fingerprint
-    "text_tokens",                     # operators/textops.py untouched; green r01-r04
-    # demoted late round 5 to admit stream_neardup_matches (birth round:
-    # the stream-static near-dup join + watermarked match aggregation —
-    # the continuous-ingestion twin of the pHash near-dup path); same
-    # grounds as text_tokens
-    "text_quality",                    # operators/textops.py untouched; green r01-r04
+    "setops",                          # generic SQL breadth
+    "cube_agg",                        # rollup_agg covers the family
+    # scalar reference queries
+    "s1_scan",
+    "p2_filter_anti",
+    "e1_explode_entry",
+    "a2_set_dedup",
+    "a3_conditional_default",
+    "f1_regex_cleanup",
+    "f3_date_invert",
+    "f5_collision_suffix",
+    "j1_classifier_join",              # classifiers.py
+    "g1_segmentation",                 # functions/geometry.py
+    "g2_shoelace",                     # functions/geometry.py
+    "g3_orientation",                  # functions/geometry.py
+    "cell_encode",                     # index/grid.py
+    "text_fingerprint",                # operators/textops.py
+    "text_tokens",                     # operators/textops.py
+    "text_quality",                    # operators/textops.py
 ]
 
 

@@ -5,4 +5,5 @@ outside the JVM, and it is always Arrow-batched).
 ``text``: reference string/date semantics as pure Column expressions.
 ``imaging``: pure-python image codecs (PNG; JPEG via ``jpeg``) behind the
 ``decode_image``/``encode_image`` seam; ``codec_backend`` swaps in Pillow.
+``xxhash``: Spark's XXH64 in numpy, bit-identical to ``F.xxhash64``.
 """

@@ -1,9 +1,12 @@
 """Large-scale deduplication operators over a document corpus.
 
-Everything stays JVM-side: shingling, hashing (``xxhash64``), minhash,
-banding, and verification are Column expressions / higher-order array
-functions — no Python UDFs, so these run at full codegen speed over
-10^12-row corpora.  The LSH self-joins are equi-joins on (band, hash)
+Shingling, SimHash, hamming banding and every verify are Column
+expressions / higher-order array functions.  The MinHash signatures and
+band keys are one numpy ``mapInArrow`` kernel over the JVM shingle
+arrays: it hashes each shingle's bytes once with the Spark-exact XXH64
+of ``functions/xxhash.py`` and derives every seeded minhash from that
+hash, bit-identical to the ``xxhash64`` Column form and without its
+per-seed lambdas.  The LSH self-joins are equi-joins on (band, hash)
 buckets, which Catalyst shuffles on the bucket key (the standard
 MinHash-LSH dedup shape used by web-scale corpus pipelines).  No
 operator caches, so a call leaves no persisted relation behind in a
@@ -13,8 +16,10 @@ both sides read one reused shuffle exchange instead.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 
 def _words(text: Column) -> Column:
@@ -104,25 +109,25 @@ def _should_spread(df: DataFrame) -> bool:
     files = df.inputFiles()
     if not files or len(files) >= parallelism:
         return False
-    try:
-        from urllib.parse import unquote, urlparse
+    from urllib.parse import unquote, urlparse
 
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        row_groups = 0
-        for f in files:
-            p = urlparse(f)
-            path = unquote(p.path) if p.scheme in ("file", "") else None
-            if path is None:
-                # remote storage: footers not cheaply reachable here;
-                # the size band already says the input is small
-                return True
-            row_groups += pq.ParquetFile(path).num_row_groups
-            if row_groups >= parallelism:
-                return False
-        return row_groups < parallelism
-    except Exception:
-        return True  # unreadable footer (non-parquet): trust the size band
+    row_groups = 0
+    for f in files:
+        p = urlparse(f)
+        if p.scheme not in ("file", ""):
+            # remote storage: footers not cheaply reachable here;
+            # the size band already says the input is small
+            return True
+        try:
+            row_groups += pq.ParquetFile(unquote(p.path)).num_row_groups
+        except (OSError, pa.lib.ArrowInvalid):
+            return True  # unreadable footer (non-parquet): trust the size band
+        if row_groups >= parallelism:
+            return False
+    return row_groups < parallelism
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -163,11 +168,55 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(shingles: Column, n_hashes: int) -> Column:
-    """n independent minhashes via seeded xxhash64 — array<long>."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))) for i in range(n_hashes)]
+def _minhash_band_rows(bands: int, rows: int):
+    """Worker side of :func:`minhash_lsh_pairs`: per Arrow batch of
+    ``(id, sh)``, emit one ``(id, band, bucket)`` row per band of every
+    document with at least one shingle.
+
+    Bit-identical to the Column form it replaces, where minhash ``i`` was
+    ``array_min(transform(sh, s -> xxhash64(s, i)))`` and a band's bucket
+    was ``xxhash64`` over its ``rows`` minhashes: each shingle's bytes
+    are hashed once (``xxhash64(s)``), minhash ``i`` chains ``hashInt(i)``
+    onto that hash and takes the signed minimum per document, and a
+    bucket chains ``hashLong`` over the band's minhashes from seed 42.
+    Only the ``bands * rows`` minhashes a band reads are computed."""
+    import pyarrow as pa
+
+    from rosreestr_xml_to_gis_converter_spark.functions.xxhash import (
+        SEED,
+        hash_int,
+        hash_long,
+        hash_strings,
     )
+
+    def band_rows(batches):
+        for batch in batches:
+            ids, sh = batch.column(0), batch.column(1)
+            off = sh.offsets.to_numpy().astype(np.int64)
+            # reduceat needs non-empty segments: an empty or null shingle
+            # list (zero length as Spark writes it) emits no band rows
+            seg = np.flatnonzero(np.diff(off) > 0)
+            if not seg.size:
+                continue
+            h0 = hash_strings(sh.values.slice(off[0], off[-1] - off[0]))
+            starts = off[seg] - off[0]
+            bucket = np.empty((len(seg), bands), np.uint64)
+            for b in range(bands):
+                h = SEED
+                for r in range(b * rows, (b + 1) * rows):
+                    sig = np.minimum.reduceat(hash_int(r, h0).view(np.int64), starts)
+                    h = hash_long(sig, h)
+                bucket[:, b] = h
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(np.repeat(seg, bands))),
+                    pa.array(np.tile(np.arange(bands, dtype=np.int32), len(seg))),
+                    pa.array(bucket.view(np.int64).ravel()),
+                ],
+                names=["id", "band", "bucket"],
+            )
+
+    return band_rows
 
 
 def minhash_lsh_pairs(
@@ -184,38 +233,34 @@ def minhash_lsh_pairs(
     shingle -> minhash(n) -> band buckets (bands x rows) -> bucket
     self-join -> verify.  Only bucket-colliding pairs are verified, so
     cost is ~linear in corpus size for realistic duplicate rates.
+    Each band reads ``n_hashes // bands`` minhashes; the trailing
+    ``n_hashes % bands`` never reach a bucket.
     """
+    if not 1 <= bands <= n_hashes:
+        # bands > n_hashes leaves every band without a minhash to key on
+        raise ValueError(f"bands must be in [1, n_hashes={n_hashes}], got {bands}")
     rows = n_hashes // bands
-    sh = (
-        spread_input(df)
-        .select(
-            F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), k).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
+    all_sh = spread_input(df).select(
+        F.col(id_col).alias("id"),
+        word_shingles(F.col(text_col), k).alias("sh"),
     )
-    sig = sh.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
+    # the kernel skips empty shingle sets itself: a size filter on its
+    # input would be pushed below the projection and shingle every
+    # document twice
+    sh = all_sh.filter(F.size("sh") > 0)
     # SLIM band rows (guide §2.3/§8): the bucket self-join carries only
     # (id, band, bucket) — shipping every doc's full shingle array
     # `bands`x through the join's build side (~1 KB/row at 8 copies per
     # doc) would dominate the query; shingles are re-attached below to
     # the (tiny) surviving candidate-pair set only.
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[F.element_at("sig", b * rows + r + 1) for r in range(rows)]).alias(
-                            "bucket"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket").repartition("band", "bucket")
+    schema = StructType([
+        StructField("id", all_sh.schema["id"].dataType),
+        StructField("band", IntegerType()),
+        StructField("bucket", LongType()),
+    ])
+    banded = all_sh.mapInArrow(_minhash_band_rows(bands, rows), schema).repartition(
+        "band", "bucket"
+    )
     # one exchange on the bucket key: both self-join sides read it (Spark
     # reuses it), so the minhash runs once per call, and the shuffled
     # join at scale needs exactly this partitioning anyway

@@ -277,10 +277,9 @@ SPARSE_CENTROIDS: list[tuple[str, float, float]] = [
 
 
 def knn_uncovered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN completeness gate (round-3 VERDICT "What's missing #2"): the
-    centroid layer is sparse enough that most images' grid disks are
-    EMPTY at res=9/disk=1.  Before round 4 those images silently vanished
-    from ``knn_grid``'s inner join; the whole-layer fallback now ranks
+    """kNN completeness gate: the centroid layer is sparse enough that
+    most images' grid disks are EMPTY at res=9/disk=1.  An inner join on
+    the grid disk would drop those images; the whole-layer fallback ranks
     them against the full (broadcast) layer, so the output must equal
     true kNN for every distinct image — exactly what the cross-join
     oracle states.  Row count == distinct images x k by construction."""
@@ -348,15 +347,15 @@ KNN_LATTICE = _knn_lattice()
 
 
 def knn_escalated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Escalation-ladder gate (round-4 VERDICT next-round #3): the
-    whole-layer fallback is gated OFF (``layer_fallback=False``), so the
-    ONLY route to completeness is bounded iterative disk escalation
-    (auto ladder 2x/4x).  The lattice fixture guarantees every image is
-    short at the base disk (one candidate in any 3x3 window) and served
-    by the ladder (>= 9 candidates in any 9x9 window); the conservative
-    exact-disk ranking makes every emitted row TRUE kNN — exactly the
-    cross-join oracle.  Row count == distinct images x k: nothing is
-    dropped even with the layer fallback disabled."""
+    """Escalation-ladder gate: the whole-layer fallback is gated OFF
+    (``layer_fallback=False``), so the ONLY route to completeness is
+    bounded iterative disk escalation (auto ladder 2x/4x).  The lattice
+    fixture guarantees every image is short at the base disk (one
+    candidate in any 3x3 window) and served by the ladder (>= 9
+    candidates in any 9x9 window); the conservative exact-disk ranking
+    makes every emitted row TRUE kNN — exactly the cross-join oracle.
+    Row count == distinct images x k: nothing is dropped even with the
+    layer fallback disabled."""
     img = distinct_images_from_lineitem(spark, sf_dir)
     cen = spark.createDataFrame(
         pd.DataFrame(KNN_LATTICE, columns=["cad_number", "clon", "clat"])
@@ -394,15 +393,15 @@ SELECT image_id, cad_number, rank, dist FROM (
 # --- checkpoint / resume lineage (M-family; checkpoint.py) -------------------
 
 def checkpoint_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint/resume driver oracle (round-3 VERDICT next-round #5):
-    a checkpointed bucketed write of ``orders`` with an INJECTED CRASH
-    after the first bucket group, then a resume on the same run_id that
-    completes the remaining groups.  The returned lineage table (one row
-    per bucket with its row count) must equal a plain GROUP BY of the
-    input — proving the crash+resume protocol re-runs exactly the
-    missing buckets and counts the written files correctly.  The gate
-    buckets on ``o_orderkey % 8`` (SQL-recomputable); production uses the
-    xxhash64 bucketer (``with_bucket``), same protocol."""
+    """Checkpoint/resume driver oracle: a checkpointed bucketed write of
+    ``orders`` with an INJECTED CRASH after the first bucket group, then a
+    resume on the same run_id that completes the remaining groups.  The
+    returned lineage table (one row per bucket with its row count) must
+    equal a plain GROUP BY of the input — proving the crash+resume
+    protocol re-runs exactly the missing buckets and counts the written
+    files correctly.  The gate buckets on ``o_orderkey % 8``
+    (SQL-recomputable); production uses the xxhash64 bucketer
+    (``with_bucket``), same protocol."""
     import shutil
     import tempfile
 
@@ -440,7 +439,7 @@ FROM orders GROUP BY 1
 """
 
 
-# --- image near-dup by perceptual hash (training-data op, round 4) -----------
+# --- image near-dup by perceptual hash (training-data op) --------------------
 
 def dedup_phash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pHash near-dup with a planted-distance oracle: for every distinct
@@ -1343,7 +1342,7 @@ FROM documents
 
 # --- planted-twin recall gates ------------------------------------------------
 # The organic LSH queries above can legitimately return ~0 rows on the
-# driver's synthetic corpus, which certifies nothing (VERDICT round 1).
+# driver's synthetic corpus, which certifies nothing.
 # These variants UNION the input with exact twins (id + _TWIN_OFFSET) and
 # filter the pair output to the planted ids — banded LSH finds an exact
 # twin with certainty (identical signature -> identical band keys), so

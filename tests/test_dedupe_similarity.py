@@ -759,3 +759,254 @@ def test_dedupe_operators_release_their_relations(spark):
     assert minhash_lsh_pairs(fresh, threshold=0.5, n_hashes=16, bands=8).count() > 0
     assert ngram_jaccard_pairs(fresh, threshold=0.5).count() > 0
     assert n_persistent() == before
+
+
+def test_minhash_lsh_pairs_validates_bands(spark, docs):
+    with pytest.raises(ValueError, match="bands"):
+        minhash_lsh_pairs(docs, threshold=0.5, n_hashes=8, bands=9)
+    with pytest.raises(ValueError, match="bands"):
+        minhash_lsh_pairs(docs, threshold=0.5, n_hashes=8, bands=0)
+
+
+# ---------------------------------------------------------------------------
+# numpy XXH64 and the MinHash band kernel against Spark's own xxhash64
+# ---------------------------------------------------------------------------
+
+
+def _hash_strings_corpus() -> list:
+    """Seeded UTF-8 strings: empty, every byte length 1-100 (so every
+    4/8/32-byte boundary), multibyte characters, NUL, one 5,000-byte
+    token."""
+    rng = np.random.default_rng(11)
+    ascii_ = list("abcdefghijklmnopqrstuvwxyz XYZ0123456789")
+    mixed = ascii_ + ["ж", "Щ", "中", "文", "\U0001F600", "\x00"]
+    out = [""]
+    for n in range(1, 101):
+        out.append("".join(rng.choice(ascii_, size=n)))
+        out.append("".join(rng.choice(mixed, size=max(1, n // 2))))
+    out += ["\x00", "a\x00b", "\x00" * 9, "".join(rng.choice(ascii_, size=5000))]
+    return out
+
+
+def test_xxhash_helpers_match_spark_xxhash64(spark):
+    """``hash_strings`` / ``hash_int`` / ``hash_long`` equal ``F.xxhash64``
+    bit for bit, compared as signed longs."""
+    import pyarrow as pa
+
+    from rosreestr_xml_to_gis_converter_spark.functions.xxhash import (
+        hash_int,
+        hash_long,
+        hash_strings,
+    )
+
+    strs = _hash_strings_corpus()
+    df = spark.createDataFrame(list(enumerate(strs)) + [(len(strs), None)], "i int, s string")
+    seeds = range(32)
+    got = df.select(
+        "i", F.xxhash64("s").alias("h"), *[F.xxhash64("s", F.lit(i)).alias(f"h{i}") for i in seeds]
+    ).orderBy("i").toArrow()
+    arr = pa.array(strs + [None])
+    h = hash_strings(arr)
+    assert h.view(np.int64).tolist() == got.column("h").to_pylist()
+    assert h[-1] == 42  # a null column leaves the seed, as in Spark
+    for i in seeds:
+        assert hash_int(i, h).view(np.int64).tolist() == got.column(f"h{i}").to_pylist()
+    # a sliced string array reads from its own offset
+    assert hash_strings(arr.slice(37, 60)).tolist() == h[37:97].tolist()
+
+    rng = np.random.default_rng(12)
+    longs = rng.integers(-(2**63), 2**63 - 1, size=(300, 8), dtype=np.int64)
+    longs[:3] = [[0] * 8, [-1] * 8, [-(2**63)] * 8]
+    ldf = spark.createDataFrame(
+        [(r, *map(int, v)) for r, v in enumerate(longs)],
+        "r int, " + ", ".join(f"c{j} long" for j in range(8)),
+    )
+    for n in (2, 4, 8):
+        want = ldf.orderBy("r").select(F.xxhash64(*[f"c{j}" for j in range(n)])).toArrow()
+        chain = np.uint64(42)
+        for j in range(n):
+            chain = hash_long(longs[:, j], chain)
+        assert chain.view(np.int64).tolist() == want.column(0).to_pylist()
+
+
+def _col_band_rows(sh, n_hashes: int, bands: int):
+    """The Column MinHash signature and band explode that the numpy
+    kernel replaced, kept here as its reference."""
+    rows = n_hashes // bands
+    sig = F.array(
+        *[F.array_min(F.transform(F.col("sh"), lambda s: F.xxhash64(s, F.lit(i)))) for i in range(n_hashes)]
+    )
+    return sh.withColumn("sig", sig).select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(*[F.element_at("sig", b * rows + r + 1) for r in range(rows)]).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
+
+
+def _col_minhash_lsh_pairs(df, threshold, n_hashes, bands, k=3):
+    """The Column MinHash-LSH pipeline: the same shingles, bucket
+    self-join, dedup and Jaccard verify as ``minhash_lsh_pairs``."""
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import jaccard, word_shingles
+
+    sh = df.select(
+        F.col("doc_id").alias("id"), word_shingles(F.col("text"), k).alias("sh")
+    ).filter(F.size("sh") > 0)
+    banded = _col_band_rows(sh, n_hashes, bands)
+    a, b = banded.alias("a"), banded.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+        .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+    )
+    return (
+        cand.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _kernel_corpus(spark):
+    """The planted corpus plus a null id, a null text, texts shorter than
+    one shingle, a multibyte text, one very long token, exact copies."""
+    pdf = _corpus(9, 30)
+    extra = [
+        (None, pdf.text[0]), (900, None), (901, ""), (902, "two words"),
+        (903, "три слова здесь и ещё одно"), (904, "x" * 5000 + " tail end here"),
+        (905, pdf.text[3]), (906, pdf.text[3]),
+    ]
+    rows = [(int(d), t) for d, t in zip(pdf.doc_id, pdf.text)] + extra
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("n_hashes,bands", [(10, 3), (16, 8), (5, 5)])
+def test_minhash_band_kernel_matches_column_form(spark, n_hashes, bands):
+    """The kernel's ``(id, band, bucket)`` rows equal the Column form's,
+    across Arrow batch boundaries and with ``n_hashes % bands`` trailing
+    hashes; nulls and copies included, and documents without a shingle
+    emit no rows, as the Column form's size filter drops them."""
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import (
+        _minhash_band_rows,
+        word_shingles,
+    )
+
+    docs = _kernel_corpus(spark)
+    all_sh = docs.select(F.col("doc_id").alias("id"), word_shingles(F.col("text"), 3).alias("sh"))
+    sh = all_sh.filter(F.size("sh") > 0)
+    want = sorted(map(tuple, _col_band_rows(sh, n_hashes, bands).collect()), key=repr)
+    schema = "id long, band int, bucket long"
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = all_sh.mapInArrow(_minhash_band_rows(bands, n_hashes // bands), schema).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert sorted(map(tuple, got), key=repr) == want
+    assert len(want) == bands * sh.count()
+    assert any(r[0] is None for r in want)
+
+
+def test_minhash_band_kernel_reads_sliced_arrow_input(spark):
+    """A batch whose list offsets and string values both start past zero
+    hashes the same shingles as the whole batch."""
+    import pyarrow as pa
+
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import _minhash_band_rows
+
+    shingles = [["a b c", "b c d"], ["x y z"], [], None, ["中 文 字", "a b c", "e" * 70]]
+    flat = [s for row in shingles if row for s in row]
+    lens = [len(r) if r else 0 for r in shingles]
+    off = np.concatenate([[0], np.cumsum(lens)]) + 2
+    values = pa.array(["cut", "pad0", "pad1"] + flat).slice(1)
+    lists = pa.ListArray.from_arrays(
+        pa.array(off, pa.int32()), values,
+        mask=pa.array([r is None for r in shingles]),
+    )
+    ids = pa.array(range(len(shingles)), pa.int64())
+    whole = pa.RecordBatch.from_arrays([ids, lists], names=["id", "sh"])
+    kernel = _minhash_band_rows(4, 2)
+
+    def rows(batch):
+        return sorted(
+            r for out in kernel(iter([batch])) for r in zip(*(c.to_pylist() for c in out.columns))
+        )
+
+    got = rows(whole.slice(1, 4))
+    assert got == [r for r in rows(whole) if r[0] >= 1]
+    assert {r[0] for r in got} == {1, 4}
+
+    sh = spark.createDataFrame(
+        [(i, r) for i, r in enumerate(shingles) if r], "id long, sh array<string>"
+    )
+    want = sorted(map(tuple, _col_band_rows(sh, 8, 4).collect()))
+    assert rows(whole) == want
+
+
+def test_minhash_lsh_pairs_match_column_pipeline(spark):
+    docs = _kernel_corpus(spark)
+    for n_hashes, bands, threshold in [(32, 8, 0.5), (10, 3, 0.2)]:
+        want = _col_minhash_lsh_pairs(docs, threshold, n_hashes, bands)
+        got = minhash_lsh_pairs(docs, threshold=threshold, n_hashes=n_hashes, bands=bands)
+        assert got.schema == want.schema
+
+        def rows(frame):
+            return sorted((r.id_a, r.id_b, r.jaccard.hex()) for r in frame.collect())
+
+        ref = rows(want)
+        assert len(ref) > 10
+        assert rows(got) == ref
+
+
+def _random_text_rows(n: int, seed: int) -> list:
+    rng = np.random.default_rng(seed)
+    return [rng.bytes(48).hex() for _ in range(n)]
+
+
+def test_should_spread_non_parquet_input_trusts_size_band(spark, tmp_path):
+    """A small text input has no parquet footer: the failed footer read
+    falls back to the size band, which says spread."""
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import _should_spread
+
+    path = tmp_path / "docs.txt"
+    path.write_text("\n".join(_random_text_rows(8000, 1)))  # ~780 KB: inside the band
+    assert _should_spread(spark.read.text(str(path)))
+
+
+def test_should_spread_parquet_input_counts_row_groups(spark, tmp_path, monkeypatch):
+    """A parquet input spreads only when its row groups are fewer than the
+    cores; an error other than an unreadable footer propagates."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rosreestr_xml_to_gis_converter_spark.operators import dedupe
+
+    table = pa.table({"text": _random_text_rows(8000, 2)})
+    parallelism = spark.sparkContext.defaultParallelism
+    one, many = tmp_path / "one.parquet", tmp_path / "many.parquet"
+    pq.write_table(table, one, compression="none")
+    pq.write_table(table, many, compression="none", row_group_size=8000 // parallelism)
+    assert pq.ParquetFile(many).num_row_groups >= parallelism
+    assert dedupe._should_spread(spark.read.parquet(str(one)))
+    assert not dedupe._should_spread(spark.read.parquet(str(many)))
+
+    def broken(path):
+        raise ZeroDivisionError("size-band bug")
+
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(ZeroDivisionError):
+        dedupe._should_spread(spark.read.parquet(str(one)))

@@ -177,3 +177,39 @@ def test_lsh_topk_plan_one_python_stage_one_scan(spark, tmp_path):
     scans = [ln for ln in pc.final.splitlines() if "FileScan" in ln]
     assert len(scans) == 1 and "/emb]" in scans[0], scans
     assert not pc.has_broadcast_join(), pc.final
+
+
+def test_minhash_lsh_pairs_plan_one_kernel_reused_band_exchange(spark, tmp_path):
+    """MinHash-LSH: signatures and band keys come from one ``MapInArrow``
+    kernel, and the band self-join builds from a reuse of the one
+    ``(band, bucket)`` exchange, so the kernel runs once per call; no
+    interpreted minhash (``xxhash64`` / ``array_min``) is left."""
+    import numpy as np
+
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import minhash_lsh_pairs
+    from rosreestr_xml_to_gis_converter_spark.plans.explain import PlanChecks, executed_plan
+
+    words = "parcel survey boundary polygon raster tile image river forest field road".split()
+    rng = np.random.default_rng(4)
+    texts = [" ".join(rng.choice(words, 30)) for _ in range(300)]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts + texts[:20])], "doc_id long, text string"
+    ).write.parquet(path)
+    df = minhash_lsh_pairs(spark.read.parquet(path), threshold=0.5, n_hashes=16, bands=8)
+    assert len(df.collect()) >= 20
+    pc = PlanChecks(executed_plan(df))
+    lines = pc.final.splitlines()
+    assert pc.final.count("MapInArrow") == 1, pc.final
+    assert "xxhash64(" not in pc.final and "array_min(" not in pc.final, pc.final
+    join = [i for i, ln in enumerate(lines) if "Join [band#" in ln]
+    band_x = [
+        i for i, ln in enumerate(lines)
+        if "Exchange hashpartitioning(band#" in ln and "REPARTITION_BY_COL" in ln
+    ]
+    reused = [i for i in band_x if "ReusedExchange" in lines[i]]
+    assert len(join) == 1 and "BuildRight" in lines[join[0]], pc.final
+    # the stream side reads the exchange, the build side (printed after
+    # it) reads its reuse
+    assert len(band_x) == 2 and len(reused) == 1, pc.final
+    assert join[0] < band_x[0] < reused[0], pc.final
