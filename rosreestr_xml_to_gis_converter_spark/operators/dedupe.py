@@ -240,25 +240,24 @@ def minhash_lsh_pairs(
         # bands > n_hashes leaves every band without a minhash to key on
         raise ValueError(f"bands must be in [1, n_hashes={n_hashes}], got {bands}")
     rows = n_hashes // bands
-    all_sh = spread_input(df).select(
+    sh = spread_input(df).select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), k).alias("sh"),
     )
-    # the kernel skips empty shingle sets itself: a size filter on its
-    # input would be pushed below the projection and shingle every
-    # document twice
-    sh = all_sh.filter(F.size("sh") > 0)
+    # no size filter on the shingles: it would be pushed below the
+    # projection and shingle every document twice per scan.  The kernel
+    # skips empty shingle sets, so no candidate pair holds such a document.
     # SLIM band rows (guide §2.3/§8): the bucket self-join carries only
     # (id, band, bucket) — shipping every doc's full shingle array
     # `bands`x through the join's build side (~1 KB/row at 8 copies per
     # doc) would dominate the query; shingles are re-attached below to
     # the (tiny) surviving candidate-pair set only.
     schema = StructType([
-        StructField("id", all_sh.schema["id"].dataType),
+        StructField("id", sh.schema["id"].dataType),
         StructField("band", IntegerType()),
         StructField("bucket", LongType()),
     ])
-    banded = all_sh.mapInArrow(_minhash_band_rows(bands, rows), schema).repartition(
+    banded = sh.mapInArrow(_minhash_band_rows(bands, rows), schema).repartition(
         "band", "bucket"
     )
     # one exchange on the bucket key: both self-join sides read it (Spark

@@ -183,7 +183,9 @@ def test_minhash_lsh_pairs_plan_one_kernel_reused_band_exchange(spark, tmp_path)
     """MinHash-LSH: signatures and band keys come from one ``MapInArrow``
     kernel, and the band self-join builds from a reuse of the one
     ``(band, bucket)`` exchange, so the kernel runs once per call; no
-    interpreted minhash (``xxhash64`` / ``array_min``) is left."""
+    interpreted minhash (``xxhash64`` / ``array_min``) is left.  Every
+    ``documents`` scan shingles each row once: no filter repeats the
+    shingle expression above the scan."""
     import numpy as np
 
     from rosreestr_xml_to_gis_converter_spark.operators.dedupe import minhash_lsh_pairs
@@ -213,3 +215,6 @@ def test_minhash_lsh_pairs_plan_one_kernel_reused_band_exchange(spark, tmp_path)
     # it) reads its reuse
     assert len(band_x) == 2 and len(reused) == 1, pc.final
     assert join[0] < band_x[0] < reused[0], pc.final
+    scans = [ln for ln in lines if "FileScan" in ln and "/docs]" in ln]
+    shingles = [ln for ln in lines if "split(lower(" in ln and "FileScan" not in ln]
+    assert len(scans) == 2 and len(shingles) == len(scans), pc.final
