@@ -100,8 +100,8 @@ else:  # knn: grid-disk candidate expansion + map-side top-k (operators/knn.py)
         schema="cad_number string, clon double, clat double")
 
     def job():
-        # literal parcel dimension: gate stated explicitly so the timed
-        # region never pays the auto gate's sizing count() job
+        # literal parcel dimension: collected unguarded, without the
+        # limit the default layer_fallback=None puts on the collect
         return knn_grid(
             img, centroids, TESTDATA_BOX, k=3, res=5, disk=2,
             layer_fallback=True,

@@ -17,7 +17,7 @@ Protocol (exactly-once per bucket directory):
    a half-written group is overwritten byte-identically.
 
 The lineage table doubles as the per-partition metrics table (row counts
-per bucket per run); global counters come from ``df.observe``.
+per bucket per run).
 Parquet-backed so it works offline; the same call pattern maps 1:1 onto
 Iceberg ``overwritePartitions``/append when a catalog is attached
 (sources/catalog.py).

@@ -10,13 +10,11 @@ are broken by ``cad_number``.  Three entry points:
 * ``knn_grid`` — the scale path: encode both sides at a coarse
   resolution and rank, per image, only the centroids within a bounded
   ``grid_disk`` of its cell (the grid-candidate / per-point top-k split
-  of distributed kNN joins, cf. PAPERS.md).  For a dimension-sized layer
-  (the whole-layer gate, see :func:`knn_grid`) the layer is collected
+  of distributed kNN joins, cf. PAPERS.md).  The layer is collected
   once, its per-cell candidate lists are built in numpy and broadcast,
   and one ``mapInArrow`` stage ranks every image batch with the numpy
   top-k below; an image whose disk holds fewer than k centroids ranks
-  the whole layer.  Huge layers stay JVM-side: a broadcast per-cell
-  candidate map plus a bounded escalation ladder.
+  the whole layer.
 * ``knn_literal`` — a centroid list given in Python becomes the broadcast
   layer directly, and every image ranks the whole layer with the same
   numpy top-k.
@@ -29,16 +27,11 @@ candidates by ``(dist, cad_number)`` through one ``lexsort``.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rosreestr_xml_to_gis_converter_spark.index.grid import (
-    _IDX_MASK,
-    _IX_SHIFT,
-    _RES_SHIFT,
     cell_col,
     cell_id,
     cell_ij,
@@ -48,6 +41,7 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     latlng_to_cell,
 )
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import (
+    BROADCAST_COVER_MAX_BYTES,
     _PAIRS_PER_PASS,
     with_geotag,
 )
@@ -129,22 +123,15 @@ def knn_literal(
     return _numpy_topk(pts, layer, k)
 
 
-# Worst-case euclidean ground distance (in LAT-cell units) covered by one
-# Chebyshev cell ring: the grid splits 360 deg of lon and 180 deg of lat
-# into the same 2^res cells, so a lon cell is 2 lat-cells wide and a point
-# within Chebyshev distance d of a cell is at most (d+1)*sqrt(wx^2+wy^2)
-# = (d+1)*wy*sqrt(5) degrees away (wx = 2*wy).
-_CELL_ASPECT_DIAG = math.sqrt(5.0)
+class LayerTooLargeError(ValueError):
+    pass
 
 
-def _exact_disk(d: int) -> int:
-    """Smallest Chebyshev cell radius guaranteed to hold every TRUE kNN
-    candidate once >= k centroids are known within Chebyshev radius ``d``
-    of the image's cell: the kth distance is then at most
-    (d+1)*wy*sqrt(5), and any centroid that close sits within
-    ceil((d+1)*sqrt(5)) + 1 cells on the narrow (lat) axis — the wide
-    (lon) axis needs fewer, the square disk is a superset."""
-    return int(math.ceil((d + 1) * _CELL_ASPECT_DIAG)) + 1
+# most broadcast bytes one layer row adds besides its cad_number: its two
+# coordinates, null flag and whole-layer pool entry (25), plus, per cell
+# of its (2*disk+1)^2 disk, one pool entry and at most one key and offset (24)
+def _max_layer_rows(disk: int) -> int:
+    return BROADCAST_COVER_MAX_BYTES // (25 + 24 * (2 * disk + 1) ** 2)
 
 
 def knn_grid(
@@ -154,18 +141,18 @@ def knn_grid(
     k: int,
     res: int,
     disk: int,
-    escalate: tuple[int, ...] | None = None,
     layer_fallback: bool | None = None,
-    layer_fallback_max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Grid-bounded kNN: candidates limited to centroids whose cell is
     within Chebyshev distance ``disk`` of the image's cell at ``res``.
 
     Exact iff every image's true k nearest centroids fall inside that
     disk; pick ``res``/``disk`` so the disk's ground extent exceeds the
-    worst-case kNN radius of the layer (asserted in tests).  The image
-    side is scanned once and never shuffled or exploded; only the small
-    centroid side is replicated over the disk's (2*disk+1)^2 cells.
+    worst-case kNN radius of the layer (asserted in tests).  An image
+    whose disk holds fewer than k centroids ranks the whole layer, so it
+    always gets its true kNN.  Output is exactly min(k, |centroids|) rows
+    per input row; an image with a null point ranks the whole layer with
+    null ``dist``, i.e. in ``cad_number`` order.
 
     Top-k is computed per input ROW: duplicate ``image_id`` rows each
     emit their own k rows.  Callers joining from tables with repeated
@@ -174,189 +161,42 @@ def knn_grid(
     gate queries do; deduping here would shuffle the big side on every
     call.
 
-    **Whole-layer gate open** (dimension-sized layers): ``layer_fallback
-    =True``, or ``None`` (auto) when the layer has at most
-    ``layer_fallback_max_rows`` rows.  The auto gate collects at most
-    ``layer_fallback_max_rows + 1`` centroid rows as Arrow and decides
-    from what came back; that one collect also feeds the ranking, so no
-    separate sizing job runs.  The layer is ordered by ``cad_number``,
+    The layer is collected once as Arrow and ordered by ``cad_number``;
     its per-cell candidate lists are built in numpy and broadcast, and a
-    single ``mapInArrow`` stage ranks every image: against its cell's
-    list when that holds at least k centroids, otherwise against the
-    whole layer.  Output is exactly min(k, |centroids|) rows per input
-    row.  An image with a null point ranks the whole layer with null
-    ``dist``, i.e. in ``cad_number`` order.  ``escalate`` is ignored
-    here: the whole layer already gives the true kNN of every short
-    image.
-
-    **Gate closed** (huge layers): a short image escalates through
-    bounded iterative ring expansion, all JVM-side.  For each multiplier
-    m in ``escalate`` (default ``(2, 4)``) a further broadcast map
-    carries, for only the cells still short at the previous level, the
-    candidates within the exact disk ``_exact_disk(disk*m)`` plus the
-    count within ``disk*m``; the first level whose count reaches k
-    supplies the candidate list, and because that list spans the
-    conservative exact disk the result is the true kNN.  All levels are
-    broadcast left-joins on the same cell key, so the image side is
-    scanned once and never shuffles, and the escalation maps scale with
-    the layer's sparse boundary, not with the layer.  An image still
-    short at the largest level ranks the nearest escalated candidates it
-    has and may emit fewer than k rows; pass ``()`` to disable the
-    ladder.
+    single ``mapInArrow`` stage ranks every image.  The image side is
+    scanned once and never shuffled.  ``layer_fallback=True`` states that
+    the layer is dimension-sized and collects it unguarded.  ``None``
+    collects at most :func:`_max_layer_rows` rows, the most whose
+    broadcast table fits ``BROADCAST_COVER_MAX_BYTES`` at this ``disk``,
+    and raises :class:`LayerTooLargeError` when the layer is larger.
+    ``False`` raises ``ValueError``.
     """
+    if layer_fallback is False:
+        raise ValueError(
+            "layer_fallback=False selected the JVM escalation ladder, which was "
+            "removed; knn_grid always ranks in the numpy top-k"
+        )
     pts = with_geotag(images, box).select("image_id", "lon", "lat")
     pts = pts.withColumn("cell", cell_col(F.col("lat"), F.col("lon"), res))
-    layer = None
-    if layer_fallback is not False:
-        cen = centroids.select(
-            "cad_number", F.col("clon").cast("double"), F.col("clat").cast("double")
-        )
-        if layer_fallback is None:
-            cen = cen.limit(layer_fallback_max_rows + 1)
+    cen = centroids.select(
+        "cad_number", F.col("clon").cast("double"), F.col("clat").cast("double")
+    )
+    if layer_fallback:
         layer = cen.toArrow()
-        if layer_fallback is None and layer.num_rows > layer_fallback_max_rows:
-            layer = None
-    if layer is not None:
-        return _numpy_topk(pts, layer, k, res, disk)
-    return _knn_ladder(pts, centroids, k, res, disk, (2, 4) if escalate is None else escalate)
-
-
-def _exploded_cells(centroids: DataFrame, res: int, outer: int) -> DataFrame:
-    """grid_disk as relational algebra: each centroid exploded over the
-    (2*outer+1)^2 neighbor offsets -> one row per (covered cell,
-    centroid), with ``_dx``/``_dy`` kept for inner-ring tests.  Decompose
-    the centroid cell, shift, bounds-clamp, re-pack — all Column
-    arithmetic, offsets from ``sequence()`` (no literal-array blowup at
-    large disks).  The ONE place the cell bit-packing formula lives on
-    the centroid side: both the candidates maps and the counts-only
-    frontier filter aggregate this lineage, so their join keys can never
-    drift apart."""
-    n_minus_1 = (1 << res) - 1
-    return (
-        centroids.withColumn("_c", cell_col(F.col("clat"), F.col("clon"), res))
-        .withColumn("_ix", F.shiftright(F.col("_c"), _IX_SHIFT).bitwiseAND(F.lit(_IDX_MASK)))
-        .withColumn("_iy", F.col("_c").bitwiseAND(F.lit(_IDX_MASK)))
-        .withColumn("_dx", F.explode(F.sequence(F.lit(-outer), F.lit(outer))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-outer), F.lit(outer))))
-        .withColumn("_nx", F.col("_ix") + F.col("_dx"))
-        .withColumn("_ny", F.col("_iy") + F.col("_dy"))
-        .filter(
-            (F.col("_nx") >= 0)
-            & (F.col("_nx") <= n_minus_1)
-            & (F.col("_ny") >= 0)
-            & (F.col("_ny") <= n_minus_1)
-        )
-        .withColumn(
-            "cell",
-            F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-            + F.col("_nx") * F.lit(1 << _IX_SHIFT).cast("long")
-            + F.col("_ny"),
-        )
-    )
-
-
-def _cen_cells(centroids: DataFrame, res: int, outer: int, inner: int) -> DataFrame:
-    """Centroids exploded over the (2*outer+1)^2 neighbor offsets ->
-    one row per covered cell: ``_cands`` (all candidates within Chebyshev
-    ``outer``) + ``_cnt`` (how many lie within ``inner``)."""
-    cen = _exploded_cells(centroids, res, outer).withColumn(
-        "_in",
-        ((F.abs(F.col("_dx")) <= inner) & (F.abs(F.col("_dy")) <= inner)).cast("int"),
-    )
-    return cen.groupBy("cell").agg(
-        F.collect_list(F.struct("clon", "clat", "cad_number")).alias("_cands"),
-        F.sum("_in").alias("_cnt"),
-    )
-
-
-def _cen_counts(centroids: DataFrame, res: int, d: int) -> DataFrame:
-    """Counts-only twin of :func:`_cen_cells`: cell -> number of
-    centroids within Chebyshev ``d``.  Used as the next escalation
-    level's frontier filter — Spark does not reuse the full map's
-    aggregation across subplans (measured: zero ReusedExchange), so a
-    dedicated counts lineage keeps each heavy collect_list map computed
-    exactly once and the filter side list-free."""
-    return (
-        _exploded_cells(centroids, res, d)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("_pc"))
-    )
-
-
-def _knn_ladder(
-    pts: DataFrame,
-    centroids: DataFrame,
-    k: int,
-    res: int,
-    disk: int,
-    escalate: tuple[int, ...],
-) -> DataFrame:
-    """The gate-closed realization of :func:`knn_grid`, all JVM-side."""
-    # every candidate of an image comes from the one broadcast-join row
-    # that matched its cell, so the small side is pre-aggregated per cell
-    # (still broadcast-sized), the join is 1:1, and top-k is an array
-    # expression: the big side never shuffles
-    levels = [_cen_cells(centroids, res, disk, disk)]
-    prev_d = disk
-    for mult in escalate:
-        d_i = disk * mult
-        mi_full = _cen_cells(centroids, res, _exact_disk(d_i), d_i)
-        # keep only cells the PREVIOUS level left short: the escalation
-        # maps' size tracks the sparse boundary, not the whole layer.
-        # The filter reads a counts-only map (not the previous full map,
-        # which Spark would recompute — no cross-subplan reuse).
-        prev_cnt = _cen_counts(centroids, res, prev_d)
-        levels.append(
-            mi_full.join(prev_cnt, "cell", "left")
-            .filter(F.coalesce(F.col("_pc"), F.lit(0)) < k)
-            .select("cell", "_cands", "_cnt")
-        )
-        prev_d = d_i
-    # All levels join the image side as broadcast LEFT joins on the same
-    # cell key — SINGLE-PASS: no union of covered/frontier branches (that
-    # would rescan the image table once per level), no shuffle of the
-    # big side; codegen evaluates each level's array lazily, so covered
-    # rows never touch the escalation columns.
-    joined = pts
-    for i, mi in enumerate(levels):
-        joined = joined.join(
-            F.broadcast(
-                mi.select(
-                    "cell",
-                    F.col("_cands").alias(f"_cands{i}"),
-                    F.col("_cnt").alias(f"_cnt{i}"),
-                )
-            ),
-            "cell",
-            "left",
-        )
-    # a row short at every level ranks the nearest escalated candidates
-    # it has (documented: may yield < k rows)
-    cands = F.coalesce(*[F.col(f"_cands{i}") for i in reversed(range(len(levels)))])
-    for i in reversed(range(len(levels))):
-        cands = F.when(
-            F.coalesce(F.col(f"_cnt{i}"), F.lit(0)) >= k, F.col(f"_cands{i}")
-        ).otherwise(cands)
-    scored = F.transform(
-        cands,
-        lambda c: F.struct(
-            _dist(F.col("lon"), F.col("lat"), c["clon"], c["clat"]).alias("dist"),
-            c["cad_number"].alias("cad_number"),
-        ),
-    )
-    # lexicographic struct sort == (dist ASC, cad_number ASC) tie-breaking,
-    # identical to the other realizations
-    top = F.slice(F.array_sort(scored), 1, k)
-    return joined.select("image_id", F.posexplode(top).alias("pos", "t")).select(
-        "image_id",
-        F.col("t.cad_number").alias("cad_number"),
-        (F.col("pos") + 1).alias("rank"),
-        F.col("t.dist").alias("dist"),
-    )
+    else:
+        cap = _max_layer_rows(disk)
+        layer = cen.limit(cap + 1).toArrow()
+        if layer.num_rows > cap:
+            raise LayerTooLargeError(
+                f"centroid layer has more than {cap} rows, the most whose disk={disk} "
+                f"candidate lists fit BROADCAST_COVER_MAX_BYTES={BROADCAST_COVER_MAX_BYTES}; "
+                "pass layer_fallback=True if the layer is dimension-sized"
+            )
+    return _numpy_topk(pts, layer, k, res, disk)
 
 
 # ---------------------------------------------------------------------------
-# numpy top-k over Arrow batches (whole-layer gate open, and knn_literal)
+# numpy top-k over Arrow batches (knn_grid and knn_literal)
 # ---------------------------------------------------------------------------
 
 _OUT_SCHEMA = "image_id string, cad_number string, rank int, dist double"
@@ -369,9 +209,9 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
     Returns ``(clon, clat, cnull, cads, keys, offsets, pool)``, a
     :func:`cell_lists` index: cell ``keys[i]`` holds the ``_ord`` of every
     centroid within Chebyshev ``disk`` of it, ascending, in
-    ``pool[offsets[i]:offsets[i + 1]]`` — the numpy twin of
-    :func:`_cen_cells`, with ``latlng_to_cell`` bit-identical to
-    ``cell_col``.  ``pool[offsets[-1]:]`` is the whole layer.
+    ``pool[offsets[i]:offsets[i + 1]]``, with ``latlng_to_cell``
+    bit-identical to the images' ``cell_col``.  ``pool[offsets[-1]:]`` is
+    the whole layer.
     ``res=None`` builds no cell lists.
     """
     import pyarrow.compute as pc

@@ -205,12 +205,11 @@ def knn_parcels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.3) rather than the derived id string
     img = distinct_images_from_lineitem(spark, sf_dir)
     centroids = spark.createDataFrame(_centroids_pdf())
-    # the layer is a LITERAL dimension (TESTDATA_PARCELS), so open the
-    # whole-layer gate explicitly instead of paying the auto-gate's
-    # sizing job (~0.4 s of pure job-launch overhead per call)
+    # the layer is a LITERAL dimension (TESTDATA_PARCELS): collect it
+    # unguarded rather than behind the broadcast-size limit
     out = knn_grid(
         img, centroids, TESTDATA_BOX, k=KNN_K, res=KNN_RES, disk=KNN_DISK,
-        escalate=(), layer_fallback=True,
+        layer_fallback=True,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -318,12 +317,10 @@ SELECT image_id, cad_number, rank, dist FROM (
 
 
 # a res-9 cell-center LATTICE with 3-cell spacing, extended 3+ cells past
-# the box on every side, for the escalation-ladder gate: every image cell
-# sees exactly ONE lattice point within Chebyshev 1 (spacing 3 > the 3-cell
-# window) so NO image is covered at the base disk, while every 9x9 window
-# (disk 4 = 4x escalation of disk 1) holds >= 9 points — the ladder covers
-# every image with >= k candidates, its conservative exact disk makes the
-# result TRUE kNN, and the plain cross-join oracle states exactly that.
+# the box on every side, for the short-disk gate: every image cell sees
+# exactly ONE lattice point within Chebyshev 1 (spacing 3 > the 3-cell
+# window), so every image's base disk is short of k and every image ranks
+# the whole layer — TRUE kNN, which the plain cross-join oracle states.
 def _knn_lattice() -> list[tuple[str, float, float]]:
     wx, wy = 360.0 / (1 << 9), 180.0 / (1 << 9)
     ix0 = int((TESTDATA_BOX.lon0 + 180.0) / wx) - 3
@@ -347,22 +344,16 @@ KNN_LATTICE = _knn_lattice()
 
 
 def knn_escalated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Escalation-ladder gate: the whole-layer fallback is gated OFF
-    (``layer_fallback=False``), so the ONLY route to completeness is
-    bounded iterative disk escalation (auto ladder 2x/4x).  The lattice
-    fixture guarantees every image is short at the base disk (one
-    candidate in any 3x3 window) and served by the ladder (>= 9
-    candidates in any 9x9 window); the conservative exact-disk ranking
-    makes every emitted row TRUE kNN — exactly the cross-join oracle.
-    Row count == distinct images x k: nothing is dropped even with the
-    layer fallback disabled."""
+    """Short-disk gate: the lattice fixture leaves every image short at
+    the base disk (one candidate in any 3x3 window), so every image ranks
+    the whole layer, collected behind the default broadcast-size guard,
+    and every emitted row is TRUE kNN — exactly the cross-join oracle.
+    Row count == distinct images x k: no short image is dropped."""
     img = distinct_images_from_lineitem(spark, sf_dir)
     cen = spark.createDataFrame(
         pd.DataFrame(KNN_LATTICE, columns=["cad_number", "clon", "clat"])
     )
-    out = knn_grid(
-        img, cen, TESTDATA_BOX, k=KNN_K, res=9, disk=1, layer_fallback=False
-    )
+    out = knn_grid(img, cen, TESTDATA_BOX, k=KNN_K, res=9, disk=1)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 

@@ -138,21 +138,16 @@ def test_uncovered_images_fall_back_to_whole_layer(spark, images):
 
 
 def test_escalation_exact_with_layer_gate_closed(spark, images, centroids):
-    """Round 5 (VERDICT #3): with the whole-layer fallback gated OFF,
-    sparse disks must be served by bounded iterative disk escalation and
-    equal TRUE kNN wherever the ladder finds >= k candidates; base-disk
-    covered images keep the documented disk-constrained semantics.  The
-    20-centroid layer at res 8 / disk 1 leaves most image disks short,
-    so this exercises the ladder hard (at 16x every image is covered)."""
+    """The 20-centroid layer at res 8 / disk 1 leaves most image disks
+    short of k: those must equal TRUE kNN (they rank the whole layer),
+    while images whose base disk holds >= k keep the disk-constrained
+    semantics."""
     from rosreestr_xml_to_gis_converter_spark.index.grid import cell_ij, latlng_to_cell
 
     res, disk, k = 8, 1, 3
     got = {
         (r.image_id, r.cad_number, r["rank"])
-        for r in knn_grid(
-            images, centroids, TESTDATA_BOX, k=k, res=res, disk=disk,
-            escalate=(2, 4, 16), layer_fallback=False,
-        ).collect()
+        for r in knn_grid(images, centroids, TESTDATA_BOX, k=k, res=res, disk=disk).collect()
     }
     ipdf = gen_images_pdf(31, 300)
     cpdf = centroids.toPandas()
@@ -161,100 +156,27 @@ def test_escalation_exact_with_layer_gate_closed(spark, images, centroids):
     ix, iy = cell_ij(latlng_to_cell(lat, lon, res))
     cx, cy = cell_ij(latlng_to_cell(cpdf["clat"].to_numpy(), cpdf["clon"].to_numpy(), res))
     want = set()
-    n_escalated = 0
+    n_short = 0
     for i in range(len(ipdf)):
         within = (np.abs(cx - ix[i]) <= disk) & (np.abs(cy - iy[i]) <= disk)
         cand = cpdf[within].copy()
         if len(cand) < k:
-            cand = cpdf.copy()  # escalated rows must equal TRUE kNN
-            n_escalated += 1
+            cand = cpdf.copy()  # short rows must equal TRUE kNN
+            n_short += 1
         cand["dist"] = np.sqrt(
             (lon[i] - cand["clon"]) ** 2 + (lat[i] - cand["clat"]) ** 2
         )
         cand = cand.sort_values(["dist", "cad_number"]).head(k)
         for rank, (_, r) in enumerate(cand.iterrows(), start=1):
             want.add((ipdf["image_id"].iloc[i], r.cad_number, rank))
-    assert n_escalated > 100  # the fixture genuinely stresses the ladder
+    assert n_short > 100  # the fixture genuinely stresses the short-disk path
     assert got == want
 
 
-def test_escalation_conservative_disk_catches_closer_outside_ring(spark):
-    """Adversarial exactness: the level that first reaches k candidates
-    (Chebyshev cnt) must rank within the CONSERVATIVE exact disk, not its
-    own ring — here two centroids sit at Chebyshev 2 (2 lon cells =
-    2.8125 deg) while a strictly CLOSER one (3 lat cells = 2.11 deg) is
-    at Chebyshev 3, outside the counting ring.  A naive 'rank within the
-    ring that reached k' would miss it."""
-    from rosreestr_xml_to_gis_converter_spark.index.grid import (
-        WORLD_DLAT,
-        WORLD_DLON,
-        WORLD_LON0,
-    )
-
-    res, k = 8, 2
-    wx, wy = WORLD_DLON / (1 << res), WORLD_DLAT / (1 << res)
-    # an image point at a known cell center (phash -> lon/lat is the
-    # synth geotag; build the point straight from a one-row DF instead)
-    lon0, lat0 = WORLD_LON0 + 100 * wx + wx / 2, -90.0 + 100 * wy + wy / 2
-    from rosreestr_xml_to_gis_converter_spark.synth import TESTDATA_BOX as B
-
-    # invert the geotag: choose phash=0 -> (B.lon0, B.lat0); instead use
-    # explicit centroids around that point's cell
-    img = spark.createDataFrame(
-        pd.DataFrame(
-            [("i1", None, 1, 1, "png", "c", 0)],
-            columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
-        ),
-        schema=IMAGES_SCHEMA,
-    )
-    plon = B.lon0  # phash 0 geotag
-    plat = B.lat0
-    cen = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "cad_number": ["far_a", "far_b", "near_c"],
-                # Chebyshev 2 in lon (2 cells = 2*wx deg), Chebyshev 3 in lat
-                "clon": [plon + 2 * wx, plon + 2 * wx, plon],
-                "clat": [plat, plat + wy, plat + 3 * wy],
-            }
-        )
-    )
-    got = (
-        knn_grid(img, cen, B, k=k, res=res, disk=1, escalate=(2,), layer_fallback=False)
-        .toPandas()
-        .sort_values("rank")
-    )
-    want = knn_bruteforce(img, cen, B, k=k).toPandas().sort_values("rank")
-    assert got["cad_number"].tolist() == want["cad_number"].tolist()
-    # the fixture is genuinely adversarial: the closer centroid is the
-    # lat-offset one sitting OUTSIDE the counting ring
-    assert "near_c" in want["cad_number"].tolist()
-
-
-def test_escalation_gate_closed_unreachable_emits_no_rows(spark, images):
-    """With the layer gate closed and NOTHING within the largest
-    escalation disk, an image emits zero rows (the documented huge-layer
-    semantics) instead of a misleading partial ranking."""
-    from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
-
-    cen = spark.createDataFrame(
-        pd.DataFrame(SPARSE_CENTROIDS, columns=["cad_number", "clon", "clat"])
-    )
-    out = knn_grid(
-        images, cen, TESTDATA_BOX, k=3, res=9, disk=1,
-        escalate=(2,), layer_fallback=False,
-    ).toPandas()
-    # the cluster is one res-9 cell; only images within the escalated
-    # exact disk of it get rows, and those rows are true kNN
-    assert 0 < len(out) < 300 * 3
-    brute = knn_bruteforce(images, cen, TESTDATA_BOX, k=3).toPandas()
-    merged = out.merge(brute, on=["image_id", "rank"], suffixes=("", "_b"))
-    assert (merged["cad_number"] == merged["cad_number_b"]).all()
-
-
 def test_escalation_auto_gate_opens_for_small_layer(spark, images):
-    """layer_fallback=None (auto) must open the gate for a 5-row layer:
-    every image emits exactly k rows even at res 9 / disk 1."""
+    """layer_fallback=None (the guarded collect) must accept a 5-row
+    layer: every image emits exactly k true-kNN rows even at res 9 /
+    disk 1."""
     from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
 
     cen = spark.createDataFrame(
@@ -265,60 +187,30 @@ def test_escalation_auto_gate_opens_for_small_layer(spark, images):
     assert got == want and len(got) == 300 * 3
 
 
-def test_escalation_levels_compute_each_heavy_map_once(spark, images):
-    """Each escalation level's candidates map (a collect_list over the
-    (2*outer+1)^2 centroid explode) must appear in the physical plan
-    exactly once.  The level-i map previously ALSO fed level i+1's
-    frontier filter, and Spark has no cross-subplan aggregate reuse
-    (measured: zero ReusedExchange), so every heavy explode ran twice;
-    the filter now reads a list-free counts-only lineage instead."""
-    from rosreestr_xml_to_gis_converter_spark.plans import plan_checks
+def test_escalation_auto_gate_closes_on_small_broadcast_cap(spark, images, monkeypatch):
+    """The guarded collect (layer_fallback=None) derives its row cap from
+    BROADCAST_COVER_MAX_BYTES and ``disk``: with the cap shrunk to 3 rows
+    at disk 1, a 5-centroid layer raises LayerTooLargeError naming the
+    cap and ``layer_fallback=True`` before the layer table is built or
+    anything is broadcast.  ``layer_fallback=False`` is rejected."""
+    from rosreestr_xml_to_gis_converter_spark.operators import knn
     from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
 
     cen = spark.createDataFrame(
         pd.DataFrame(SPARSE_CENTROIDS, columns=["cad_number", "clon", "clat"])
     )
-    df = knn_grid(
-        images, cen, TESTDATA_BOX, k=3, res=9, disk=1,
-        escalate=(2, 4), layer_fallback=False,
-    )
-    pc = plan_checks(df, execute=True)
-    # 3 levels -> exactly 3 partial collect_list aggregations (one per
-    # broadcast map); a recomputing plan shows 5 (base is filter-fed
-    # twice at two ladder steps)
-    n_heavy = pc.final.count("partial_collect_list")
-    assert n_heavy == 3, f"expected 3 collect_list maps, plan has {n_heavy}"
 
+    def boom(*_a, **_k):
+        raise AssertionError("nothing may be built or broadcast over the cap")
 
-def test_escalation_auto_gate_closes_on_small_broadcast_cap(spark, images):
-    """The AUTO gate (layer_fallback=None) must close when the layer
-    exceeds layer_fallback_max_rows and route through the escalation
-    ladder: with a cap of 3 rows against a 5-centroid layer, the output
-    must be byte-equal to the explicit gate-closed ladder, and every
-    emitted row oracle-exact vs brute force."""
-    from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
-
-    cen = spark.createDataFrame(
-        pd.DataFrame(SPARSE_CENTROIDS, columns=["cad_number", "clon", "clat"])
-    )
-    auto = knn_grid(
-        images, cen, TESTDATA_BOX, k=3, res=9, disk=1,
-        layer_fallback=None, layer_fallback_max_rows=3,
-    ).toPandas()
-    explicit = knn_grid(
-        images, cen, TESTDATA_BOX, k=3, res=9, disk=1,
-        escalate=(2, 4), layer_fallback=False,
-    ).toPandas()
-    key = ["image_id", "rank"]
-    a = auto.sort_values(key).reset_index(drop=True)
-    b = explicit.sort_values(key).reset_index(drop=True)
-    assert a[["image_id", "rank", "cad_number"]].equals(
-        b[["image_id", "rank", "cad_number"]]
-    )
-    brute = knn_bruteforce(images, cen, TESTDATA_BOX, k=3).toPandas()
-    merged = a.merge(brute, on=key, suffixes=("", "_b"))
-    assert len(merged) == len(a)
-    assert (merged["cad_number"] == merged["cad_number_b"]).all()
+    monkeypatch.setattr(knn, "BROADCAST_COVER_MAX_BYTES", 3 * (25 + 24 * 9) + 1)
+    monkeypatch.setattr(knn, "_layer_table", boom)
+    monkeypatch.setattr(spark.sparkContext, "broadcast", boom)
+    assert knn._max_layer_rows(1) == 3
+    with pytest.raises(knn.LayerTooLargeError, match=r"more than 3 rows.*layer_fallback=True"):
+        knn_grid(images, cen, TESTDATA_BOX, k=3, res=9, disk=1)
+    with pytest.raises(ValueError, match="removed"):
+        knn_grid(images, cen, TESTDATA_BOX, k=3, res=9, disk=1, layer_fallback=False)
 
 
 def _one_img_rows(spark, rows):

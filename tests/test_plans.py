@@ -3,6 +3,7 @@ commits to must hold on real parquet scans."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rosreestr_xml_to_gis_converter_spark.plans import plan_checks
@@ -128,15 +129,18 @@ def test_owner_summary_plan_no_python(spark):
     assert "ObjectHashAggregate" in pc.final or "SortAggregate" in pc.final
 
 
-def test_knn_grid_fallback_single_scan_no_shuffle(spark, sf_dir):
+@pytest.mark.parametrize("query", ["knn_parcels", "knn_escalated"])
+def test_knn_grid_fallback_single_scan_no_shuffle(spark, sf_dir, query):
     """The <k-candidates whole-layer fallback must NOT rescan the image
     side (a covered/frontier union would scan it twice — the bug class
     this pins) and must add no Exchange on the big side: one parquet
     scan of lineitem, one Arrow top-k stage, and no Exchange other than
-    the gate query's dropDuplicates on the lineitem keys."""
-    from rosreestr_xml_to_gis_converter_spark.queries_engine import knn_parcels
+    the gate query's dropDuplicates on the lineitem keys.  ``knn_escalated``
+    leaves every image's base disk short, so all of them take the
+    fallback, with the layer collected behind the default guard."""
+    from rosreestr_xml_to_gis_converter_spark.queries_engine import ENGINE_QUERIES
 
-    df = knn_parcels(spark, sf_dir)
+    df = ENGINE_QUERIES[query](spark, sf_dir)
     pc = plan_checks(df, execute=True)
     # every image row is ranked in exactly one Python (Arrow) stage
     assert pc.python_stages() == 1
