@@ -20,4 +20,3 @@ salting / checkpoint logic.  See SURVEY.md for the full design.
 from rosreestr_xml_to_gis_converter_spark.session import get_spark
 
 __all__ = ["get_spark"]
-__version__ = "0.1.0"

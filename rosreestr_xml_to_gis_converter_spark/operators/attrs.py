@@ -1,26 +1,27 @@
 """Attribute-row operators: the reference's owner-aggregation matrix as a
-declarative groupBy + higher-order-function branch tree.
+higher-order-function branch tree over one document's rights rows.
 
 Re-expresses the full branch tree of /root/reference/real_estate.py:183-452
-(KVZU family) and :1076-1239 (the separate EGRN tree) over a normalized
-per-right rows table
+(KVZU family) and :1076-1239 (the separate EGRN tree).  The tree is one
+Column function, :func:`owner_column`, over a **document-ordered array**
+of :func:`owner_row` structs (``pos`` = position of the row inside the
+parsed ``rights`` array, i.e. XML document order).  Every reference list
+(``list_type_sobstv``, ``list_owner``, ``list_dolei``,
+``doli_two_persons``, ``list_doli_ga``, ``list_sovm_sobsv``,
+``r_type_list``, ``lst_holders``, ...) is rebuilt as a
+``filter``/``transform`` expression over that array — so positional
+pairings (zip, ``[i]`` indexing, ``.index()`` lookups) and the
+last-right's-type gate are computed exactly as the reference's sequential
+code does, in document order, entirely inside WholeStageCodegen.
+
+Two callers build the array: the export maps a parsed document's own
+``rights`` array to it row by row (pipeline.owner_rows), and
+:func:`owner_summary` collects it from a normalized per-right rows table
 
     rights(doc_id, right_type, owner, share_den, share_text[, share_num,
            pos, rec_first, is_egrn])
 
-Round-4 realization (replaces the round-1..3 scalar-aggregate CASE): the
-rows of a document are collected once into a **document-ordered array**
-(``pos`` = position of the row inside the parsed ``rights`` array, i.e.
-XML document order) and every reference list (``list_type_sobstv``,
-``list_owner``, ``list_dolei``, ``doli_two_persons``, ``list_doli_ga``,
-``list_sovm_sobsv``, ``r_type_list``, ``lst_holders``, ...) is rebuilt
-as a ``filter``/``transform`` expression over that array — so positional
-pairings (zip, ``[i]`` indexing, ``.index()`` lookups) and the
-last-right's-type gate are computed exactly as the reference's sequential
-code does, in document order, entirely inside WholeStageCodegen.  One
-hash aggregation per document; array sizes are bounded by
-rights-per-document (single digits in real extracts), so the collected
-struct array costs the same shuffle as the old scalar aggregate.
+with one hash aggregation per document.
 
 Row classification (real_estate.py:210-222):
 * 'пропорциональн...' share texts contribute NO share (the row still
@@ -78,8 +79,8 @@ Branch tree for 'Долевая собственность' (:381-431), in refer
   with the types-only and 1-distinct-type branches).
 
 The EGRN extract family has its OWN owner tree (:1076-1239), applied when
-the document's ``is_egrn`` flag is set (source_schema land_record /
-build_record — rights_table derives it):
+the document's EGRN flag is set (source_schema land_record /
+build_record, :func:`is_egrn`):
   r_type_list = type per record (document order, :1092-1096);
   lst_holders = holders of NON-shared records (:1178-1209; the 'another'
   holder kind appends NOTHING, :1206-1207, so a record of it shifts the
@@ -157,6 +158,29 @@ def _empty() -> Column:
     return F.array().cast("array<string>")
 
 
+def owner_row(
+    pos: Column,
+    right_type: Column,
+    owner: Column,
+    share_den: Column,
+    share_text: Column,
+    share_num: Column,
+    rec_first: Column,
+) -> Column:
+    """One rights row as :func:`owner_column` reads it.  The struct sorts
+    on ``pos`` first, so ``array_sort`` puts a document's rows in XML
+    document order."""
+    return F.struct(
+        pos.cast("long").alias("pos"),
+        right_type.alias("rt"),
+        owner.alias("owner"),
+        share_den.cast("int").alias("den"),
+        share_text.alias("txt"),
+        share_num.alias("num"),
+        rec_first.alias("rf"),
+    )
+
+
 def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
     """rights x parcels(doc_id, category, district_name) -> (doc_id, owner).
 
@@ -167,6 +191,8 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
     order; without it rows order deterministically by content),
     ``rec_first`` (first row of each right record; without it every row
     counts as its own record) and ``is_egrn`` (route to the EGRN tree).
+    The rows of each document are collected into the array
+    :func:`owner_column` reads.
     """
     for col, default in (
         ("share_text", F.lit(None).cast("string")),
@@ -182,25 +208,37 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
         if col not in rights.columns:
             rights = rights.withColumn(col, default)
 
-    row_struct = F.struct(
-        F.col("pos").cast("long").alias("pos"),
-        F.col("right_type").alias("rt"),
-        F.col("owner").alias("owner"),
-        F.col("share_den").cast("int").alias("den"),
-        F.col("share_text").alias("txt"),
-        F.col("share_num").alias("num"),
-        F.col("rec_first").alias("rf"),
+    row = owner_row(
+        *[F.col(c) for c in
+          ("pos", "right_type", "owner", "share_den", "share_text", "share_num", "rec_first")]
     )
     g = rights.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_all"),
         # struct sort: pos first (document order); with the pos=0
         # fallback the remaining fields give a deterministic content order
-        F.array_sort(F.collect_list(row_struct)).alias("rows"),
+        F.array_sort(F.collect_list(row)).alias("rows"),
         F.max(F.when(F.col("is_egrn"), 1).otherwise(0)).alias("egrn_flag"),
     )
-    j = parcels.join(g, "doc_id", "left")
+    owner = owner_column(
+        F.col("rows"), F.col("egrn_flag") == 1, F.col("category"), F.col("district_name")
+    )
+    return parcels.join(g, "doc_id", "left").select("doc_id", owner.alias("owner"))
 
-    rows = F.col("rows")
+
+def owner_column(rows: Column, egrn: Column, category: Column, district: Column) -> Column:
+    """The owner string of one document: the branch tree over ``rows``,
+    its document-ordered :func:`owner_row` array (null or empty when the
+    document has no rights), with ``egrn`` routing to the EGRN tree and
+    ``category``/``district`` feeding the no-owner defaults.
+
+    The tree reads ``rows`` a dozen times; a one-element ``transform``
+    binds it to a lambda variable, so a computed ``rows`` expression is
+    planned and evaluated once instead of being copied into every use."""
+    return F.get(
+        F.transform(F.array(rows), lambda r: _owner_tree(r, egrn, category, district)), 0
+    )
+
+
+def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) -> Column:
     recs = F.filter(rows, lambda r: r["rf"])  # first row of each record
 
     def nn(c: Column) -> Column:
@@ -264,9 +302,9 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
     # empty cell_owner -> category/district defaults (:363-380) are
     # APPENDED before the dispatch, so they ride the final join too
     default_owner = F.when(
-        F.col("category").isin("Земли лесного фонда", "Земли водного фонда"),
+        category.isin("Земли лесного фонда", "Земли водного фонда"),
         F.lit("Собственность РФ"),
-    ).otherwise(district_administration(F.col("district_name")))
+    ).otherwise(district_administration(district))
     cell_owner_final = F.when(F.size(cell_owner) > 0, cell_owner).otherwise(
         F.when(nn(default_owner), F.array(default_owner)).otherwise(_empty())
     )
@@ -308,7 +346,6 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
     )
     eg_n = F.size(eg_shared)
     eg_ns = F.size(share_list)
-    egrn_doc = F.col("egrn_flag") == 1
 
     # 'один человек собственник всех долей + сервитут' (:440-449)
     vse_entries = F.transform(
@@ -330,20 +367,21 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
         ),
     ).otherwise(F.lit(""))
 
-    owner = (
+    return (
         # no rights rows at all -> the pre-dispatch defaults are all that
-        # can fire (:363-380); '' when neither matches
+        # can fire (:363-380); '' when neither matches.  The null test
+        # comes first: size(null) is -1 or null depending on ANSI mode
         F.when(
-            F.col("n_all").isNull() | (F.col("n_all") == 0),
+            rows.isNull() | (F.size(rows) == 0),
             F.coalesce(default_owner, F.lit("")),
         )
         # ---- EGRN tree (:1217-1239) ----
         .when(
-            egrn_doc & nn(type_gate) & (F.size(eg_holders) > 0),
+            egrn & nn(type_gate) & (F.size(eg_holders) > 0),
             F.array_join(eg_cells, ", "),
         )
         .when(
-            egrn_doc & nn(type_gate) & (eg_n > 0) & (type_gate == EGRN_SHARED),
+            egrn & nn(type_gate) & (eg_n > 0) & (type_gate == EGRN_SHARED),
             F.when(
                 (eg_n > 2) & nn(eg_max_den),
                 # the reference's no-space-before-paren quirk (:1222-1223)
@@ -383,9 +421,9 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
             .when(eg_n == 1, F.concat(type_gate, F.lit(": "), F.get(eg_shared, 0)))
             .otherwise(F.lit("")),  # unhandled combinations
         )
-        .when(egrn_doc & nn(type_gate) & (eg_n > 0), F.lit(""))  # gate not shared
-        .when(egrn_doc & nn(type_gate), type_gate)  # shared records, zero holders
-        .when(egrn_doc, F.lit(""))
+        .when(egrn & nn(type_gate) & (eg_n > 0), F.lit(""))  # gate not shared
+        .when(egrn & nn(type_gate), type_gate)  # shared records, zero holders
+        .when(egrn, F.lit(""))
         # ---- KVZU shared block (:381-431) ----
         # B1 (:382-386): cell_owner[0] built from the RAW owner string
         .when(
@@ -491,13 +529,15 @@ def owner_summary(rights: DataFrame, parcels: DataFrame) -> DataFrame:
         .when(F.size(cell_owner_final) == 0, F.lit(""))
         .otherwise(F.array_join(cell_owner_final, ", "))
     )
-    return j.select("doc_id", owner.alias("owner"))
 
 
-def _lit_map(mapping: dict[str, str]) -> Column:
-    from pyspark.sql import functions as F
-
-    return F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
+def is_egrn(parcels: DataFrame) -> Column:
+    """True for the EGRN extract family (source_schema land_record /
+    build_record), whose owner tree and rights strings differ from the
+    KVZU family's."""
+    if "source_schema" not in parcels.columns:
+        return F.lit(False)
+    return F.col("source_schema").isin("land_record", "build_record")
 
 
 def with_rights_strings(parcels: DataFrame) -> DataFrame:
@@ -534,7 +574,7 @@ def with_rights_strings(parcels: DataFrame) -> DataFrame:
       EGRN (:1402-1449): 'name №number от date, term' when all four
       parts are present, ', '-joined, '-' when empty.
     """
-    from rosreestr_xml_to_gis_converter_spark.classifiers import ENCUMBRANCE, RIGHT
+    from rosreestr_xml_to_gis_converter_spark.classifiers import ENCUMBRANCE, RIGHT, label_map
 
     # the staged temps below would silently overwrite (and the final
     # temp-drop rule would then keep) an input column with a colliding
@@ -546,13 +586,9 @@ def with_rights_strings(parcels: DataFrame) -> DataFrame:
             "operator's _w_-prefixed staging temps; rename them first"
         )
 
-    right_map = _lit_map(RIGHT)
-    enc_map = _lit_map(ENCUMBRANCE)
-    egrn = (
-        F.col("source_schema").isin("land_record", "build_record")
-        if "source_schema" in parcels.columns
-        else F.lit(False)
-    )
+    right_map = label_map(RIGHT)
+    enc_map = label_map(ENCUMBRANCE)
+    egrn = is_egrn(parcels)
 
     def entries(arr_col, fn):
         return F.filter(F.transform(arr_col, fn), lambda x: x.isNotNull())

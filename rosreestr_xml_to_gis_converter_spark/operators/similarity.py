@@ -402,23 +402,30 @@ def embedding_near_dup_pairs(
     The signature is the :func:`lsh_topk` numpy kernel, run in one
     ``mapInArrow`` stage that passes ``(id, vec)`` through; quantizing,
     banding, the self-join and the verify stay Column expressions.
-    Pass ``dim`` explicitly on large tables — the fallback probes one row
-    driver-side to learn it."""
+    ``dim=None`` signs each vector with the hyperplanes of its own length
+    (one plane set per length, built in the kernel); an explicit ``dim``
+    gives any vector of another length signature 0."""
     if bands is not None and (bands < 2 or bands > n_planes):
         # bands > n_planes would make every band width 0 (mask 0): every
         # row collides in every band and the equi-self-join degenerates
         # into an O(n^2) cross product
         raise ValueError(f"bands must be in [2, n_planes={n_planes}], got {bands}")
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    tables = [_planes(seed, n_planes, dim)]
 
     def with_sig(batches):
         import pyarrow as pa
 
+        planes: dict[int, list] = {}
         for batch in batches:
+            v = _unpack(batch.column(1))
+            _, _, length, ok = v
+            widths = [dim] if dim is not None else np.unique(length[ok]).tolist()
+            sig = np.zeros(len(ok), dtype=np.int64)
             with np.errstate(all="ignore"):
-                sig = _signatures(_unpack(batch.column(1)), dim, tables)[:, 0]
+                for w in widths:
+                    if w not in planes:
+                        planes[w] = [_planes(seed, n_planes, w)]
+                    # rows of another length get 0 from _signatures
+                    sig += _signatures(v, w, planes[w])[:, 0]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1), pa.array(sig)], names=["id", "vec", "sig"]
             )

@@ -1,27 +1,46 @@
 """End-to-end pipelines — the engine's analog of the reference's entry
 points (SURVEY.md section 3).
 
-EP1 ``start_conv`` (/root/reference/main.py:227-483) becomes three
-composable stages, each a DataFrame transform:
+EP1 ``start_conv`` (reference main.py:227-483) becomes composable
+DataFrame stages:
 
-  build_parcel_layer : XML extracts -> parcels + contours + error bucket
-  spatial_join       : images x indexed parcel layer -> containment rows
-  write_outputs      : checkpointed, resumable table writes with
-                       lineage/metrics (replaces XLSX/SHP sinks K1/K2)
+  build_parcel_layer  : XML extracts -> parcels + error bucket
+  finalize_attributes : classifier codes -> the reference's output strings
+  contours_of         : parcels -> one row per contour (the cover input)
+  export_outputs      : one per-document pass -> SHP (K1) + XLSX (K2)
+  convert_extracts    : parse -> cover -> spatial join + tile masks ->
+                        checkpointed, resumable table writes
 
-The returned summary mirrors the reference's final report (ok /
+``convert_extracts`` returns the reference's final report (ok /
 unsupported counts + wall seconds, main.py:471-483) as data instead of a
-message box.
+message box.  ``rename_plan`` is EP2 (``rename_xml``).
 """
 
 from __future__ import annotations
 
+import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rosreestr_xml_to_gis_converter_spark import sinks
 from rosreestr_xml_to_gis_converter_spark.checkpoint import CheckpointedWriter
+from rosreestr_xml_to_gis_converter_spark.classifiers import (
+    LAND_CATEGORY,
+    REGION,
+    RIGHT,
+    STATUS,
+    UTILIZATION,
+    label_map,
+)
+from rosreestr_xml_to_gis_converter_spark.functions.geometry import unpack_rings
+from rosreestr_xml_to_gis_converter_spark.operators.attrs import (
+    is_egrn,
+    owner_column,
+    owner_row,
+    with_rights_strings,
+)
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import (
     build_parcel_cover,
     spatial_join,
@@ -31,27 +50,11 @@ from rosreestr_xml_to_gis_converter_spark.sources.xml_extract import parse_extra
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
 
 
-def build_parcel_layer(
-    files: DataFrame,
-    classifiers: dict[str, DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(path, content) XML rows -> (parcels, errors).
-
-    ``classifiers``: optional {column -> dim(code,label)} broadcast joins
-    replacing the reference's per-object CSV dict lookups
-    (/root/reference/real_estate.py:32-37); missing codes get '-'
-    (real_estate.py:899).
-    """
+def build_parcel_layer(files: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(path, content) XML rows -> (parcels, errors)."""
     rows = parse_extracts(files)
     errors = rows.filter(F.col("error").isNotNull()).select("doc_id", "error")
     parcels = rows.filter(F.col("error").isNull())
-    for col, dim in (classifiers or {}).items():
-        parcels = parcels.join(
-            F.broadcast(dim), parcels[f"{col}_code"] == dim["code"], "left"
-        ).select(
-            *[c for c in parcels.columns],
-            F.coalesce(dim["label"], F.lit("-")).alias(col),
-        )
     return parcels, errors
 
 
@@ -68,8 +71,6 @@ def rename_plan(parcels: DataFrame, order_col: str = "doc_id") -> DataFrame:
         F.lit("---"),
         F.regexp_replace(F.coalesce("extract_date", F.lit("")), r"\.", "-"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy(key).orderBy(order_col)
     rn = F.row_number().over(w)
     new_name = F.when(
@@ -84,50 +85,50 @@ def rename_plan(parcels: DataFrame, order_col: str = "doc_id") -> DataFrame:
     )
 
 
+def owner_rows() -> Column:
+    """The parsed ``rights`` array as the document-ordered
+    ``owner_row`` array the owner tree reads (operators/attrs.py).  KVZU
+    rights carry codes, resolved against the RIGHT classifier
+    (real_estate.py:208); EGRN rights carry the label text already
+    (real_estate.py:1094-1096).
+
+    ``pos`` is the element's index in ``rights``, i.e. XML DOCUMENT
+    ORDER — the owner tree's positional pairings and the last-right's-type
+    gate depend on it; ``rec_first`` marks the first row of each right
+    record (shares/types count per record).  Null when ``rights`` is."""
+    right_map = label_map(RIGHT)
+    return F.transform(
+        "rights",
+        lambda r, i: owner_row(
+            i,
+            F.coalesce(r["right_type"], F.element_at(right_map, r["right_code"])),
+            r["owner"],
+            r["share_den"],
+            r["share_text"],
+            r["share_num"],
+            F.coalesce(r["rec_first"], F.lit(True)),
+        ),
+    )
+
+
 def rights_table(parcels: DataFrame) -> DataFrame:
-    """Parcel rows -> normalized per-right rows for the owner matrix
-    (operators/attrs.py).  KVZU rights carry codes (resolved against the
-    RIGHT classifier, real_estate.py:208), EGRN rights carry the label
-    text already (real_estate.py:1094-1096).
-
-    ``pos`` is the row's index in the parsed ``rights`` array, i.e. XML
-    DOCUMENT ORDER — owner_summary's positional pairings and the
-    last-right's-type gate depend on it; ``rec_first`` marks the first
-    row of each right record (shares/types count per record);
-    ``is_egrn`` routes the document to the reference's separate EGRN
-    owner tree (real_estate.py:1076-1239)."""
-    from rosreestr_xml_to_gis_converter_spark.classifiers import RIGHT, dim
-
-    egrn = F.col("source_schema").isin("land_record", "build_record") \
-        if "source_schema" in parcels.columns else F.lit(False)
-    r = parcels.select(
-        "doc_id", egrn.alias("is_egrn"), F.posexplode("rights").alias("pos", "r")
+    """Parcel rows -> normalized per-right rows for ``owner_summary``:
+    :func:`owner_rows` exploded, plus ``is_egrn``, which routes the
+    document to the reference's separate EGRN owner tree
+    (real_estate.py:1076-1239)."""
+    r = F.col("r")
+    return parcels.select(
+        "doc_id", is_egrn(parcels).alias("is_egrn"), F.explode(owner_rows()).alias("r")
     ).select(
         "doc_id",
+        r["rt"].alias("right_type"),
+        r["owner"].alias("owner"),
+        r["num"].alias("share_num"),
+        r["den"].alias("share_den"),
+        r["txt"].alias("share_text"),
+        r["pos"].alias("pos"),
+        r["rf"].alias("rec_first"),
         "is_egrn",
-        "pos",
-        F.col("r.right_code").alias("right_code"),
-        F.col("r.right_type").alias("right_type_raw"),
-        F.col("r.owner").alias("owner"),
-        F.col("r.share_num").alias("share_num"),
-        F.col("r.share_den").cast("int").alias("share_den"),
-        F.col("r.share_text").alias("share_text"),
-        F.coalesce(F.col("r.rec_first"), F.lit(True)).alias("rec_first"),
-    )
-    d = dim(parcels.sparkSession, RIGHT)
-    return (
-        r.join(F.broadcast(d), r.right_code == d.code, "left")
-        .select(
-            "doc_id",
-            F.coalesce("right_type_raw", "label").alias("right_type"),
-            "owner",
-            "share_num",
-            "share_den",
-            "share_text",
-            "pos",
-            "rec_first",
-            "is_egrn",
-        )
     )
 
 
@@ -136,7 +137,7 @@ _CLEANUP = r"^\s+|\n|\r|\s+$"  # main.py:356-367
 
 def finalize_attributes(parcels: DataFrame) -> DataFrame:
     """Resolve classifier codes to the reference's output strings — the
-    J1 broadcast joins plus the coalesce fallback chains:
+    J1 classifier lookups plus the coalesce fallback chains:
 
     * status: EGRN text, else the STATUS classifier on the State code
       (real_estate.py:123-133, :1019-1026);
@@ -147,34 +148,15 @@ def finalize_attributes(parcels: DataFrame) -> DataFrame:
     * address: Note, else region-classifier + district + locality
       fallback concatenation (:824-858).
 
-    All pure Column expressions over one-time broadcast dims (the
+    All pure Column expressions over literal classifier maps (the
     reference re-reads the CSVs per object, real_estate.py:32-37).
     """
-    from rosreestr_xml_to_gis_converter_spark.classifiers import (
-        LAND_CATEGORY,
-        REGION,
-        STATUS,
-        UTILIZATION,
-        dim,
-    )
 
-    spark = parcels.sparkSession
-    p = parcels
-    for col, mapping in (
-        ("status", STATUS),
-        ("category", LAND_CATEGORY),
-        ("permitted_use", UTILIZATION),
-        ("region", REGION),
-    ):
-        d = (
-            dim(spark, mapping)
-            .withColumnRenamed("code", f"_{col}_code")
-            .withColumnRenamed("label", f"_{col}_label")
-        )
-        p = p.join(
-            F.broadcast(d), p[f"{col}_code"] == d[f"_{col}_code"], "left"
-        ).drop(f"_{col}_code")
+    def label(mapping: dict[str, str], code: str) -> Column:
+        return F.element_at(label_map(mapping), F.col(code))
 
+    # staged once: the address chain reads it up to six times
+    p = parcels.withColumn("_region_label", label(REGION, "region_code"))
     region_label = F.col("_region_label")
     district = F.concat_ws(" ", F.col("district_name"), F.col("district_type"))
     locality = F.concat_ws(" ", F.col("locality_type"), F.col("locality_name"))
@@ -211,12 +193,15 @@ def finalize_attributes(parcels: DataFrame) -> DataFrame:
     )
     clean = lambda c: F.regexp_replace(c, _CLEANUP, "")  # noqa: E731
     return (
-        p.withColumn("status", clean(F.coalesce("status", "_status_label", F.lit("-"))))
+        p.withColumn(
+            "status", clean(F.coalesce("status", label(STATUS, "status_code"), F.lit("-")))
+        )
         .withColumn(
             "category",
             F.when(F.col("category_code") == "-", F.lit("-")).otherwise(
                 F.coalesce(
-                    "_category_label", F.lit(LAND_CATEGORY["003008000000"])
+                    label(LAND_CATEGORY, "category_code"),
+                    F.lit(LAND_CATEGORY["003008000000"]),
                 )
             ),
         )
@@ -224,12 +209,14 @@ def finalize_attributes(parcels: DataFrame) -> DataFrame:
             "permitted_use",
             clean(
                 F.coalesce(
-                    "permitted_use_by_doc", "_permitted_use_label", F.lit("-")
+                    "permitted_use_by_doc",
+                    label(UTILIZATION, "permitted_use_code"),
+                    F.lit("-"),
                 )
             ),
         )
         .withColumn("address", clean(address))
-        .drop("_status_label", "_category_label", "_permitted_use_label", "_region_label")
+        .drop("_region_label")
     )
 
 
@@ -268,97 +255,6 @@ def contours_of(parcels: DataFrame) -> DataFrame:
     )
 
 
-def reference_output_rows(parcels: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Parsed parcels -> (xlsx_rows, shp_rows): the reference's two
-    denormalized outputs as DataFrames (main.py:379-454).
-
-    * xlsx_rows: one row per object, or one per entry parcel for
-      composite parcels with the parent CN in column B (main.py:416-454);
-    * shp_rows: one row per contour, key split into (CadNumber,
-      NumOfCont) by the '('/':'-branch logic (main.py:394-406), with the
-      parent CN blanked when equal (main.py:400-404).
-
-    All pure Column expressions; the sinks stream these with
-    ``toLocalIterator`` — the export is final-mile, the engine sink
-    stays parquet/Iceberg.
-    """
-    from rosreestr_xml_to_gis_converter_spark.operators.attrs import (
-        owner_summary,
-        with_rights_strings,
-    )
-
-    p = with_rights_strings(finalize_attributes(parcels))
-    own = owner_summary(
-        rights_table(p), p.select("doc_id", "category", "district_name")
-    ).withColumnRenamed("owner", "owner_str")
-    p = p.join(own, "doc_id", "left")
-    estate = F.coalesce(F.array_join("estate_objects", ", "), F.lit(""))
-    common = [
-        F.col("area"),
-        F.col("address"),
-        F.col("status"),
-        F.col("category"),
-        F.col("permitted_use"),
-        F.coalesce("owner_str", F.lit("")).alias("owner"),
-        F.col("own_name_reg_numb_date"),
-        F.col("encumbrances_str"),
-        F.col("enc_name_reg_numb_date_duration"),
-        F.coalesce(F.regexp_replace("special_notes", _CLEANUP, ""), F.lit("")).alias(
-            "special"
-        ),
-        F.col("date_reg"),
-        F.col("extract_date"),
-        estate.alias("estate_objects_str"),
-        F.coalesce("cadastral_cost", F.lit("")).alias("cadastral_cost"),
-        F.col("obj_type"),
-    ]
-    entry = F.explode_outer("entry_parcels").alias("entry_cn")
-    xlsx_rows = p.select(F.col("cad_number").alias("parent_cn"), entry, *common).select(
-        F.coalesce(F.col("entry_cn"), F.col("parent_cn")).alias("cad_number"),
-        F.when(F.col("entry_cn").isNotNull(), F.col("parent_cn"))
-        .otherwise(F.lit("-"))
-        .alias("parent_cad_number"),
-        *[c if isinstance(c, str) else c for c in [
-            "area", "address", "status", "category", "permitted_use", "owner",
-            "own_name_reg_numb_date", "encumbrances_str",
-            "enc_name_reg_numb_date_duration", "special", "date_reg",
-            "extract_date", "estate_objects_str", "cadastral_cost", "obj_type",
-        ]],
-    )
-
-    ct = p.select(
-        F.col("cad_number").alias("parent_cn"), F.explode("contours").alias("c"), *common
-    )
-    key = F.col("c.geom_key")
-    paren = F.instr(key, "(")
-    # main.py:394-406 key-splitting branches
-    shp_cad = (
-        F.when(paren > 0, F.substring(key, F.lit(1), paren - 1))
-        .when(~key.contains(":"), F.col("parent_cn"))
-        .otherwise(key)
-    )
-    num_of_cont = (
-        F.when(paren > 0, F.substr(key, paren))
-        .when(~key.contains(":"), key)
-        .otherwise(F.lit(""))
-    )
-    shp_rows = ct.select(
-        shp_cad.alias("cad_number"),
-        F.when(F.col("parent_cn") == shp_cad, F.lit(""))
-        .otherwise(F.col("parent_cn"))
-        .alias("parent_cad_number"),
-        num_of_cont.alias("num_of_cont"),
-        *[
-            "area", "address", "status", "category", "permitted_use", "owner",
-            "own_name_reg_numb_date", "encumbrances_str",
-            "enc_name_reg_numb_date_duration", "special", "date_reg",
-            "extract_date", "estate_objects_str", "cadastral_cost", "obj_type",
-        ],
-        F.col("c.geom").alias("geom"),
-    )
-    return xlsx_rows, shp_rows
-
-
 def _ru_date(s: str | None):
     """dd.mm.yyyy -> datetime.date with the (1,1,1) default
     (main.py:384-393)."""
@@ -370,44 +266,87 @@ def _ru_date(s: str | None):
     return datetime.date(int(y), int(m), int(d))
 
 
+def _shp_key(key: str | None, parent: str | None) -> tuple[str | None, str]:
+    """A contour key -> (CadNumber, NumOfCont), the reference's
+    key-splitting branches (main.py:394-406): 'CN(n)' splits at the
+    paren, a key without ':' is a contour number of the parent, any other
+    key is its own CN."""
+    if key is None:
+        return None, ""
+    paren = key.find("(")
+    if paren >= 0:
+        return key[:paren], key[paren:]
+    if ":" not in key:
+        return parent, key
+    return key, ""
+
+
+def document_rows(parcels: DataFrame) -> DataFrame:
+    """Parsed parcels -> one export row per document: ``cad_number``,
+    ``entry_parcels``, ``contours`` and the reference's 15 shared
+    attribute columns, ``owner`` included (main.py:379-454).  Every
+    column is a per-row expression over the document's own row, so the
+    plan has no join and no exchange."""
+    p = with_rights_strings(finalize_attributes(parcels))
+    owner = owner_column(owner_rows(), is_egrn(p), F.col("category"), F.col("district_name"))
+    return p.select(
+        "cad_number",
+        "entry_parcels",
+        "contours",
+        "area",
+        "address",
+        "status",
+        "category",
+        "permitted_use",
+        F.coalesce(owner, F.lit("")).alias("owner"),
+        "own_name_reg_numb_date",
+        "encumbrances_str",
+        "enc_name_reg_numb_date_duration",
+        F.coalesce(F.regexp_replace("special_notes", _CLEANUP, ""), F.lit("")).alias(
+            "special"
+        ),
+        "date_reg",
+        "extract_date",
+        F.coalesce(F.array_join("estate_objects", ", "), F.lit("")).alias(
+            "estate_objects_str"
+        ),
+        F.coalesce("cadastral_cost", F.lit("")).alias("cadastral_cost"),
+        "obj_type",
+    )
+
+
 def export_outputs(parcels: DataFrame, out_dir: str, base_name: str = "real_estate_objects_EGRN") -> dict:
     """Final-mile export: SHP (K1) + XLSX (K2) from the parsed layer —
-    the reference's two sinks (main.py:250-342), streamed driver-side."""
-    import os
-
-    from rosreestr_xml_to_gis_converter_spark.functions.geometry import unpack_rings
-    from rosreestr_xml_to_gis_converter_spark.sinks import write_shapefile, write_xlsx
-
+    the reference's two sinks (main.py:250-342).  :func:`document_rows`
+    is streamed once with ``toLocalIterator``, and the loop below expands
+    each document into its XLSX rows (one per object, or one per entry parcel
+    with the parent CN in column B, main.py:416-454) and its SHP records
+    (one per contour, key split by :func:`_shp_key`, parent CN blanked
+    when equal, main.py:394-406).  The export is final-mile; the engine
+    sink stays parquet/Iceberg."""
     os.makedirs(out_dir, exist_ok=True)
-    xlsx_rows, shp_rows = reference_output_rows(parcels)
-
-    def shp_records():
-        for r in shp_rows.filter(F.col("geom").isNotNull()).toLocalIterator():
-            rings = unpack_rings(r.geom)
+    shp, xlsx = [], []
+    for r in document_rows(parcels).toLocalIterator():
+        cad, common = r.cad_number, list(r[3:])  # the 15 shared columns, XLSX order
+        for entry in r.entry_parcels or [None]:
+            if entry is None:
+                xlsx.append([cad, "-", *common])
+            else:
+                xlsx.append([entry, cad, *common])
+        for c in r.contours or []:
+            if c.geom is None:
+                continue
+            shp_cad, num_of_cont = _shp_key(c.geom_key, cad)
+            parent = "" if cad is not None and cad == shp_cad else cad
+            # the same columns, with Area as a number and the two dates
+            # as dates
             attrs = [
-                r.cad_number, r.parent_cad_number, r.num_of_cont,
-                float(r.area) if r.area else 0.0,
-                r.address, r.status, r.category, r.permitted_use, r.owner,
-                r.own_name_reg_numb_date, r.encumbrances_str,
-                r.enc_name_reg_numb_date_duration, r.special,
-                _ru_date(r.date_reg), _ru_date(r.extract_date),
-                r.estate_objects_str, r.cadastral_cost, r.obj_type,
+                shp_cad, parent, num_of_cont, float(r.area) if r.area else 0.0,
+                *common[1:10], _ru_date(r.date_reg), _ru_date(r.extract_date), *common[12:],
             ]
-            yield rings, attrs
-
-    n_shp = write_shapefile(os.path.join(out_dir, base_name), shp_records())
-
-    def xlsx_data():
-        for r in xlsx_rows.toLocalIterator():
-            yield [
-                r.cad_number, r.parent_cad_number, r.area, r.address, r.status,
-                r.category, r.permitted_use, r.owner, r.own_name_reg_numb_date,
-                r.encumbrances_str, r.enc_name_reg_numb_date_duration, r.special,
-                r.date_reg, r.extract_date, r.estate_objects_str,
-                r.cadastral_cost, r.obj_type,
-            ]
-
-    n_xlsx = write_xlsx(os.path.join(out_dir, base_name + ".xlsx"), xlsx_data())
+            shp.append((unpack_rings(c.geom), attrs))
+    n_shp = sinks.write_shapefile(os.path.join(out_dir, base_name), shp)
+    n_xlsx = sinks.write_xlsx(os.path.join(out_dir, base_name + ".xlsx"), xlsx)
     return {"n_shp_records": n_shp, "n_xlsx_rows": n_xlsx}
 
 
@@ -421,13 +360,12 @@ def convert_extracts(
     tile_px: int = 32,
     run_id: str = "run1",
     n_buckets: int = 16,
-    classifiers: dict[str, DataFrame] | None = None,
 ) -> dict:
     """Full EP1-analog run: parse -> index -> join -> tile -> checkpointed
     writes.  Resumable: rerunning with the same ``out_dir``/``run_id``
     skips completed buckets (checkpoint.py)."""
     t0 = time.time()
-    parcels, errors = build_parcel_layer(files, classifiers)
+    parcels, errors = build_parcel_layer(files)
     parcels = parcels.cache()
     cover = build_parcel_cover(spark, contours_of(parcels), res).cache()
 
@@ -440,7 +378,7 @@ def convert_extracts(
     w_tiles.write(tiles, "cad_number", n_buckets)
     # the attrs table carries the reference's FINAL strings (status/
     # category/permitted_use/address resolved via the shipped classifier
-    # dims), not raw codes — a user of the reference reads this table
+    # maps), not raw codes — a user of the reference reads this table
     # like the XLSX output
     finalize_attributes(parcels).drop("geom", "contours").write.mode(
         "overwrite"

@@ -27,7 +27,6 @@ IMAGES_SCHEMA = T.StructType(
     ]
 )
 
-RING_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 # Geometry transit representation: packed rings (WKB-analog), see
 # functions.geometry.pack_rings.  Nested list columns stay an API-edge
 # convenience only (pyarrow 16 segfaults on null-bearing triple nesting).
@@ -62,24 +61,5 @@ CONTOURS_SCHEMA = T.StructType(
         T.StructField("geom_key", T.StringType(), False),
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("geom", GEOM_TYPE, True),
-    ]
-)
-
-VERTEX_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("su_nmb", T.StringType(), True),
-        T.StructField("x", T.DoubleType(), True),
-        T.StructField("y", T.DoubleType(), True),
-    ]
-)
-
-# spatial-join output row (SURVEY.md section 7 / M1)
-JOIN_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("cad_number", T.StringType(), False),
-        T.StructField("cell", T.LongType(), False),
     ]
 )

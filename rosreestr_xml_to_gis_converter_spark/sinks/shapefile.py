@@ -61,7 +61,10 @@ def _dbf_value(value, ftype: str, length: int, decimals: int, encoding: str) -> 
         return raw.rjust(length, b" ")
     if ftype == "D":
         if isinstance(value, (datetime.date, datetime.datetime)):
-            return value.strftime("%Y%m%d").encode("ascii")
+            # not strftime: glibc's %Y does not zero-pad years below 1000,
+            # and the date(1,1,1) default must still fill all 8 bytes or
+            # every later field of the record shifts
+            return f"{value.year:04d}{value.month:02d}{value.day:02d}".encode("ascii")
         if value:  # ISO yyyy-mm-dd string
             return str(value).replace("-", "")[:8].encode("ascii").ljust(8, b"0")
         return b"00010101"  # the reference's date(1,1,1) default (main.py:384-393)

@@ -91,13 +91,6 @@ TESTDATA_PARCELS: list[tuple[str, float, float, float, float]] = [
 ]
 
 
-def testdata_parcels_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        TESTDATA_PARCELS,
-        columns=["cad_number", "lon_min", "lat_min", "lon_max", "lat_max"],
-    )
-
-
 def testdata_parcels_rings() -> list[tuple[str, list[np.ndarray]]]:
     """Rectangles as the engine's general ring representation (lon,lat),
     closed, outer ring only."""
@@ -239,14 +232,6 @@ def phash_sql(a: str, b: str) -> str:
         f"((({a}) * {_PH_A} + ({b}) * {_PH_B}) % 2147483648) * 4294967296"
         f" + ((({a}) * {_PH_B} + ({b}) * {_PH_A}) % 4294967296)"
     )
-
-
-def phash_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    a = np.asarray(a, dtype=np.int64)
-    b = np.asarray(b, dtype=np.int64)
-    hi = (a * _PH_A + b * _PH_B) % 2147483648
-    lo = (a * _PH_B + b * _PH_A) % 4294967296
-    return hi * 4294967296 + lo
 
 
 # ---------------------------------------------------------------------------

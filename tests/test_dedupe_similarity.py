@@ -204,6 +204,23 @@ def test_embedding_near_dup_pairs_find_planted(spark, emb):
     assert len(planted & got) / len(planted) >= 0.7
 
 
+def test_embedding_near_dup_dim_from_batches(spark, emb):
+    """``dim=None`` learns the width inside the signature kernel: the
+    same pairs as an explicit ``dim``, and building the plan runs no
+    Spark job on the input."""
+    sc = spark.sparkContext
+    sc.setJobGroup("near-dup-dim-none", "plan only")
+    try:
+        lazy = embedding_near_dup_pairs(emb, threshold=0.9, n_planes=8, bands=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("near-dup-dim-none")) == []
+    explicit = embedding_near_dup_pairs(emb, threshold=0.9, n_planes=8, bands=2, dim=32)
+    got = sorted(map(tuple, lazy.toPandas()[["id_a", "id_b", "cosine"]].values.tolist()))
+    want = sorted(map(tuple, explicit.toPandas()[["id_a", "id_b", "cosine"]].values.tolist()))
+    assert got and got == want
+
+
 def test_ivf_topk_planted_and_recall(spark, emb):
     """IVF ANN: (a) an exact twin of each query must surface at rank 1
     with cosine exactly 1.0 (the query's own cell is always probed);

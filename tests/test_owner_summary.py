@@ -8,14 +8,26 @@ positional pairing :1208-1219 and its 'another'-holder shift).
 The randomized parity test compares the Spark implementation against a
 sequential mirror written FROM THE REFERENCE'S CODE (document-ordered
 lists, positional indexing, running type variable) — not from the Spark
-semantics — so reference-fidelity drift fails the test (round-3 ADVICE)."""
+semantics — so reference-fidelity drift fails the test (round-3 ADVICE).
+
+Every fixture runs twice: through ``owner_summary`` over the rights
+table, and through the per-row path the export runs
+(``pipeline.owner_rows`` -> ``owner_column`` over one document's parsed
+``rights`` array); :func:`_owners` asserts both give the same strings."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
 
-from rosreestr_xml_to_gis_converter_spark.operators.attrs import owner_summary
+from pyspark.sql import functions as F
+
+from rosreestr_xml_to_gis_converter_spark.operators.attrs import (
+    is_egrn,
+    owner_column,
+    owner_summary,
+)
+from rosreestr_xml_to_gis_converter_spark.pipeline import owner_rows
 
 SH = "Долевая собственность"
 JT = "Совместная собственность"
@@ -49,7 +61,50 @@ def _run(spark, rights_rows, parcels_rows):
         pd.DataFrame(parcels_rows, columns=["doc_id", "category", "district_name"]),
         schema="doc_id string, category string, district_name string",
     )
-    return {r.doc_id: r.owner for r in owner_summary(rights, parcels).collect()}
+    return _owners(spark, rights, parcels)
+
+
+PARSED_RIGHTS = (
+    "array<struct<right_code:string,right_type:string,owner:string,share_num:string,"
+    "share_den:string,share_text:string,rec_first:boolean>>"
+)
+
+
+def _owners(spark, rights, parcels):
+    """doc_id -> owner from ``owner_summary(rights, parcels)``, asserted
+    equal to the per-row path over the same rows regrouped per document
+    as a parsed ``rights`` array in ``pos`` order (null for a document
+    without rows).  The EGRN flag follows owner_summary's rule:
+    ``is_egrn`` when given, else any row carrying the EGRN shared label;
+    the per-row side gets it as a land_record ``source_schema``."""
+    via_table = {r.doc_id: r.owner for r in owner_summary(rights, parcels).collect()}
+    docs: dict = {}
+    for r in rights.collect():
+        docs.setdefault(r.doc_id, []).append(r.asDict())
+    per_doc = []
+    for p in parcels.collect():
+        rows = sorted(docs.get(p.doc_id, []), key=lambda d: d.get("pos") or 0)
+        if "is_egrn" in rights.columns:
+            egrn = any(d["is_egrn"] for d in rows)
+        else:
+            egrn = any(d["right_type"] == EG for d in rows)
+        parsed = [
+            (None, d["right_type"], d["owner"], d.get("share_num"),
+             None if d["share_den"] is None else str(d["share_den"]),
+             d.get("share_text"), d.get("rec_first", True))
+            for d in rows
+        ]
+        per_doc.append((p.doc_id, p.category, p.district_name,
+                        "land_record" if egrn else "kvzu", parsed or None))
+    df = spark.createDataFrame(
+        per_doc,
+        schema="doc_id string, category string, district_name string, "
+        f"source_schema string, rights {PARSED_RIGHTS}",
+    )
+    owner = owner_column(owner_rows(), is_egrn(df), F.col("category"), F.col("district_name"))
+    via_row = {r.doc_id: r.owner for r in df.select("doc_id", owner.alias("owner")).collect()}
+    assert via_row == via_table
+    return via_table
 
 
 def _parcels(ids, category="Земли населённых пунктов", district="Калининский"):
@@ -198,7 +253,7 @@ def test_single_joint_record_keeps_one_copy(spark):
         pd.DataFrame([("j1", "Прочее", "Калининский")],
                      columns=["doc_id", "category", "district_name"])
     )
-    got = {r.doc_id: r.owner for r in owner_summary(rights, parcels).collect()}
+    got = _owners(spark, rights, parcels)
     assert got["j1"] == f"{JT} Иванов Иван, Иванова Анна, {ADM}"
 
 
@@ -260,7 +315,7 @@ def test_share_text_column_optional(spark):
             columns=["doc_id", "category", "district_name"],
         )
     )
-    got = {r.doc_id: r.owner for r in owner_summary(rights, parcels).collect()}
+    got = _owners(spark, rights, parcels)
     assert got["d1"] == f"{SH} Иванов Иван"
 
 
@@ -567,7 +622,7 @@ def test_egrn_mixed_forces_egrn_tree_via_flag(spark):
         pd.DataFrame([("f1", "Прочее", "Калининский")],
                      columns=["doc_id", "category", "district_name"])
     )
-    got = {r.doc_id: r.owner for r in owner_summary(rights, parcels).collect()}
+    got = _owners(spark, rights, parcels)
     assert got["f1"] == "Собственность Иванов Иван, Аренда Петров Пётр"
 
 
@@ -581,3 +636,108 @@ def pyspark_lit_null_str():
     from pyspark.sql import functions as F
 
     return F.lit(None).cast("string")
+
+
+# --- the per-row path's edge cases ---------------------------------------------
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_null_rights_take_the_no_rights_defaults(spark, ansi):
+    """The parser emits a null ``rights`` for a document without rights.
+    size(null) is null under ANSI and -1 without it; either way the
+    per-row path takes the no-rights defaults (:363-380)."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame(
+            [("f", "Земли лесного фонда", "Калининский", None),
+             ("a", "Прочее", "Калининский", None),
+             ("n", "Прочее", "123", None),
+             ("e", "Прочее", "Калининский", [])],
+            schema=f"doc_id string, category string, district_name string, rights {PARSED_RIGHTS}",
+        )
+        owner = owner_column(owner_rows(), F.lit(False), F.col("category"), F.col("district_name"))
+        got = {r.doc_id: r.owner for r in df.select("doc_id", owner.alias("owner")).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {"f": "Собственность РФ", "a": ADM, "n": "", "e": ADM}
+
+
+def test_null_owner_and_null_type_rows(spark):
+    """Rows without an owner or without a type, in both trees, against
+    the sequential mirror."""
+    kvzu = [
+        ("k1", None, "Иванов Иван", None, None),
+        ("k1", SH, None, 2, "1/2"),
+        ("k2", None, None, None, None),
+        ("k3", SH, "Иванов Иван", 4, "1/4"),
+        ("k3", None, "Петров Пётр", None, None),
+        ("k4", JT, None, None, None),
+    ]
+    egrn = [
+        ("e1", EG, None, 3, "1/3"),
+        ("e1", None, "Иванов Иван", None, None),
+        ("e2", EG, "Петров Пётр", None, None),
+        ("e2", "Собственность", None, None, None),
+    ]
+    got = _run(spark, kvzu + egrn, _parcels(["k1", "k2", "k3", "k4", "e1", "e2"]))
+    for doc in ("k1", "k2", "k3", "k4"):
+        rows = [(rt, o, d, t) for did, rt, o, d, t in kvzu if did == doc]
+        assert got[doc] == _owner_reference_kvzu(rows, "Земли населённых пунктов", "Калининский"), doc
+    for doc in ("e1", "e2"):
+        rows = [(rt, o, d, t, t.split("/")[0] if t else None) for did, rt, o, d, t in egrn if did == doc]
+        assert got[doc] == _owner_reference_egrn(rows), doc
+
+
+def test_parsed_extracts_reach_the_egrn_tree_from_source_schema(spark):
+    """Parsed KVZU, land_record and build_record extracts: the export's
+    owner column (pipeline.document_rows) equals owner_summary over
+    rights_table.  land_record rights carry no EGRN shared label in m1, so
+    only ``source_schema`` routes it to the EGRN pairing; the
+    build_record extract has no rights at all."""
+    import numpy as np
+
+    from rosreestr_xml_to_gis_converter_spark.pipeline import (
+        document_rows,
+        finalize_attributes,
+        rights_table,
+    )
+    from rosreestr_xml_to_gis_converter_spark.sources.synth_xml import (
+        build_record_xml,
+        egrn_right_records,
+        kvzu_xml,
+        land_record_xml,
+    )
+    from rosreestr_xml_to_gis_converter_spark.sources.xml_extract import parse_extracts
+
+    sq = np.array([[10.0, 50.0], [14.0, 50.0], [14.0, 54.0], [10.0, 54.0], [10.0, 50.0]])
+    docs = [
+        ("k.xml", kvzu_xml("69:1:1:1", [sq], rights=[
+            {"code": "001002000000", "owner": "Иванов Иван", "share": (1, 4)},
+            {"code": "001002000000", "owner": "Петров Петр", "share": (3, 4)},
+        ])),
+        ("k0.xml", kvzu_xml("69:1:1:2", [sq])),
+        ("m1.xml", land_record_xml("50:1:1:1", [sq], right_records=egrn_right_records([
+            {"type": "Собственность", "holders": [("individual", "Zeta Ivan")]},
+            {"type": "Аренда", "holders": [("municipality", "Alpha")]},
+        ]))),
+        ("m2.xml", land_record_xml("50:1:1:2", [sq], right_records=egrn_right_records([
+            {"type": EG, "share": ("1", "2"), "holders": [("individual", "Egrnov Ivan")]},
+            {"type": EG, "share": ("1", "2"), "holders": [("legal", "ООО Луг", "771")]},
+        ]))),
+        ("b.xml", build_record_xml("69:40:2:8", [sq])),
+    ]
+    files = spark.createDataFrame(
+        [(n, bytearray(x.encode())) for n, x in docs], "path string, content binary"
+    )
+    p = finalize_attributes(parse_extracts(files))
+    own = owner_summary(rights_table(p), p.select("doc_id", "category", "district_name"))
+    cad = {r.doc_id: r.cad_number for r in p.select("doc_id", "cad_number").collect()}
+    via_table = {cad[r.doc_id]: r.owner or "" for r in own.collect()}
+    via_row = {r.cad_number: r.owner for r in document_rows(p).collect()}
+    assert via_row == via_table
+    # KVZU codes resolve through the RIGHT classifier: 001002000000 is
+    # the shared-ownership label, two rows with numeric shares -> B3e
+    assert via_row["69:1:1:1"] == f"{SH}: 1/4 Иванов Иван, 3/4 Петров Петр"
+    assert via_row["50:1:1:1"] == "Собственность Zeta Ivan, Аренда Alpha"
+    assert via_row["50:1:1:2"].startswith(EG + ": 1/2 ")

@@ -3,14 +3,9 @@ tiles -> checkpointed outputs, resumable."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from rosreestr_xml_to_gis_converter_spark.pipeline import (
-    build_parcel_layer,
-    convert_extracts,
-)
+from rosreestr_xml_to_gis_converter_spark.pipeline import convert_extracts
 from rosreestr_xml_to_gis_converter_spark.schemas import IMAGES_SCHEMA
 from rosreestr_xml_to_gis_converter_spark.sources.synth_xml import (
     kvzu_xml,
@@ -71,20 +66,3 @@ def test_full_pipeline_and_resume(spark, files, tmp_path):
     }
     assert got2 == want
     assert s2["n_join_rows"] == s["n_join_rows"]
-
-
-def test_classifier_join_in_layer_build(spark):
-    dim = spark.createDataFrame(
-        [("003001000000", "Земли сельхозназначения")], schema="code string, label string"
-    )
-    cad, rings = gen_parcels(5, 1)[0]
-    files = spark.createDataFrame(
-        [("a.xml", bytearray(kvzu_xml(cad, rings, category="003001000000").encode())),
-         ("b.xml", bytearray(kvzu_xml("1:1:1:9", rings, category="zzz").encode()))],
-        schema="path string, content binary",
-    )
-    parcels, errors = build_parcel_layer(files, classifiers={"category": dim})
-    got = {r.cad_number: r.category for r in parcels.collect()}
-    assert got[cad] == "Земли сельхозназначения"
-    assert got["1:1:1:9"] == "-"
-    assert errors.count() == 0

@@ -222,3 +222,63 @@ def test_minhash_lsh_pairs_plan_one_kernel_reused_band_exchange(spark, tmp_path)
     scans = [ln for ln in lines if "FileScan" in ln and "/docs]" in ln]
     shingles = [ln for ln in lines if "split(lower(" in ln and "FileScan" not in ln]
     assert len(scans) == 2 and len(shingles) == len(scans), pc.final
+
+
+def test_export_is_one_pass_over_the_parse(spark, tmp_path):
+    """The SHP + XLSX export over an uncached ``parse_extracts`` lineage
+    is one per-document plan: the parse's ``MapInPandas`` appears once,
+    with no Exchange (broadcast or shuffle) and no Join between the
+    parsed layer and the sink rows.  ``export_outputs`` streams that plan
+    with ``toLocalIterator``: one single-stage job per partition, one
+    task each, so every document is parsed and resolved exactly once."""
+    import time
+
+    import numpy as np
+
+    from rosreestr_xml_to_gis_converter_spark.pipeline import document_rows, export_outputs
+    from rosreestr_xml_to_gis_converter_spark.sources.synth_xml import (
+        build_record_xml,
+        egrn_right_records,
+        kvzu_xml,
+        land_record_xml,
+    )
+    from rosreestr_xml_to_gis_converter_spark.sources.xml_extract import parse_extracts
+
+    sq = np.array([[10.0, 50.0], [14.0, 50.0], [14.0, 54.0], [10.0, 54.0], [10.0, 50.0]])
+    rr = egrn_right_records([{"type": "Собственность", "holders": [("legal", "ООО Луг", "771")]}])
+    docs = [
+        ("a.xml", kvzu_xml("69:1:1:1", [sq], rights=[{"code": "001001000000", "owner": "Иванов Иван"}])),
+        ("b.xml", land_record_xml("50:2:2:2", None, contours={"50:2:2:2(1)": [sq]}, right_records=rr)),
+        ("c.xml", kvzu_xml("69:3:3:3", None, entry_rings={"69:3:3:31": [sq], "69:3:3:32": [sq + 2.0]})),
+        ("d.xml", build_record_xml("69:40:2:8", [sq])),
+    ]
+    files = spark.createDataFrame(
+        [(n, bytearray(x.encode())) for n, x in docs], "path string, content binary"
+    )
+    parsed = parse_extracts(files)
+
+    pc = plan_checks(document_rows(parsed), execute=True)
+    assert pc.final.count("MapInPandas") == 1 and pc.python_stages() == 1, pc.final
+    assert "Exchange" not in pc.final, pc.final
+    assert "Join" not in pc.final, pc.final
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("export-one-pass", "export")
+    try:
+        res = export_outputs(parsed, str(tmp_path / "exp"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res == {"n_shp_records": 5, "n_xlsx_rows": 5}
+    n_parts = parsed.rdd.getNumPartitions()
+    deadline = time.monotonic() + 10
+    while True:  # the status store is fed by the asynchronous listener bus
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup("export-one-pass")]
+        done = all(j is not None and j.status == "SUCCEEDED" for j in jobs)
+        if (done and len(jobs) >= n_parts) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    stages = [st.getStageInfo(s) for j in jobs for s in j.stageIds]
+    assert len(jobs) == n_parts, len(jobs)
+    assert len(stages) == len(jobs)
+    assert sum(s.numTasks for s in stages) == n_parts

@@ -50,6 +50,35 @@ def test_shapefile_writer_roundtrip_exact(tmp_path):
             assert g == v.strftime("%Y%m%d"), name
 
 
+def test_shapefile_default_date_keeps_record_width(tmp_path):
+    """The exporter's date(1,1,1) default (main.py:384-393) is written as
+    8 digits, so the fields after it and the next record stay aligned."""
+    import datetime
+
+    base = str(tmp_path / "layer")
+    attrs = [
+        "69:1:2:3", "", "", 10.5, "a", "b", "c", "d", "e", "f", "g", "h", "i",
+        datetime.date(1, 1, 1), datetime.date(2023, 6, 15), "j", "1.5", "k",
+    ]
+    second = ["69:1:2:4", *attrs[1:3], 20.0, *attrs[4:]]
+    write_shapefile(base, [([SQ], attrs), ([SQ], second)])
+    got = [a for _, a in read_shapefile(base)]
+    assert got[0][13:15] == ["00010101", "20230615"]
+    assert got[0][15:] == ["j", "1.5", "k"]
+    assert got[1][0] == "69:1:2:4" and got[1][3] == 20.0
+
+
+def test_shp_key_split_branches():
+    """main.py:394-406: 'CN(n)' splits at the paren, a key without ':'
+    is a contour number of the parent, any other key is its own CN."""
+    from rosreestr_xml_to_gis_converter_spark.pipeline import _shp_key
+
+    assert _shp_key("50:2:2:2(1)", "50:2:2:2") == ("50:2:2:2", "(1)")
+    assert _shp_key("(2)", "50:2:2:2") == ("", "(2)")
+    assert _shp_key("3", "69:1:1:1") == ("69:1:1:1", "3")
+    assert _shp_key("69:3:3:31", "69:3:3:3") == ("69:3:3:31", "")
+
+
 def test_export_outputs_end_to_end(spark, tmp_path):
     """XML -> parse -> export: SHP one record per contour with key split
     (main.py:394-406), XLSX one row per object / entry parcel
