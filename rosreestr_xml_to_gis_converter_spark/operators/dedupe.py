@@ -51,30 +51,20 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.element_at(F.transform(F.array(_words(text)), shingles_of), 1)
 
 
-def spread_input(df: DataFrame) -> DataFrame:
+def spread_input_by(df: DataFrame, *cols: str) -> DataFrame:
     """Scale-adaptive input-skew guard (guide §2.5): a small parquet with
     one row group hands ALL its rows to a single scan task no matter what
     ``maxPartitionBytes`` says — the byte-range split count looks healthy
     while every row lands in the one split holding the row-group start —
     serializing every downstream expression (measured: the 50k-doc
     shingle+minhash build ran ~82 s on one core vs ~3 s spread).  The
-    partition COUNT therefore can't detect it; gate on the optimizer's
-    size estimate instead: anything smaller than one healthy task-wave
-    (parallelism x 64 MB) is repartitioned round-robin — a sub-GB
-    exchange, trivially cheap — while a production-scale table with many
-    row groups skips the extra shuffle entirely."""
-    if _should_spread(df):
-        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return df
-
-
-def spread_input_by(df: DataFrame, *cols: str) -> DataFrame:
-    """:func:`spread_input` variant that hash-partitions on ``cols``
-    instead of round-robin: skips the keyless repartition's
-    sort-before-repartition pass (guide §2.5), stays deterministic under
-    task retry, and — when ``cols`` are the keys of a downstream
-    dedup/groupBy — lets that operator reuse the exchange outright
-    (guide §2.4)."""
+    partition COUNT therefore can't detect it; :func:`_should_spread`
+    gates on the optimizer's size estimate and the file layout instead.
+    The spread hash-partitions on ``cols``: unlike a round-robin
+    repartition it needs no sort-before-repartition pass (guide §2.5),
+    stays deterministic under task retry, and — when ``cols`` are the
+    keys of a downstream dedup/groupBy — lets that operator reuse the
+    exchange outright (guide §2.4)."""
     if _should_spread(df):
         return df.repartition(
             df.sparkSession.sparkContext.defaultParallelism,
@@ -240,7 +230,7 @@ def minhash_lsh_pairs(
         # bands > n_hashes leaves every band without a minhash to key on
         raise ValueError(f"bands must be in [1, n_hashes={n_hashes}], got {bands}")
     rows = n_hashes // bands
-    sh = spread_input(df).select(
+    sh = spread_input_by(df, id_col).select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), k).alias("sh"),
     )
@@ -344,7 +334,7 @@ def simhash_near_pairs(
     16-bit chunks (pigeonhole: hamming<=3 guarantees a chunk collides;
     larger radii are still found with high probability), bucket-join,
     verify exact hamming distance with bit_count."""
-    s = spread_input(df).select(
+    s = spread_input_by(df, id_col).select(
         F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh")
     )
     chunks = s.select(

@@ -68,9 +68,9 @@ def cosine_scores(
     task, serializing the |queries| x dim dot products per row; the
     size-gated repartition costs a tiny exchange and runs them on all
     cores."""
-    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
 
-    emb = spread_input(emb)
+    emb = spread_input_by(emb, id_col)
     e = emb.select(
         F.col(id_col).alias("cand_id"), _quantized(F.col(vec_col)).alias("qv")
     ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))

@@ -318,15 +318,16 @@ def document_rows(parcels: DataFrame) -> DataFrame:
 def export_outputs(parcels: DataFrame, out_dir: str, base_name: str = "real_estate_objects_EGRN") -> dict:
     """Final-mile export: SHP (K1) + XLSX (K2) from the parsed layer —
     the reference's two sinks (main.py:250-342).  :func:`document_rows`
-    is streamed once with ``toLocalIterator``, and the loop below expands
-    each document into its XLSX rows (one per object, or one per entry parcel
-    with the parent CN in column B, main.py:416-454) and its SHP records
-    (one per contour, key split by :func:`_shp_key`, parent CN blanked
-    when equal, main.py:394-406).  The export is final-mile; the engine
-    sink stays parquet/Iceberg."""
+    is collected in one job (every record of both sinks is gathered before
+    either writes, so streaming would not bound the driver's memory), and
+    the loop below expands each document into its XLSX rows (one per
+    object, or one per entry parcel with the parent CN in column B,
+    main.py:416-454) and its SHP records (one per contour, key split by
+    :func:`_shp_key`, parent CN blanked when equal, main.py:394-406).  The
+    export is final-mile; the engine sink stays parquet/Iceberg."""
     os.makedirs(out_dir, exist_ok=True)
     shp, xlsx = [], []
-    for r in document_rows(parcels).toLocalIterator():
+    for r in document_rows(parcels).collect():
         cad, common = r.cad_number, list(r[3:])  # the 15 shared columns, XLSX order
         for entry in r.entry_parcels or [None]:
             if entry is None:

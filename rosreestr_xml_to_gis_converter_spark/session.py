@@ -36,10 +36,8 @@ def get_spark(
     It defaults to ``SPARK_GRAFT_CPUS``, else to the cores this process
     may run on.
 
-    Python workers fork from :mod:`worker_daemon`, which stops every task
-    from re-reading the zip archives on the worker path (a fixed 0.1-0.25 s
-    per Python task otherwise); ``spark.executorEnv.PYTHONPATH`` lets the
-    workers import this package from any working directory.
+    ``spark.executorEnv.PYTHONPATH`` lets the Python workers import this
+    package from any working directory.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
@@ -74,7 +72,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.python.daemon.module", "rosreestr_xml_to_gis_converter_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():

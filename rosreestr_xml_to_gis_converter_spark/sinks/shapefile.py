@@ -3,9 +3,9 @@
 Replaces the reference's pyshp sink (/root/reference/main.py:322-342,
 `shapefile.Writer(POLYGON, cp1251)` + 18 typed fields + `.poly(rings)` /
 `.record(...)` per contour).  Export is a DRIVER-SIDE final-mile job over
-the engine's finished contour table — it streams `toLocalIterator()`
-batches so the driver never holds the whole layer; the scalable sink
-remains parquet/Iceberg.
+the engine's finished contour table: the writer buffers every record,
+since the .shp header carries the whole layer's bbox and length; the
+scalable sink remains parquet/Iceberg.
 
 Format: ESRI Shapefile Technical Description (July 1998, public):
 .shp geometry, .shx index, .dbf dBASE III attributes, .cpg codepage.

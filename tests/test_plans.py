@@ -228,11 +228,9 @@ def test_export_is_one_pass_over_the_parse(spark, tmp_path):
     """The SHP + XLSX export over an uncached ``parse_extracts`` lineage
     is one per-document plan: the parse's ``MapInPandas`` appears once,
     with no Exchange (broadcast or shuffle) and no Join between the
-    parsed layer and the sink rows.  ``export_outputs`` streams that plan
-    with ``toLocalIterator``: one single-stage job per partition, one
-    task each, so every document is parsed and resolved exactly once."""
-    import time
-
+    parsed layer and the sink rows.  ``export_outputs`` collects that plan
+    in one job of one stage with one task per partition, so every document
+    is parsed and resolved exactly once."""
     import numpy as np
 
     from rosreestr_xml_to_gis_converter_spark.pipeline import document_rows, export_outputs
@@ -271,14 +269,9 @@ def test_export_is_one_pass_over_the_parse(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res == {"n_shp_records": 5, "n_xlsx_rows": 5}
     n_parts = parsed.rdd.getNumPartitions()
-    deadline = time.monotonic() + 10
-    while True:  # the status store is fed by the asynchronous listener bus
-        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup("export-one-pass")]
-        done = all(j is not None and j.status == "SUCCEEDED" for j in jobs)
-        if (done and len(jobs) >= n_parts) or time.monotonic() > deadline:
-            break
-        time.sleep(0.05)
-    stages = [st.getStageInfo(s) for j in jobs for s in j.stageIds]
-    assert len(jobs) == n_parts, len(jobs)
-    assert len(stages) == len(jobs)
-    assert sum(s.numTasks for s in stages) == n_parts
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup("export-one-pass")]
+    assert len(jobs) == 1 and jobs[0].status == "SUCCEEDED", jobs
+    stages = [st.getStageInfo(s) for s in jobs[0].stageIds]
+    assert len(stages) == 1 and stages[0].numTasks == n_parts, stages

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -18,8 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_get_spark_master_defaults_to_host_cores(monkeypatch):
     """Without ``SPARK_GRAFT_CPUS`` the local master gets one task slot
-    per core this process may run on, not a fixed count; Python workers
-    start from the package's daemon."""
+    per core this process may run on, not a fixed count."""
     seen = {}
 
     def get_or_create(builder):
@@ -35,40 +35,77 @@ def test_get_spark_master_defaults_to_host_cores(monkeypatch):
     assert seen["spark.master"] == "local[3]"
     session.get_spark("defaults", cores=2)
     assert seen["spark.master"] == "local[2]"
-    # workers fork from the package's daemon and import the package from
-    # the directory holding it; ``extra_conf`` still overrides both
-    module = seen["spark.python.daemon.module"]
-    assert module == "rosreestr_xml_to_gis_converter_spark.worker_daemon"
+    # workers import the package from the directory holding it;
+    # ``extra_conf`` still overrides that
     root = seen["spark.executorEnv.PYTHONPATH"]
-    assert os.path.isfile(os.path.join(root, *module.split(".")) + ".py")
+    assert os.path.isfile(os.path.join(root, "rosreestr_xml_to_gis_converter_spark", "__init__.py"))
     session.get_spark("defaults", extra_conf={"spark.executorEnv.PYTHONPATH": "/elsewhere"})
     assert seen["spark.executorEnv.PYTHONPATH"] == "/elsewhere"
 
 
-def test_worker_tasks_keep_zip_directories(spark):
+def test_worker_tasks_keep_zip_directories(tmp_path):
     """pyspark's worker calls ``importlib.invalidate_caches()`` on every
-    task; under the package daemon that no longer re-reads the central
-    directory of the zip archives on the worker path."""
+    task; once a worker has imported the package that no longer re-reads
+    the central directory of the zip archives on its path.  The session is
+    a plain ``SparkSession.builder`` one in a fresh process, so no warm
+    worker of another session hides a miss."""
+    script = tmp_path / "zips.py"
+    script.write_text(
+        textwrap.dedent(
+            """
+            from pyspark.sql import SparkSession
 
-    def probe(batches):
-        import importlib
-        import sys
-        import zipimport
+            def probe(batches):
+                import importlib
+                import sys
+                import zipimport
 
-        import pyarrow as pa
+                import pyarrow as pa
 
-        for _ in batches:
-            pass
-        imps = [v for v in sys.path_importer_cache.values() if isinstance(v, zipimport.zipimporter)]
-        before = [id(imp._files) for imp in imps]
-        importlib.invalidate_caches()
-        kept = sum(b == id(imp._files) for b, imp in zip(before, imps))
-        yield pa.RecordBatch.from_pydict({"zips": [len(imps)], "kept": [kept]})
+                import rosreestr_xml_to_gis_converter_spark  # noqa: F401
 
-    rows = spark.range(0, 4, 1, 4).mapInArrow(probe, "zips long, kept long").collect()
-    if not any(r.zips for r in rows):
+                for _ in batches:
+                    pass
+                imps = [v for v in sys.path_importer_cache.values() if isinstance(v, zipimport.zipimporter)]
+                before = [id(imp._files) for imp in imps]
+                importlib.invalidate_caches()
+                kept = sum(b == id(imp._files) for b, imp in zip(before, imps))
+                yield pa.RecordBatch.from_pydict({"zips": [len(imps)], "kept": [kept]})
+
+            spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+            for _ in range(2):
+                rows = spark.range(0, 4, 1, 4).mapInArrow(probe, "zips long, kept long").collect()
+                print("ROWS", [(r.zips, r.kept) for r in rows])
+            spark.stop()
+            """
+        )
+    )
+    env = {**os.environ, "PYTHONPATH": REPO}
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    rows = [ast.literal_eval(ln[5:]) for ln in proc.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert len(rows) == 2, proc.stdout[-2000:]
+    if not any(z for run in rows for z, _ in run):
         pytest.skip("no zipimporter on the worker path")
-    assert all(r.kept == r.zips for r in rows), rows
+    assert all(k == z for run in rows for z, k in run), rows
+
+
+def test_driver_import_keeps_stdlib_zip_caches():
+    """Importing the package outside a pyspark worker leaves
+    ``zipimport.zipimporter.invalidate_caches`` as the stdlib function."""
+    code = (
+        "import zipimport; stdlib = zipimport.zipimporter.invalidate_caches; "
+        "import rosreestr_xml_to_gis_converter_spark; "
+        "assert zipimport.zipimporter.invalidate_caches is stdlib"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
 
 
 def test_workers_import_package_from_any_directory(tmp_path):
