@@ -230,41 +230,66 @@ def owner_column(rows: Column, egrn: Column, category: Column, district: Column)
     document has no rights), with ``egrn`` routing to the EGRN tree and
     ``category``/``district`` feeding the no-owner defaults.
 
-    The tree reads ``rows`` a dozen times; a one-element ``transform``
-    binds it to a lambda variable, so a computed ``rows`` expression is
-    planned and evaluated once instead of being copied into every use."""
-    return F.get(
-        F.transform(F.array(rows), lambda r: _owner_tree(r, egrn, category, district)), 0
-    )
-
-
-def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) -> Column:
-    recs = F.filter(rows, lambda r: r["rf"])  # first row of each record
-
-    def nn(c: Column) -> Column:
-        return c.isNotNull()
-
-    prop = lambda r: F.coalesce(r["txt"].rlike("пропорциональн"), F.lit(False))  # noqa: E731
-
-    # --- the reference's KVZU lists, in document order -------------------
-    nj = lambda r: nn(r["rt"]) & (r["rt"] != JOINT)  # noqa: E731
-    types_nj = F.transform(F.filter(recs, nj), lambda r: r["rt"])  # list_type_sobstv
-    owners_nj = F.transform(
-        F.filter(rows, lambda r: nj(r) & nn(r["owner"])), lambda r: r["owner"]
-    )  # list_owner
-    dolei_recs = F.filter(
-        recs, lambda r: (r["rt"] == SHARED) & nn(r["den"]) & ~prop(r)
-    )
-    list_dolei = F.transform(dolei_recs, lambda r: r["den"])
-    dtp = F.transform(dolei_recs, lambda r: r["txt"])  # doli_two_persons
-    ga = F.transform(
-        F.filter(
-            recs,
-            lambda r: (r["rt"] == SHARED) & r["den"].isNull() & nn(r["txt"]) & ~prop(r),
+    The tree reads ``rows`` and each of :func:`_owner_lists` many times,
+    so both are bound once with :func:`_bind`."""
+    return _bind(
+        lambda r: _bind(
+            lambda *lists: _owner_tree(r, lists, egrn, category, district), *_owner_lists(r)
         ),
-        lambda r: r["txt"],
-    )  # list_doli_ga
-    dolevikov = F.transform(owners_nj, F.upper)  # list_dolevikov (dups kept)
+        rows,
+    )
+
+
+def _bind(body, *values: Column) -> Column:
+    """``body(*values)`` with each value bound once: a one-element
+    ``transform`` over a struct of the values makes each a field of one
+    lambda variable, so a computed expression is planned and evaluated
+    once instead of being copied into every use (Catalyst does not share
+    subexpressions across higher-order lambdas)."""
+    names = [f"_{i}" for i in range(len(values))]
+    bound = F.array(F.struct(*[v.alias(n) for v, n in zip(values, names)]))
+    return F.get(F.transform(bound, lambda s: body(*[s[n] for n in names])), 0)
+
+
+def _nn(c: Column) -> Column:
+    return c.isNotNull()
+
+
+def _owner_lists(rows: Column) -> list[Column]:
+    """The reference lists the branch tree reads most, in the order
+    :func:`_owner_tree` unpacks them, all in document order."""
+    recs = F.filter(rows, lambda r: r["rf"])  # first row of each record
+    nj = lambda r: _nn(r["rt"]) & (r["rt"] != JOINT)  # noqa: E731
+    prop = lambda r: F.coalesce(r["txt"].rlike("пропорциональн"), F.lit(False))  # noqa: E731
+    owners_nj = F.transform(
+        F.filter(rows, lambda r: nj(r) & _nn(r["owner"])), lambda r: r["owner"]
+    )
+    dolei_recs = F.filter(recs, lambda r: (r["rt"] == SHARED) & _nn(r["den"]) & ~prop(r))
+    ga_recs = F.filter(
+        recs, lambda r: (r["rt"] == SHARED) & r["den"].isNull() & _nn(r["txt"]) & ~prop(r)
+    )
+    typed = F.filter(rows, lambda r: _nn(r["rt"]))
+    return [
+        recs,
+        F.transform(F.filter(recs, nj), lambda r: r["rt"]),  # list_type_sobstv
+        owners_nj,  # list_owner
+        F.transform(dolei_recs, lambda r: r["den"]),  # list_dolei
+        F.transform(dolei_recs, lambda r: r["txt"]),  # doli_two_persons
+        F.transform(ga_recs, lambda r: r["txt"]),  # list_doli_ga
+        F.transform(owners_nj, F.upper),  # list_dolevikov (dups kept)
+        # type_sobstv: the LAST right's resolved type (loop variable, :209)
+        F.get(typed, F.size(typed) - 1)["rt"],
+        F.transform(  # the EGRN shared holders
+            F.filter(rows, lambda r: (r["rt"] == EGRN_SHARED) & _nn(r["owner"])),
+            lambda r: r["owner"],
+        ),
+    ]
+
+
+def _owner_tree(
+    rows: Column, lists: tuple, egrn: Column, category: Column, district: Column
+) -> Column:
+    recs, types_nj, owners_nj, list_dolei, dtp, ga, dolevikov, type_gate, eg_shared = lists
     set_dolev = F.array_distinct(dolevikov)  # set_dolevikov (first occurrence)
     n_distinct = F.size(set_dolev)
     # list_dolevikov_new: populated only when 0 < len < 3 (:358-361)
@@ -272,7 +297,7 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
         F.size(dolevikov).between(1, 2), F.transform(dolevikov, F.initcap)
     ).otherwise(_empty())
     joint_owners = F.transform(
-        F.filter(rows, lambda r: (r["rt"] == JOINT) & nn(r["owner"])),
+        F.filter(rows, lambda r: (r["rt"] == JOINT) & _nn(r["owner"])),
         lambda r: r["owner"],
     )
     n_joint_recs = F.size(F.filter(recs, lambda r: r["rt"] == JOINT))
@@ -282,9 +307,6 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
         n_joint_recs > 0,
         F.flatten(F.transform(F.sequence(F.lit(1), n_joint_recs), lambda _: joint_owners)),
     ).otherwise(_empty())  # list_sovm_sobsv
-    # type_sobstv: the LAST right's resolved type (loop variable, :209)
-    typed = F.filter(rows, lambda r: nn(r["rt"]))
-    type_gate = F.get(typed, F.size(typed) - 1)["rt"]
 
     # cell_owner (:282-284 + post-GKN :342-351 combined over merged rows)
     cell_owner = (
@@ -306,7 +328,7 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
         F.lit("Собственность РФ"),
     ).otherwise(district_administration(district))
     cell_owner_final = F.when(F.size(cell_owner) > 0, cell_owner).otherwise(
-        F.when(nn(default_owner), F.array(default_owner)).otherwise(_empty())
+        F.when(_nn(default_owner), F.array(default_owner)).otherwise(_empty())
     )
 
     max_den = _s(F.array_max(list_dolei))
@@ -322,17 +344,13 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
     ).otherwise(F.lit(""))
 
     # --- EGRN lists (:1083-1216) ----------------------------------------
-    eg_types = F.transform(F.filter(recs, lambda r: nn(r["rt"])), lambda r: r["rt"])
+    eg_types = F.transform(F.filter(recs, lambda r: _nn(r["rt"])), lambda r: r["rt"])
     eg_holders = F.transform(
-        F.filter(rows, lambda r: nn(r["rt"]) & (r["rt"] != EGRN_SHARED) & nn(r["owner"])),
-        lambda r: r["owner"],
-    )
-    eg_shared = F.transform(
-        F.filter(rows, lambda r: (r["rt"] == EGRN_SHARED) & nn(r["owner"])),
+        F.filter(rows, lambda r: _nn(r["rt"]) & (r["rt"] != EGRN_SHARED) & _nn(r["owner"])),
         lambda r: r["owner"],
     )
     eg_share_recs = F.filter(
-        recs, lambda r: (r["rt"] == EGRN_SHARED) & nn(r["num"]) & nn(r["den"])
+        recs, lambda r: (r["rt"] == EGRN_SHARED) & _nn(r["num"]) & _nn(r["den"])
     )
     share_list = F.transform(
         eg_share_recs, lambda r: F.concat(r["num"], F.lit("/"), _s(r["den"]))
@@ -377,13 +395,13 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
         )
         # ---- EGRN tree (:1217-1239) ----
         .when(
-            egrn & nn(type_gate) & (F.size(eg_holders) > 0),
+            egrn & _nn(type_gate) & (F.size(eg_holders) > 0),
             F.array_join(eg_cells, ", "),
         )
         .when(
-            egrn & nn(type_gate) & (eg_n > 0) & (type_gate == EGRN_SHARED),
+            egrn & _nn(type_gate) & (eg_n > 0) & (type_gate == EGRN_SHARED),
             F.when(
-                (eg_n > 2) & nn(eg_max_den),
+                (eg_n > 2) & _nn(eg_max_den),
                 # the reference's no-space-before-paren quirk (:1222-1223)
                 F.concat(
                     type_gate, F.lit("("), _s(eg_max_den),
@@ -421,8 +439,8 @@ def _owner_tree(rows: Column, egrn: Column, category: Column, district: Column) 
             .when(eg_n == 1, F.concat(type_gate, F.lit(": "), F.get(eg_shared, 0)))
             .otherwise(F.lit("")),  # unhandled combinations
         )
-        .when(egrn & nn(type_gate) & (eg_n > 0), F.lit(""))  # gate not shared
-        .when(egrn & nn(type_gate), type_gate)  # shared records, zero holders
+        .when(egrn & _nn(type_gate) & (eg_n > 0), F.lit(""))  # gate not shared
+        .when(egrn & _nn(type_gate), type_gate)  # shared records, zero holders
         .when(egrn, F.lit(""))
         # ---- KVZU shared block (:381-431) ----
         # B1 (:382-386): cell_owner[0] built from the RAW owner string

@@ -1,12 +1,18 @@
 """Large-scale deduplication operators over a document corpus.
 
 Shingling, SimHash, hamming banding and every verify are Column
-expressions / higher-order array functions.  The MinHash signatures and
-band keys are one numpy ``mapInArrow`` kernel over the JVM shingle
-arrays: it hashes each shingle's bytes once with the Spark-exact XXH64
-of ``functions/xxhash.py`` and derives every seeded minhash from that
-hash, bit-identical to the ``xxhash64`` Column form and without its
-per-seed lambdas.  The LSH self-joins are equi-joins on (band, hash)
+expressions / higher-order array functions.  The SimHash,
+pHash/hamming, stream-static and embedding near-dup operators share one
+band layout (:func:`_banded_chunks`), and all but the stream-static
+matcher one banded self-join (:func:`_band_pairs`: join on (band, key),
+verify, then collapse the pairs several bands found); the operators
+that promise recall check the pigeonhole bound (:func:`_recall_bands`)
+themselves.  The MinHash signatures and band keys are one numpy
+``mapInArrow`` kernel over the JVM shingle arrays: it hashes each
+shingle's bytes once with the Spark-exact XXH64 of
+``functions/xxhash.py`` and derives every seeded minhash from that hash,
+bit-identical to the ``xxhash64`` Column form and without its per-seed
+lambdas.  The LSH self-joins are equi-joins on (band, hash)
 buckets, which Catalyst shuffles on the bucket key (the standard
 MinHash-LSH dedup shape used by web-scale corpus pipelines).  No
 operator caches, so a call leaves no persisted relation behind in a
@@ -337,46 +343,15 @@ def simhash_near_pairs(
     s = spread_input_by(df, id_col).select(
         F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh")
     )
-    chunks = s.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("sh", c * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "sh", "cc.chunk", "cc.key")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
-        )
-        # bit_count verify BEFORE the dedup exchange (same reasoning as
-        # hamming_near_pairs: hamming is band-independent, the filter
-        # shrinks the shuffle from candidates to answers)
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+    return _band_pairs(
+        _banded_chunks(s, "id", "sh", 64, 4, 1),
+        F.bit_count(F.col("a.hh").bitwiseXOR(F.col("b.hh"))).alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
 def _banded_chunks(
     df: DataFrame,
-    max_hamming: int,
     id_col: str,
     hash_col: str,
     n_bits: int,
@@ -384,29 +359,30 @@ def _banded_chunks(
     chunks_per_band: int,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The banded-hamming chunking shared by the self-join
-    (:func:`hamming_near_pairs`) and the stream-static matcher
-    (:func:`hamming_match_static`): validate the (n_bands,
-    chunks_per_band) pigeonhole recall guarantee, split the fingerprint
-    into remainder-distributed chunks, and explode each row to one
-    (band, key) per chunk combination.  ``carry`` columns pass through
-    unchanged (e.g. an event-time column for streaming watermarks).
-    Keeping this in ONE place means the two join shapes can never key
-    on different chunk layouts."""
+    """The one band layout of the SimHash, pHash/hamming, stream-static
+    and embedding near-dup operators: split the ``n_bits``-bit
+    fingerprint into ``n_bands`` remainder-distributed chunks (no bit
+    dropped) and explode each row to one ``(id, hh, *carry, band, key)``
+    per combination of ``chunks_per_band`` chunks, packed into one long.
+    ``n_bands=None`` is one band keyed on the whole fingerprint, unmasked
+    (a 64-bit mask would overflow a long).  A one-band layout emits no
+    ``band`` column and no explode.  Only structural checks live here;
+    the entry points that promise recall check it with
+    :func:`_recall_bands` first.  ``carry`` columns pass through
+    unchanged (an event time, the vectors a verify reads)."""
     from itertools import combinations
+    from math import comb
 
-    n_bands = max_hamming + 1 if n_bands is None else n_bands
+    s = df.select(
+        F.col(id_col).alias("id"), F.col(hash_col).cast("long").alias("hh"), *carry
+    )
+    if n_bands is None:
+        return s.withColumn("key", F.col("hh"))
     if not 1 <= n_bands <= n_bits:
         raise ValueError(f"n_bands must be in [1, {n_bits}], got {n_bands}")
     if not 1 <= chunks_per_band <= n_bands:
         raise ValueError(
             f"chunks_per_band must be in [1, {n_bands}], got {chunks_per_band}"
-        )
-    if n_bands - max_hamming < chunks_per_band:
-        raise ValueError(
-            f"n_bands={n_bands}, chunks_per_band={chunks_per_band} cannot "
-            f"guarantee recall at hamming {max_hamming} (pigeonhole needs "
-            f"n_bands - max_hamming >= chunks_per_band)"
         )
     width = n_bits // n_bands
     widths = [width + (1 if i < n_bits % n_bands else 0) for i in range(n_bands)]
@@ -424,31 +400,72 @@ def _banded_chunks(
             key = F.shiftleft(key, widths[i]) + chunk_expr(i)
         return key
 
-    combis = list(combinations(range(n_bands), chunks_per_band))
-    if len(combis) > 512:
+    n_combis = comb(n_bands, chunks_per_band)
+    if n_combis > 512:
         # C(n_bands, m) structs per row: beyond a few hundred the explode
         # factor (and the codegen'd expression tree) dominates any bucket
-        # savings — useful configs sit at C <= ~100 (e.g. C(8,4)=70)
+        # savings — useful configs sit at C <= ~100 (e.g. C(8,4)=70).
+        # Counted, not listed: C(64, 7) alone is 621M tuples
         raise ValueError(
-            f"C({n_bands},{chunks_per_band}) = {len(combis)} band combinations; "
+            f"C({n_bands},{chunks_per_band}) = {n_combis} band combinations; "
             "pick a config with <= 512 (explode factor = combination count)"
         )
-    s = df.select(
-        F.col(id_col).alias("id"), F.col(hash_col).cast("long").alias("hh"), *carry
+    combis = list(combinations(range(n_bands), chunks_per_band))
+    if len(combis) == 1:
+        return s.withColumn("key", band_key(combis[0]))
+    bands = F.array(
+        *[F.struct(F.lit(b).alias("band"), band_key(c).alias("key")) for b, c in enumerate(combis)]
     )
-    return s.select(
-        "id",
-        "hh",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(c).alias("key"))
-                    for b, c in enumerate(combis)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "hh", *carry, "bk.band", "bk.key")
+    return s.select("id", "hh", *carry, F.explode(bands).alias("bk")).select(
+        "id", "hh", *carry, "bk.band", "bk.key"
+    )
+
+
+def _recall_bands(
+    max_hamming: int, n_bits: int, n_bands: int | None, chunks_per_band: int
+) -> int:
+    """The band count that GUARANTEES recall at ``max_hamming``: default
+    ``max_hamming + 1`` chunks, and reject a layout where a pair within
+    the radius could miss every band.  At most ``max_hamming`` chunks
+    differ, so a clean ``chunks_per_band``-combination exists iff
+    ``n_bands - max_hamming >= chunks_per_band`` (pigeonhole).  A layout
+    out of range falls through to :func:`_banded_chunks`' own message."""
+    n_bands = max_hamming + 1 if n_bands is None else n_bands
+    if 1 <= chunks_per_band <= n_bands <= n_bits and n_bands - max_hamming < chunks_per_band:
+        raise ValueError(
+            f"n_bands={n_bands}, chunks_per_band={chunks_per_band} cannot "
+            f"guarantee recall at hamming {max_hamming} (pigeonhole needs "
+            f"n_bands - max_hamming >= chunks_per_band)"
+        )
+    return n_bands
+
+
+def _band_pairs(chunks: DataFrame, score: Column, keep: Column) -> DataFrame:
+    """The banded self-join of every near-dup operator: equi-join
+    :func:`_banded_chunks` rows on (band, key) with ``a.id < b.id``,
+    compute ``score`` over the ``a.``/``b.`` sides, keep the pairs that
+    pass ``keep`` and collapse the pairs several bands surfaced into
+    ``(id_a, id_b, score)``.
+
+    The verify runs BEFORE the dedup shuffle: the score is a function of
+    the pair alone (not of which band matched), so filtering first is
+    semantically identical and shrinks the ``dropDuplicates`` exchange
+    from every candidate pair to the answer (2.8x on the 2M-row hamming
+    scaling corpus).  A one-band layout surfaces each pair once and
+    skips the dedup."""
+    keys = [c for c in ("band", "key") if c in chunks.columns]
+    a = chunks.alias("a")
+    b = chunks.alias("b")
+    pairs = (
+        a.join(
+            b,
+            [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys]
+            + [F.col("a.id") < F.col("b.id")],
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), score)
+        .filter(keep)
+    )
+    return pairs.dropDuplicates(["id_a", "id_b"]) if "band" in keys else pairs
 
 
 def hamming_match_static(
@@ -480,21 +497,15 @@ def hamming_match_static(
     ``streaming/near_dup.py`` — ``collect_set`` absorbs it for free).
     ``carry`` columns from the probe side pass through (e.g. the event
     time a streaming watermark needs)."""
+    n_bands = _recall_bands(max_hamming, n_bits, n_bands, chunks_per_band)
     pc = _banded_chunks(
-        probe, max_hamming, probe_id_col, probe_hash_col,
-        n_bits, n_bands, chunks_per_band, carry=carry,
-    ).select(
-        F.col("id").alias("probe_id"), F.col("hh").alias("_ph"),
-        *carry, "band", "key",
+        probe, probe_id_col, probe_hash_col, n_bits, n_bands, chunks_per_band, carry
     )
-    sc = _banded_chunks(
-        static, max_hamming, static_id_col, static_hash_col,
-        n_bits, n_bands, chunks_per_band,
-    ).select(
-        F.col("id").alias("static_id"), F.col("hh").alias("_sh"), "band", "key"
-    )
+    sc = _banded_chunks(static, static_id_col, static_hash_col, n_bits, n_bands, chunks_per_band)
+    keys = [c for c in ("band", "key") if c in sc.columns]
     return (
-        pc.join(sc, ["band", "key"])
+        pc.select(F.col("id").alias("probe_id"), F.col("hh").alias("_ph"), *carry, *keys)
+        .join(sc.select(F.col("id").alias("static_id"), F.col("hh").alias("_sh"), *keys), keys)
         .filter(F.col("probe_id") != F.col("static_id"))
         .select(
             "probe_id",
@@ -538,31 +549,11 @@ def hamming_near_pairs(
     volume drops by ~2^19 per band pair while the explode factor rises
     14x — the right trade at 10^8+ rows.
     """
-    chunks = _banded_chunks(
-        df, max_hamming, id_col, hash_col, n_bits, n_bands, chunks_per_band
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.hh").bitwiseXOR(F.col("b.hh"))).alias("hamming"),
-        )
-        # verify BEFORE the dedup shuffle: hamming is a function of the
-        # pair alone (not of which band matched), so filtering first is
-        # semantically identical and shrinks the dropDuplicates exchange
-        # from every candidate pair to just the true near-dups (~20x on
-        # a uniform corpus; the difference between a shuffle of the
-        # candidate set and a shuffle of the answer at 10^8+ rows)
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+    n_bands = _recall_bands(max_hamming, n_bits, n_bands, chunks_per_band)
+    return _band_pairs(
+        _banded_chunks(df, id_col, hash_col, n_bits, n_bands, chunks_per_band),
+        F.bit_count(F.col("a.hh").bitwiseXOR(F.col("b.hh"))).alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -667,7 +658,4 @@ def _unpersist_checkpoint(df: DataFrame) -> None:
     the plan in a NEW deserializing RDD; the persisted blocks belong to
     the LogicalRDD captured at checkpoint time, reachable through the
     analyzed plan (verified against ``getRDDStorageInfo``)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort: a non-checkpointed frame has no LogicalRDD
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -21,7 +21,9 @@ bit-identical to the Column forms even where values are not exact.
   ~bucket-count fan-in reduction; recall is measured in tests against
   ``cosine_topk``.
 * ``embedding_near_dup_pairs`` — the same numpy signature in a
-  ``mapInArrow`` stage, then a Column banded self-join and exact verify.
+  ``mapInArrow`` stage, then the banded self-join the SimHash and pHash
+  operators use (``dedupe._band_pairs``), verifying the exact cosine
+  before the pair dedup.
 * ``ivf_topk``      — IVF (inverted-file) ANN: a k-means coarse quantizer
   (pyspark.ml, JVM-distributed Lloyd iterations) partitions the corpus
   into cells; each query probes its ``nprobe`` nearest cells and exact
@@ -42,6 +44,11 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     cell_list_spans,
     cell_lists,
     expand_spans,
+)
+from rosreestr_xml_to_gis_converter_spark.operators.dedupe import (
+    _band_pairs,
+    _banded_chunks,
+    spread_input_by,
 )
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import _PAIRS_PER_PASS
 
@@ -68,8 +75,6 @@ def cosine_scores(
     task, serializing the |queries| x dim dot products per row; the
     size-gated repartition costs a tiny exchange and runs them on all
     cores."""
-    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
-
     emb = spread_input_by(emb, id_col)
     e = emb.select(
         F.col(id_col).alias("cand_id"), _quantized(F.col(vec_col)).alias("qv")
@@ -400,8 +405,10 @@ def embedding_near_dup_pairs(
     invariant).  Still an equi-self-join — scales the same way.
 
     The signature is the :func:`lsh_topk` numpy kernel, run in one
-    ``mapInArrow`` stage that passes ``(id, vec)`` through; quantizing,
-    banding, the self-join and the verify stay Column expressions.
+    ``mapInArrow`` stage that passes ``(id, vec)`` through; quantizing
+    stays a Column expression, and the bands (remainder bits spread over
+    the first bands) and the self-join with its cosine verify are the
+    hamming operators' ``dedupe._banded_chunks`` / ``dedupe._band_pairs``.
     ``dim=None`` signs each vector with the hyperplanes of its own length
     (one plane set per length, built in the kernel); an explicit ``dim``
     gives any vector of another length signature 0."""
@@ -441,42 +448,9 @@ def embedding_near_dup_pairs(
         .select("id", _quantized(F.col("vec")).alias("qv"), "sig")
         .withColumn("qn", _dot(F.col("qv"), F.col("qv")))
     )
-    if bands is not None:
-        # distribute sign bits across bands; the first n_planes % bands
-        # bands get one extra bit so no bit is silently dropped
-        width = n_planes // bands
-        widths = [width + (1 if i < n_planes % bands else 0) for i in range(bands)]
-        offsets = [sum(widths[:i]) for i in range(bands)]
-        key = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("sig", offsets[i])
-                        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                        .alias("k"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        )
-        e = e.select("id", "qv", "qn", key.alias("bk")).select(
-            "id", "qv", "qn", F.col("bk.band").alias("band"), F.col("bk.k").alias("k")
-        )
-        join_cond_cols = ["band", "k"]
-    else:
-        e = e.withColumnRenamed("sig", "k")
-        join_cond_cols = ["k"]
-    a = e.alias("a")
-    b = e.alias("b")
-    cond = (F.col("a.id") < F.col("b.id"))
-    for c in join_cond_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     cos = _dot(F.col("a.qv"), F.col("b.qv")) / F.sqrt(F.col("a.qn") * F.col("b.qn"))
-    out = (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cosine"))
+    return _band_pairs(
+        _banded_chunks(e, "id", "sig", n_planes, bands, 1, carry=("qv", "qn")),
+        cos.alias("cosine"),
+        F.col("cosine") >= threshold,
     )
-    if bands is not None:
-        out = out.dropDuplicates(["id_a", "id_b"])
-    return out.filter(F.col("cosine") >= threshold)

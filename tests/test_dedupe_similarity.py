@@ -101,6 +101,35 @@ def test_simhash_flags_near_duplicates(spark, docs):
     assert len(want & got) / len(want) >= 0.9
 
 
+def test_simhash_near_pairs_match_bruteforce(spark, docs):
+    """The 4x16-bit SimHash banding returns exactly the pairs a brute
+    force over the same fingerprints finds: every pair that shares at
+    least one 16-bit chunk and lies within the radius."""
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import simhash
+
+    r = 6
+    fp = docs.select("doc_id", simhash(F.col("text")).alias("sh")).toPandas()
+    ids = fp["doc_id"].to_numpy()
+    sh = fp["sh"].to_numpy().astype(np.int64).view(np.uint64)
+    x = sh[:, None] ^ sh[None, :]
+    dist = np.unpackbits(x.view(np.uint8).reshape(len(ids), len(ids), 8), axis=2).sum(axis=2)
+    chunk = (sh[:, None] >> np.arange(0, 64, 16, dtype=np.uint64)) & np.uint64(0xFFFF)
+    shares = (chunk[:, None, :] == chunk[None, :, :]).any(axis=2)
+    want = {
+        (int(ids[i]), int(ids[j])): int(dist[i, j])
+        for i, j in zip(*np.nonzero(shares & (dist <= r)))
+        if ids[i] < ids[j]
+    }
+    got = {
+        (row.id_a, row.id_b): row.hamming
+        for row in simhash_near_pairs(docs, max_hamming=r).collect()
+    }
+    assert got == want
+    # non-trivial: beyond the exact twins, and some pairs fail the verify
+    assert (np.array(list(want.values())) > 0).sum() > 5
+    assert (shares & (dist > r)).sum() > 0
+
+
 def _emb_frame(seed: int, n: int, dim: int = 32) -> pd.DataFrame:
     rng = np.random.default_rng(seed)
     base = rng.standard_normal((n, dim)).astype(np.float32)
@@ -310,6 +339,19 @@ def test_embedding_banding_remainder_and_validation(spark):
         embedding_near_dup_pairs(emb, n_planes=12, bands=1, dim=16)
 
 
+def test_embedding_full_signature_64_planes(spark):
+    """``bands=None`` keys one band on the raw signature, so a 64-plane
+    signature needs no 64-bit mask: the exact twins pair, and nothing
+    else clears the threshold."""
+    rng = np.random.default_rng(21)
+    base = rng.normal(size=(30, 16))
+    rows = [(i, base[i].tolist()) for i in range(30)]
+    rows += [(100 + i, base[i].tolist()) for i in range(6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = embedding_near_dup_pairs(emb, threshold=0.999, n_planes=64).collect()
+    assert {(r.id_a, r.id_b) for r in got} == {(i, 100 + i) for i in range(6)}
+
+
 def test_hamming_near_pairs_recall_and_validation(spark):
     """Banded hamming search over an existing fingerprint column: with
     max_hamming+1 bands the pigeonhole guarantees EVERY pair within the
@@ -447,6 +489,9 @@ def test_hamming_combinatorial_banding_matches_bruteforce(spark):
         hamming_near_pairs(df, max_hamming=4, n_bands=6, chunks_per_band=3)
     with _pytest.raises(ValueError, match="chunks_per_band"):
         hamming_near_pairs(df, max_hamming=4, n_bands=8, chunks_per_band=9)
+    # C(64, 7) = 621M combinations: rejected by count, never listed
+    with _pytest.raises(ValueError, match="621216192 band combinations"):
+        hamming_near_pairs(df, max_hamming=4, n_bands=64, chunks_per_band=7)
 
 
 def test_connected_components_matches_union_find(spark):

@@ -224,6 +224,49 @@ def test_minhash_lsh_pairs_plan_one_kernel_reused_band_exchange(spark, tmp_path)
     assert len(scans) == 2 and len(shingles) == len(scans), pc.final
 
 
+@pytest.mark.parametrize("operator", ["hamming", "simhash", "embedding"])
+def test_band_pairs_verify_below_dedup(spark, operator):
+    """The banded near-dup operators verify each candidate pair BEFORE
+    the pair dedup: the radius/threshold predicate sits below the
+    ``dropDuplicates`` aggregate (Catalyst folds it into the join
+    condition), so the dedup shuffles only the pairs that pass."""
+    import numpy as np
+
+    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import (
+        hamming_near_pairs,
+        simhash_near_pairs,
+    )
+    from rosreestr_xml_to_gis_converter_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    rng = np.random.default_rng(8)
+    if operator == "hamming":
+        df = spark.createDataFrame(
+            [(i, int(h)) for i, h in enumerate(rng.integers(-(2**62), 2**62, 40))],
+            "id long, h long",
+        )
+        pairs, verify = hamming_near_pairs(df, max_hamming=4), "<= 4)"
+    elif operator == "simhash":
+        df = spark.createDataFrame(
+            [(i, " ".join(rng.choice(list("abcdefgh"), 20))) for i in range(40)],
+            "doc_id long, text string",
+        )
+        pairs, verify = simhash_near_pairs(df, max_hamming=8), "<= 8)"
+    else:
+        df = spark.createDataFrame(
+            [(i, rng.standard_normal(8).tolist()) for i in range(40)],
+            "vec_id long, embedding array<double>",
+        )
+        pairs = embedding_near_dup_pairs(df, threshold=0.9, n_planes=8, bands=3)
+        verify = ">= 0.9)"
+    lines = pairs._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    dedup = [i for i, ln in enumerate(lines) if "Aggregate [id_a#" in ln]
+    checks = [i for i, ln in enumerate(lines) if verify in ln]
+    assert len(dedup) == 1 and checks, "\n".join(lines)
+    assert min(checks) > dedup[0], "\n".join(lines)
+
+
 def test_export_is_one_pass_over_the_parse(spark, tmp_path):
     """The SHP + XLSX export over an uncached ``parse_extracts`` lineage
     is one per-document plan: the parse's ``MapInPandas`` appears once,
