@@ -8,12 +8,14 @@ quadtree grid whose *encode is closed-form integer arithmetic*:
     2^r x 2^r cells;  ix = floor((lon+180)/360 * 2^r), iy likewise for lat;
     cell_id = (r << 56) | (ix << 28) | iy      (fits in a positive int64)
 
-This buys a property h3 cannot give us here: **cell-encode of the 10^12-row
-image side is pure Column arithmetic** — it runs inside WholeStageCodegen
-on the JVM with zero Python/Arrow transfer, so the hot path of the
-flagship spatial join never leaves the executor.  The numpy mirror below
-is bit-identical and is used by brute-force oracles, polygon covers, and
-tests.
+This buys a property h3 cannot give us here: **the encode has two
+bit-identical forms**.  The numpy one (:func:`latlng_to_cell`) runs inside
+the broadcast Arrow kernels of the spatial join and kNN, which derive the
+image points from ``phash`` and encode them in the same vectorized pass;
+it also builds polygon covers, candidate lists and the numpy oracles.
+The Column one (:func:`cell_col`) runs inside WholeStageCodegen for the
+paths that need ``cell`` in the JVM: the shuffled equi-join and
+``knn_bruteforce``; :func:`cell_sql` is the DuckDB oracles' form.
 
 Semantics generalize the reference's per-parcel contour keying
 (/root/reference/real_estate.py:735-782 builds ring sets per cadastral
@@ -162,7 +164,7 @@ def expand_spans(start: np.ndarray, count: np.ndarray, max_pairs: int):
 
 
 # ---------------------------------------------------------------------------
-# Column side (the hot path — WholeStageCodegen, no Python)
+# Column side (WholeStageCodegen, no Python: the shuffled join's key)
 # ---------------------------------------------------------------------------
 
 def cell_col(lat: Column, lon: Column, res: int) -> Column:

@@ -19,10 +19,14 @@ are broken by ``cad_number``.  Three entry points:
   layer directly, and every image ranks the whole layer with the same
   numpy top-k.
 
-The numpy top-k computes ``sqrt(dx*dx + dy*dy)`` with the same IEEE
-double operations in the same order as the Column expression, so
-distances are bit-identical to the relational paths, and orders
-candidates by ``(dist, cad_number)`` through one ``lexsort``.
+The numpy top-k reads ``(image_id, phash)`` and derives each image's
+point and cell in the kernel, bit-identical to ``with_geotag`` +
+``cell_col`` (which ``knn_bruteforce`` keeps; the SQL oracles use
+``cell_sql``).  It
+computes ``sqrt(dx*dx + dy*dy)`` with the same IEEE double operations in
+the same order as the Column expression, so distances are bit-identical
+to the relational paths, and picks each image's first k candidates by
+``(dist, cad_number)`` with a segmented selection (:func:`_segment_topk`).
 """
 
 from __future__ import annotations
@@ -32,7 +36,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rosreestr_xml_to_gis_converter_spark.index.grid import (
-    cell_col,
     cell_id,
     cell_ij,
     cell_list_spans,
@@ -43,6 +46,7 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
 from rosreestr_xml_to_gis_converter_spark.operators.spatial_join import (
     BROADCAST_COVER_MAX_BYTES,
     _PAIRS_PER_PASS,
+    _batch_points,
     with_geotag,
 )
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
@@ -115,12 +119,9 @@ def knn_literal(
             "clat": pa.array([c[2] for c in centroids], pa.float64()),
         }
     )
-    # no cell column: a null cell matches no candidate list, so every row
-    # ranks the whole layer
-    pts = with_geotag(images, box).select(
-        "image_id", "lon", "lat", F.lit(None).cast("long").alias("cell")
-    )
-    return _numpy_topk(pts, layer, k)
+    # no resolution: every row's cell is -1, which matches no candidate
+    # list, so every row ranks the whole layer
+    return _numpy_topk(images, box, layer, k)
 
 
 class LayerTooLargeError(ValueError):
@@ -176,8 +177,6 @@ def knn_grid(
             "layer_fallback=False selected the JVM escalation ladder, which was "
             "removed; knn_grid always ranks in the numpy top-k"
         )
-    pts = with_geotag(images, box).select("image_id", "lon", "lat")
-    pts = pts.withColumn("cell", cell_col(F.col("lat"), F.col("lon"), res))
     cen = centroids.select(
         "cad_number", F.col("clon").cast("double"), F.col("clat").cast("double")
     )
@@ -192,7 +191,7 @@ def knn_grid(
                 f"candidate lists fit BROADCAST_COVER_MAX_BYTES={BROADCAST_COVER_MAX_BYTES}; "
                 "pass layer_fallback=True if the layer is dimension-sized"
             )
-    return _numpy_topk(pts, layer, k, res, disk)
+    return _numpy_topk(images, box, layer, k, res, disk)
 
 
 # ---------------------------------------------------------------------------
@@ -209,9 +208,9 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
     Returns ``(clon, clat, cnull, cads, keys, offsets, pool)``, a
     :func:`cell_lists` index: cell ``keys[i]`` holds the ``_ord`` of every
     centroid within Chebyshev ``disk`` of it, ascending, in
-    ``pool[offsets[i]:offsets[i + 1]]``, with ``latlng_to_cell``
-    bit-identical to the images' ``cell_col``.  ``pool[offsets[-1]:]`` is
-    the whole layer.
+    ``pool[offsets[i]:offsets[i + 1]]``, keyed by the same
+    ``latlng_to_cell`` that encodes the images in the kernel.
+    ``pool[offsets[-1]:]`` is the whole layer.
     ``res=None`` builds no cell lists.
     """
     import pyarrow.compute as pc
@@ -239,23 +238,42 @@ def _layer_table(layer, res: int | None, disk: int) -> tuple:
     return clon, clat, cnull, cads, keys, offsets, pool
 
 
-def _topk_batches(layer_bc, k: int):
-    """Worker side: per Arrow batch of ``(image_id, lon, lat, cell)``,
-    look each row's cell up in the broadcast lists (``cell_list_spans``),
-    expand the ragged candidate lists (``expand_spans``), compute the
-    distances, sort with ``lexsort((_ord, dist, row))`` and keep the
-    first k per row."""
+def _segment_topk(key: np.ndarray, starts: np.ndarray, k: int) -> tuple:
+    """Positions and 1-based ranks of the k smallest keys in each segment
+    ``key[starts[i]:starts[i + 1]]`` (``starts`` ascending, the last
+    segment running to the end), segment by segment; equal keys go to the
+    first position.  A segment shorter than k emits all of its entries.
+
+    One ``fmin.reduceat`` pass per rank: the pass picks each segment's
+    first minimum and marks it taken (NaN, which ``fmin`` skips)."""
+    key = np.array(key, dtype=np.float64)
+    size = np.diff(np.append(starts, len(key)))
+    seg = np.repeat(np.arange(len(starts)), size)
+    top = np.full((len(starts), min(k, size.max(initial=0))), -1, dtype=np.int64)
+    for r in range(top.shape[1]):
+        hit = np.flatnonzero(key == np.fmin.reduceat(key, starts)[seg])
+        first = hit[np.diff(seg[hit], prepend=-1) != 0]
+        top[seg[first], r] = first
+        key[first] = np.nan
+    rank = np.broadcast_to(np.arange(1, top.shape[1] + 1, dtype=np.int32), top.shape)
+    sel = top >= 0
+    return top[sel], rank[sel]
+
+
+def _topk_batches(layer_bc, box: GeoBox, res: int | None, k: int):
+    """Worker side: per Arrow batch of ``(image_id, phash)``, derive each
+    row's point and cell (``_batch_points``), look the cell up in the
+    broadcast lists (``cell_list_spans``), expand the ragged candidate
+    lists (``expand_spans``; ``local == 0`` starts a row's segment),
+    compute the distances and keep each row's first k by ``(dist,
+    _ord)`` (:func:`_segment_topk`: every list is ascending in ``_ord``,
+    so the first of equal distances has the smallest ordinal)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     def topk(batches):
         clon, clat, cnull, cads, keys, offsets, pool = layer_bc.value
         for batch in batches:
-            lon, lat = batch.column("lon"), batch.column("lat")
-            rnull = pc.or_(pc.is_null(lon), pc.is_null(lat)).to_numpy(zero_copy_only=False)
-            lon = lon.to_numpy(zero_copy_only=False)
-            lat = lat.to_numpy(zero_copy_only=False)
-            cell = pc.fill_null(batch.column("cell"), -1).to_numpy()
+            lon, lat, cell, rnull = _batch_points(batch.column("phash"), box, res)
             start, cnt = cell_list_spans(keys, offsets, cell)
             short = cnt < k
             start = np.where(short, offsets[-1], start)
@@ -266,16 +284,14 @@ def _topk_batches(layer_bc, k: int):
                 dy = lat[row] - clat[ords]
                 dist = np.sqrt(dx * dx + dy * dy)
                 dnull = rnull[row] | cnull[ords]
-                o = np.lexsort((ords, np.where(dnull, -np.inf, dist), row))
-                # rows stay contiguous and in place under the sort (row is
-                # its primary key), so ``local`` is each sorted pair's rank
-                sel = local < k
-                top = o[sel]
+                top, rank = _segment_topk(
+                    np.where(dnull, -np.inf, dist), np.flatnonzero(local == 0), k
+                )
                 yield pa.RecordBatch.from_arrays(
                     [
                         batch.column("image_id").take(row[top]),
                         cads.take(ords[top]),
-                        pa.array(local[sel] + 1, pa.int32()),
+                        pa.array(rank),
                         pa.array(dist[top], mask=dnull[top]),
                     ],
                     names=["image_id", "cad_number", "rank", "dist"],
@@ -285,12 +301,13 @@ def _topk_batches(layer_bc, k: int):
 
 
 def _numpy_topk(
-    pts: DataFrame, layer, k: int, res: int | None = None, disk: int = 0
+    images: DataFrame, box: GeoBox, layer, k: int, res: int | None = None, disk: int = 0
 ) -> DataFrame:
-    """Rank ``pts`` (image_id, lon, lat, cell) against the Arrow ``layer``
-    (cad_number, clon, clat) in one ``mapInArrow`` stage; the layer table
-    travels to the workers as one broadcast."""
-    bc = pts.sparkSession.sparkContext.broadcast(_layer_table(layer, res, disk))
-    return pts.select("image_id", "lon", "lat", "cell").mapInArrow(
-        _topk_batches(bc, k), schema=_OUT_SCHEMA
+    """Rank ``images`` against the Arrow ``layer`` (cad_number, clon,
+    clat) in one ``mapInArrow`` stage over ``(image_id, phash)``, each
+    point geotagged through ``box`` and cell-encoded at ``res`` in the
+    kernel; the layer table travels to the workers as one broadcast."""
+    bc = images.sparkSession.sparkContext.broadcast(_layer_table(layer, res, disk))
+    return images.select("image_id", "phash").mapInArrow(
+        _topk_batches(bc, box, res, k), schema=_OUT_SCHEMA
     )

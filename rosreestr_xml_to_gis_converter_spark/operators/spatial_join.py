@@ -5,8 +5,8 @@ Generalizes the reference's geometry-attributes denormalization join
 contour) to web scale, as a point-side broadcast join:
 
     images (10^12 rows, input_hint shape)
-      |  derive (lon, lat) from phash, cell-encode  -- Column arithmetic
-      |  one mapInArrow stage, each image row crossing once:
+      |  one mapInArrow stage over (image_id, phash), each row crossing once:
+      |    derive (lon, lat) from phash and cell-encode it in numpy
       |    look its cell up in the broadcast cover index (PreparedCover)
       |    full entries (cell inside the polygon) -> emit
       |    boundary entries -> numpy edge-table point-in-polygon test
@@ -21,8 +21,12 @@ Scale properties:
   sorted ``cad_number``s, a CSR index from cover cell to ``(parcel
   ordinal, full)`` entries and the boundary edge table.  A size guard
   bounds it; a larger layer takes the shuffled path.
+* The point derivation (``GeoBox.lon_np``/``lat_np``, ``latlng_to_cell``)
+  runs in the kernel, bit-identical to ``with_geotag`` + ``cell_col``, so
+  only ``image_id`` and ``phash`` cross into Python.
 * The shuffled path (``broadcast_cover=False``) is a Catalyst equi-join on
-  ``cell`` with AQE skew handling and optional salting; only boundary rows
+  ``cell``, encoded in Column arithmetic because the JVM join needs it,
+  with AQE skew handling and optional salting; only boundary rows
   enter Python, carrying their packed geometry (WKB-analog).  A coarse
   parent-cell column (``cell_parent_col``) is its intended storage
   partition key, so parquet/Iceberg stats prune the equi-join.
@@ -49,6 +53,7 @@ from rosreestr_xml_to_gis_converter_spark.index.grid import (
     cell_list_spans,
     cell_lists,
     expand_spans,
+    latlng_to_cell,
     polygon_to_cells,
 )
 from rosreestr_xml_to_gis_converter_spark.synth import GeoBox
@@ -187,10 +192,27 @@ def prepare_cover(cover: DataFrame, max_bytes: int = BROADCAST_COVER_MAX_BYTES) 
 
 
 def with_geotag(images: DataFrame, box: GeoBox) -> DataFrame:
-    """Attach derived (lon, lat) — Column arithmetic only, codegen'd."""
+    """Attach derived (lon, lat) as Column arithmetic, for the relational
+    paths (the shuffled join, ``knn_bruteforce``); the broadcast kernels
+    derive the same doubles in numpy (:func:`_batch_points`)."""
     return images.withColumn("lon", box.lon_col(F.col("phash"))).withColumn(
         "lat", box.lat_col(F.col("phash"))
     )
+
+
+def _batch_points(phash, box: GeoBox, res: int | None) -> tuple:
+    """Kernel-side geotag of an Arrow ``phash`` column: numpy ``(lon, lat,
+    cell, null)``, bit-identical to :func:`with_geotag` + ``cell_col``.
+    A null ``phash`` has ``null`` set and cell -1, which no cell list
+    holds; ``res=None`` gives every row cell -1."""
+    import pyarrow.compute as pc
+
+    null = phash.is_null().to_numpy(zero_copy_only=False)
+    ph = pc.fill_null(phash, 0).to_numpy()
+    lon, lat = box.lon_np(ph), box.lat_np(ph)
+    if res is None:
+        return lon, lat, np.full(len(ph), -1, dtype=np.int64), null
+    return lon, lat, np.where(null, -1, latlng_to_cell(lat, lon, res)), null
 
 
 _JOIN_SCHEMA = "image_id string, cad_number string, cell long"
@@ -200,29 +222,27 @@ _JOIN_SCHEMA = "image_id string, cad_number string, cell long"
 _PAIRS_PER_PASS = 1 << 20
 
 
-def _point_join_batches(cover_bc, max_pairs: int):
+def _point_join_batches(cover_bc, box: GeoBox, res: int, max_pairs: int):
     """Worker side of the point-side join, per Arrow batch of ``(image_id,
-    lon, lat, cell)``: expand each row's cell entries, about ``max_pairs``
-    per pass; keep full entries and test boundary ones with one
-    :func:`points_in_polygons` call.  A null cell matches nothing, as in
-    the equi-join; strings stay Arrow buffers (``take``)."""
+    phash)``: derive each row's point and cell (:func:`_batch_points`),
+    expand its cell entries, about ``max_pairs`` per pass; keep full
+    entries and test boundary ones with one :func:`points_in_polygons`
+    call.  A null ``phash`` matches nothing, as in the equi-join; strings
+    stay Arrow buffers (``take``)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     def join(batches):
         cads, keys, offsets, ords, full, edges, starts = cover_bc.value
         for batch in batches:
-            cell = batch.column("cell")
-            start, cnt = cell_list_spans(keys, offsets, pc.fill_null(cell, -1).to_numpy())
-            lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            lon, lat, cell, _ = _batch_points(batch.column("phash"), box, res)
+            start, cnt = cell_list_spans(keys, offsets, cell)
             for row, _, idx in expand_spans(start, cnt, max_pairs):
                 ord_, keep = ords[idx], full[idx]
                 bnd = np.flatnonzero(~keep)
                 keep[bnd] = points_in_polygons(lon[row[bnd]], lat[row[bnd]], ord_[bnd], edges, starts)
                 row = row[keep]
                 yield pa.RecordBatch.from_arrays(
-                    [batch.column("image_id").take(row), cads.take(ord_[keep]), cell.take(row)],
+                    [batch.column("image_id").take(row), cads.take(ord_[keep]), pa.array(cell[row])],
                     names=["image_id", "cad_number", "cell"],
                 )
 
@@ -270,10 +290,11 @@ def spatial_join(
     per image row and cover row of its cell whose parcel contains it.
 
     ``broadcast_cover=True`` (parcel layer << image table) or a
-    :class:`PreparedCover`: the point-side join, each image row crossing
-    into one ``mapInArrow`` stage.  Pass a ``PreparedCover`` to amortize
-    its build across joins; one built here is size-guarded, and over
-    ``broadcast_max_bytes`` the join warns and takes the shuffled path.
+    :class:`PreparedCover`: the point-side join, each image row's
+    ``(image_id, phash)`` crossing into one ``mapInArrow`` stage.  Pass a
+    ``PreparedCover`` to amortize its build across joins; one built here
+    is size-guarded, and over ``broadcast_max_bytes`` the join warns and
+    takes the shuffled path.
     There is no join to salt, so ``salt > 1`` raises ``ValueError``.
 
     ``broadcast_cover=False``: a shuffled equi-join on ``cell`` with AQE
@@ -291,9 +312,6 @@ def spatial_join(
     from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
 
     images = spread_input_by(images, "image_id")
-    pts = with_geotag(images, box).withColumn(
-        "cell", cell_col(F.col("lat"), F.col("lon"), res=res)
-    )
     pc = cover if prepared else None
     if broadcast_cover and not prepared:
         try:
@@ -301,9 +319,12 @@ def spatial_join(
         except CoverTooLargeError as exc:
             warnings.warn(f"spatial_join: {exc}; falling back to shuffled join")
     if pc is not None:
-        return pts.select("image_id", "lon", "lat", "cell").mapInArrow(
-            _point_join_batches(pc.geom_bc, _PAIRS_PER_PASS), schema=_JOIN_SCHEMA
+        return images.select("image_id", "phash").mapInArrow(
+            _point_join_batches(pc.geom_bc, box, res, _PAIRS_PER_PASS), schema=_JOIN_SCHEMA
         )
+    pts = with_geotag(images, box).withColumn(
+        "cell", cell_col(F.col("lat"), F.col("lon"), res=res)
+    )
     cov = cover
     if salted:
         pts = pts.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))

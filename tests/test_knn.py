@@ -7,7 +7,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from rosreestr_xml_to_gis_converter_spark.operators.knn import knn_bruteforce, knn_grid
+from rosreestr_xml_to_gis_converter_spark.operators.knn import (
+    _segment_topk,
+    knn_bruteforce,
+    knn_grid,
+)
 from rosreestr_xml_to_gis_converter_spark.schemas import IMAGES_SCHEMA
 from rosreestr_xml_to_gis_converter_spark.synth import TESTDATA_BOX, gen_images_pdf
 
@@ -272,3 +276,31 @@ def test_numpy_topk_edge_cases_match_bruteforce(spark):
         nulls = [t for t in ranked if t[0] == "null"]
         assert [t[1] for t in nulls] == sorted(c for c, _, _ in layer)[:n]
         assert all(t[3] is None for t in nulls)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_segment_topk_matches_lexsort(seed):
+    """The kernel's segmented top-k equals the sort it replaced,
+    ``lexsort((ords, key, row))`` keeping each row's first k, on ragged
+    segments with many tied keys, -inf (null) and +inf keys, segments
+    shorter than k, and k larger than every segment; ``ords`` ascend in
+    every segment, as the candidate lists do."""
+    rng = np.random.default_rng(seed)
+    size = rng.integers(1, 9, int(rng.integers(1, 300)))
+    starts = np.concatenate([[0], np.cumsum(size)[:-1]])
+    row = np.repeat(np.arange(len(size)), size)
+    local = np.arange(len(row)) - np.repeat(starts, size)
+    ords = np.cumsum(rng.integers(1, 4, len(row)))
+    key = rng.integers(0, 4, len(row)).astype(np.float64)
+    key[rng.random(len(row)) < 0.2] = -np.inf
+    key[rng.random(len(row)) < 0.05] = np.inf
+    before = key.copy()
+    for k in (1, 3, int(size.max()) + 2):
+        o = np.lexsort((ords, key, row))
+        sel = local < k
+        top, rank = _segment_topk(key, starts, k)
+        assert np.array_equal(top, o[sel])
+        assert np.array_equal(rank, local[sel] + 1)
+    assert np.array_equal(key, before)
+    empty = _segment_topk(np.empty(0), np.empty(0, dtype=np.int64), 3)
+    assert [len(a) for a in empty] == [0, 0]

@@ -3,6 +3,7 @@ brute-force numpy oracle (SURVEY.md section 5 item 3)."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import numpy as np
@@ -102,16 +103,28 @@ def test_distributed_cover_equals_driver_cover(spark):
 
 
 def _assert_point_side_plan(final_plan: str) -> None:
-    """The broadcast path's executed plan: one Arrow stage over the image
-    rows, no join node, no shuffle of the image side except the
-    size-gated ``image_id`` spread, and no geometry entering Python."""
+    """The broadcast path's executed plan: one Arrow stage whose input is
+    exactly the image rows' ``(image_id, phash)``, no lon/lat/cell
+    projection below it (the kernel derives them), no join node, no
+    shuffle of the image side except the size-gated ``image_id`` spread,
+    and no geometry entering Python."""
     lines = final_plan.splitlines()
-    arrow = [ln for ln in lines if "MapInArrow" in ln]
+    arrow = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
     assert len(arrow) == 1 and "MapInPandas" not in final_plan
-    assert "geom#" not in arrow[0]
+    assert re.search(r"MapInArrow \w+\(image_id#\d+, phash#\d+L\)#", lines[arrow[0]]), lines[arrow[0]]
+    below = lines[arrow[0] + 1 :]
+    assert not [ln for ln in below if re.search(r"\b(lon|lat|cell)#", ln)], below
     assert "Join" not in final_plan
     exchanges = [ln for ln in lines if "Exchange" in ln]
     assert all("hashpartitioning(image_id#" in ln for ln in exchanges), exchanges
+
+
+def _assert_scan_prunes_to_phash(final_plan: str) -> None:
+    """Exactly one image scan, and the parquet reader prunes it to
+    ``image_id`` and ``phash``."""
+    scans = [ln for ln in final_plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1
+    assert re.search(r"FileScan parquet \[image_id#\d+,phash#\d+L\]", scans[0]), scans[0]
 
 
 def test_join_plan_is_codegen_and_broadcast(spark, tmp_path):
@@ -133,10 +146,92 @@ def test_join_plan_is_codegen_and_broadcast(spark, tmp_path):
     _assert_point_side_plan(final_plan)
     # AQE final plans mark whole-stage-codegen spans with "*(n)"
     assert "*(1)" in final_plan or "WholeStageCodegen" in final_plan
-    # exactly one image scan; column pruning: only image_id + phash leave it
-    scans = [ln for ln in final_plan.splitlines() if "FileScan parquet" in ln]
-    assert len(scans) == 1
-    assert "phash" in scans[0] and "caption" not in scans[0] and "bytes" not in scans[0]
+    _assert_scan_prunes_to_phash(final_plan)
+
+
+def test_knn_grid_plan_is_one_arrow_stage_over_phash(spark, tmp_path):
+    """knn_grid against a parquet scan: one Arrow stage reading exactly
+    ``(image_id, phash)`` from a scan pruned to those two columns, with
+    no geotag or cell projection on the JVM side and no join."""
+    import pandas as pd
+
+    from rosreestr_xml_to_gis_converter_spark.operators.knn import knn_grid
+
+    path = str(tmp_path / "images.parquet")
+    spark.createDataFrame(
+        _strip_bytes(gen_images_pdf(7, 50)), schema=IMAGES_SCHEMA
+    ).write.parquet(path)
+    cen = spark.createDataFrame(
+        pd.DataFrame({"cad_number": ["a", "b", "c"], "clon": [31.0, 35.0, 40.0],
+                      "clat": [51.0, 53.0, 55.0]})
+    )
+    out = knn_grid(spark.read.parquet(path), cen, TESTDATA_BOX, k=2, res=9, disk=1,
+                   layer_fallback=True)
+    assert out.count() == 50 * 2
+    out.collect()
+    final_plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    _assert_point_side_plan(final_plan)
+    _assert_scan_prunes_to_phash(final_plan)
+
+
+def _edge_phash(box: GeoBox, res: int, rng) -> np.ndarray:
+    """phash values whose lon and lat fall on res-``res`` cell edges inside
+    ``box``, each with its two neighbours in 2^-32 steps of the box side."""
+    n = 1 << res
+    fracs = []
+    for v0, dv, w0, dw in ((box.lon0, box.dlon, -180.0, 360.0), (box.lat0, box.dlat, -90.0, 180.0)):
+        lo, hi = int(np.ceil((v0 - w0) / dw * n)), int(np.floor((v0 + dv - w0) / dw * n))
+        edge = w0 + rng.integers(lo, hi, 4) * (dw / n)
+        f = np.floor((edge - v0) / dv * 2.0**32).astype(np.int64)
+        fracs.append(np.clip((f[:, None] + np.arange(-1, 2)).ravel(), 0, (1 << 32) - 1))
+    fx, fy = (f.astype(np.uint64) for f in fracs)
+    return ((fy << np.uint64(32)) | fx).view(np.int64)
+
+
+def test_kernel_points_bitwise_equal_column_geotag(spark):
+    """The broadcast kernels' numpy point derivation (lon, lat, cell) is
+    bit-identical to ``with_geotag`` + ``cell_col`` run through Spark:
+    exact doubles and int64 cells, on phash 0, -1, 2^32 - 1, negative
+    int64s, values on (and beside) cell edges at res 12, 14 and 28, and
+    null.  A null phash has null lon/lat in Spark and the null flag and
+    cell -1 in numpy; ``cell_col`` gives it the world's north-east corner
+    cell instead (``greatest``/``least`` skip nulls), which the kernels
+    do not reproduce."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from rosreestr_xml_to_gis_converter_spark.index.grid import cell_col
+
+    world = GeoBox(lon0=-180.0, lat0=-90.0, dlon=360.0, dlat=180.0)
+    rng = np.random.default_rng(3)
+    fixed = [0, -1, (1 << 32) - 1, -(1 << 63), -(1 << 62) - 12345, (1 << 63) - 1]
+    on_edge = {(res, axis): False for res in (12, 14, 28) for axis in "xy"}
+    for box in (TESTDATA_BOX, world):
+        for res in (12, 14, 28):
+            ph = np.concatenate([fixed, *(_edge_phash(box, r, rng) for r in (12, 14, 28))])
+            x = (box.lon_np(ph) + 180.0) / 360.0 * (1 << res)
+            y = (box.lat_np(ph) + 90.0) / 180.0 * (1 << res)
+            on_edge[res, "x"] |= bool((x == np.floor(x)).any())
+            on_edge[res, "y"] |= bool((y == np.floor(y)).any())
+            col = pd.array([*ph.tolist(), None], dtype="Int64")
+            df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(col)), "phash": col}))
+            want = (
+                sj.with_geotag(df, box)
+                .select("i", "lon", "lat", cell_col(F.col("lat"), F.col("lon"), res).alias("cell"))
+                .orderBy("i")
+                .toArrow()
+            )
+            lon, lat, cell, null = sj._batch_points(pa.array(col, pa.int64()), box, res)
+            assert null.tolist() == [False] * len(ph) + [True]
+            assert want.column("lon").null_count == 1 and want.column("lat").null_count == 1
+            for got, name in ((lon, "lon"), (lat, "lat")):
+                exp = want.column(name).to_numpy(zero_copy_only=False)[:-1]
+                assert np.array_equal(got[:-1].view(np.int64), exp.view(np.int64)), (box, res, name)
+            assert np.array_equal(cell[:-1], want.column("cell").to_numpy(zero_copy_only=False)[:-1])
+            assert cell[-1] == -1
+    # fixture sanity: at every res, some points sit exactly on a cell edge
+    assert all(on_edge.values()), on_edge
 
 
 def test_broadcast_cover_size_guard_falls_back(spark):
