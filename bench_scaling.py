@@ -101,7 +101,7 @@ else:  # knn: grid-disk candidate expansion + map-side top-k (operators/knn.py)
 
     def job():
         # literal parcel dimension: collected unguarded, without the
-        # limit the default layer_fallback=None puts on the collect
+        # row cap the default guarded collect puts on it
         return knn_grid(
             img, centroids, TESTDATA_BOX, k=3, res=5, disk=2,
             layer_fallback=True,

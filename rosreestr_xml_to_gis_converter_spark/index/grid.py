@@ -171,7 +171,8 @@ def cell_col(lat: Column, lon: Column, res: int) -> Column:
     """Point -> cell id as a pure Column expression (JVM-side).
 
     Bit-identical to :func:`latlng_to_cell`: identical IEEE-754 double ops
-    in identical order, then the same int64 packing.
+    in identical order, then the same int64 packing.  A null ``lat`` or
+    ``lon`` gives a null cell, which no equi-join matches.
     """
     n = _scale(res)
     nf = float(n)
@@ -179,10 +180,16 @@ def cell_col(lat: Column, lon: Column, res: int) -> Column:
     iy = F.floor((lat - F.lit(WORLD_LAT0)) / F.lit(WORLD_DLAT) * F.lit(nf)).cast("long")
     ix = F.greatest(F.lit(0), F.least(F.lit(n - 1), ix))
     iy = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy))
-    return (
+    # greatest/least skip nulls (a null point would clamp to the world's
+    # north-east corner cell), so the null guard is explicit.  It tests
+    # lat/lon, not the clamp: a CASE clamp repeats ``ix`` three times in
+    # the not-null filter Spark infers for the join key and pushes into
+    # the scan, several times slower on a computed ``phash``.
+    return F.when(
+        lat.isNotNull() & lon.isNotNull(),
         F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
         + ix * F.lit(1 << _IX_SHIFT).cast("long")
-        + iy
+        + iy,
     )
 
 

@@ -142,7 +142,7 @@ def knn_grid(
     k: int,
     res: int,
     disk: int,
-    layer_fallback: bool | None = None,
+    layer_fallback: bool = False,
 ) -> DataFrame:
     """Grid-bounded kNN: candidates limited to centroids whose cell is
     within Chebyshev distance ``disk`` of the image's cell at ``res``.
@@ -166,17 +166,11 @@ def knn_grid(
     its per-cell candidate lists are built in numpy and broadcast, and a
     single ``mapInArrow`` stage ranks every image.  The image side is
     scanned once and never shuffled.  ``layer_fallback=True`` states that
-    the layer is dimension-sized and collects it unguarded.  ``None``
+    the layer is dimension-sized and collects it unguarded.  The default
     collects at most :func:`_max_layer_rows` rows, the most whose
     broadcast table fits ``BROADCAST_COVER_MAX_BYTES`` at this ``disk``,
     and raises :class:`LayerTooLargeError` when the layer is larger.
-    ``False`` raises ``ValueError``.
     """
-    if layer_fallback is False:
-        raise ValueError(
-            "layer_fallback=False selected the JVM escalation ladder, which was "
-            "removed; knn_grid always ranks in the numpy top-k"
-        )
     cen = centroids.select(
         "cad_number", F.col("clon").cast("double"), F.col("clat").cast("double")
     )

@@ -24,12 +24,14 @@ Scale properties:
 * The point derivation (``GeoBox.lon_np``/``lat_np``, ``latlng_to_cell``)
   runs in the kernel, bit-identical to ``with_geotag`` + ``cell_col``, so
   only ``image_id`` and ``phash`` cross into Python.
-* The shuffled path (``broadcast_cover=False``) is a Catalyst equi-join on
-  ``cell``, encoded in Column arithmetic because the JVM join needs it,
-  with AQE skew handling and optional salting; only boundary rows
-  enter Python, carrying their packed geometry (WKB-analog).  A coarse
-  parent-cell column (``cell_parent_col``) is its intended storage
-  partition key, so parquet/Iceberg stats prune the equi-join.
+* The shuffled path (``broadcast_cover=False``) is one Catalyst equi-join
+  on ``cell``, encoded in Column arithmetic because the JVM join needs
+  it, with AQE skew handling and optional salting.  Every joined row
+  crosses one Arrow stage: full rows pass, boundary rows carry their
+  packed geometry (WKB-analog) into the point-in-polygon test.  The image
+  side is scanned and shuffled once.  A coarse parent-cell column
+  (``cell_parent_col``) is its intended storage partition key, so
+  parquet/Iceberg stats prune the equi-join.
 """
 
 from __future__ import annotations
@@ -250,15 +252,16 @@ def _point_join_batches(cover_bc, box: GeoBox, res: int, max_pairs: int):
 
 
 def _refine_batches(batches):
-    """Exact PIP on boundary candidates whose geometry rides the rows
-    (the shuffled path, for layers too large to pin on the workers).
+    """Refine the shuffled join's candidate rows, whose geometry rides the
+    rows (for layers too large to pin on the workers): full rows pass,
+    boundary rows get the exact point-in-polygon test.
 
     The string/binary columns stay Arrow buffers end to end:
-    ``dictionary_encode`` collapses the per-row geom bytes to (indices,
-    uniques) in native code, the batch's uniques become one edge table,
-    and a single :func:`points_in_polygons` call tests every row against
-    its own polygon on zero-copy lon/lat numpy views; the passthrough
-    columns are filtered natively.
+    ``dictionary_encode`` collapses the boundary rows' geom bytes to
+    (indices, uniques) in native code, the batch's uniques become one edge
+    table, and a single :func:`points_in_polygons` call tests every
+    boundary row against its own polygon; the passthrough columns are
+    filtered natively.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -266,11 +269,13 @@ def _refine_batches(batches):
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        gd = pc.dictionary_encode(batch.column("geom"))
+        keep = batch.column("full").to_numpy(zero_copy_only=False, writable=True)
+        bnd = np.flatnonzero(~keep)
+        gd = pc.dictionary_encode(batch.column("geom").take(bnd))
         edges, starts = edge_table([unpack_rings(g) for g in gd.dictionary.to_pylist()])
-        keep = points_in_polygons(
-            batch.column("lon").to_numpy(zero_copy_only=False),
-            batch.column("lat").to_numpy(zero_copy_only=False),
+        keep[bnd] = points_in_polygons(
+            batch.column("lon").to_numpy(zero_copy_only=False)[bnd],
+            batch.column("lat").to_numpy(zero_copy_only=False)[bnd],
             gd.indices.to_numpy(zero_copy_only=False),
             edges,
             starts,
@@ -299,19 +304,14 @@ def spatial_join(
 
     ``broadcast_cover=False``: a shuffled equi-join on ``cell`` with AQE
     skew handling; ``salt`` replicates the cover side ``salt`` ways for
-    pathological hot cells.
+    pathological hot cells.  Every joined row crosses one Arrow stage
+    (:func:`_refine_batches`); full rows pass.
     """
     prepared = isinstance(cover, PreparedCover)
     salted = salt is not None and salt > 1
     if salted and (broadcast_cover or prepared):
         raise ValueError("salt applies only to the shuffled join: pass broadcast_cover=False")
     res = cover.res if prepared else _cover_res(cover)
-    # input-skew guard: a low-row-group parquet concentrates the scan, and
-    # the join fused behind it, on a few tasks; the size-gated repartition
-    # on image_id spreads it (production-scale inputs are left alone)
-    from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
-
-    images = spread_input_by(images, "image_id")
     pc = cover if prepared else None
     if broadcast_cover and not prepared:
         try:
@@ -319,7 +319,13 @@ def spatial_join(
         except CoverTooLargeError as exc:
             warnings.warn(f"spatial_join: {exc}; falling back to shuffled join")
     if pc is not None:
-        return images.select("image_id", "phash").mapInArrow(
+        # input-skew guard: a low-row-group parquet concentrates the scan,
+        # and the kernel fused behind it, on a few tasks; the size-gated
+        # repartition on image_id spreads it (production-scale inputs are
+        # left alone)
+        from rosreestr_xml_to_gis_converter_spark.operators.dedupe import spread_input_by
+
+        return spread_input_by(images, "image_id").select("image_id", "phash").mapInArrow(
             _point_join_batches(pc.geom_bc, box, res, _PAIRS_PER_PASS), schema=_JOIN_SCHEMA
         )
     pts = with_geotag(images, box).withColumn(
@@ -332,16 +338,20 @@ def spatial_join(
         joined = pts.join(cov, ["cell", "_salt"], "inner").drop("_salt")
     else:
         joined = pts.join(cov, "cell", "inner")
-    # full-interior cells are already exact matches: emit them on the pure
-    # relational path — only boundary candidates pay the Arrow hop
-    full_rows = joined.filter(F.col("full")).select("image_id", "cad_number", "cell")
-    boundary = joined.filter(~F.col("full")).select(
-        "image_id", "cad_number", "cell", "geom", "lon", "lat"
+    return joined.select("image_id", "cad_number", "cell", "full", "geom", "lon", "lat").mapInArrow(
+        _refine_batches, schema=_JOIN_SCHEMA
     )
-    return full_rows.unionByName(boundary.mapInArrow(_refine_batches, schema=_JOIN_SCHEMA))
 
 
 def _cover_res(cover: DataFrame) -> int:
-    # resolution is embedded in column metadata by build_parcel_cover
+    """The cover's resolution, which :func:`build_parcel_cover` embeds in
+    the ``cell`` column metadata.  An expression over ``cell`` (``+ 0``,
+    a cast) drops it; guessing would encode the images at the wrong
+    resolution, so a missing ``res`` raises."""
     meta = cover.schema["cell"].metadata or {}
-    return int(meta.get("res", 12))
+    if "res" not in meta:
+        raise ValueError(
+            "cover column 'cell' carries no 'res' metadata; build it with "
+            "build_parcel_cover or restore it with withMetadata('cell', {'res': r})"
+        )
+    return int(meta["res"])

@@ -191,10 +191,14 @@ def flagship_spatial_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame
     return spatial_join(img, cover, TESTDATA_BOX, broadcast_cover=False)
 
 
-def _centroids_pdf() -> pd.DataFrame:
-    rows = [
-        (cad, (x0 + x1) / 2.0, (y0 + y1) / 2.0) for cad, x0, y0, x1, y1 in TESTDATA_PARCELS
-    ]
+# the testdata parcels' bbox centres: the layer of knn_parcels, _literal
+# and _brute
+_CENTROIDS: list[tuple[str, float, float]] = [
+    (cad, (x0 + x1) / 2.0, (y0 + y1) / 2.0) for cad, x0, y0, x1, y1 in TESTDATA_PARCELS
+]
+
+
+def _centroids_pdf(rows: list[tuple[str, float, float]] = _CENTROIDS) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["cad_number", "clon", "clat"])
 
 
@@ -214,17 +218,13 @@ def knn_parcels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-def _centroids_values_sql() -> str:
-    rows = ", ".join(
-        f"('{cad}', {(x0 + x1) / 2.0!r}, {(y0 + y1) / 2.0!r})"
-        for cad, x0, y0, x1, y1 in TESTDATA_PARCELS
-    )
-    return f"(VALUES {rows}) AS cen(cad_number, clon, clat)"
-
-
-# kNN is per DISTINCT image (the driver testdata holds duplicate
-# (orderkey, linenumber) pairs; a real image table is unique-keyed)
-KNN_SQL = f"""
+def _knn_sql(centroids: list[tuple[str, float, float]]) -> str:
+    """DuckDB oracle of every kNN query: true kNN by cross join against the
+    centroid layer as a VALUES list.  kNN is per DISTINCT image (the
+    driver testdata holds duplicate (orderkey, linenumber) pairs; a real
+    image table is unique-keyed)."""
+    rows = ", ".join(f"('{cad}', {clon!r}, {clat!r})" for cad, clon, clat in centroids)
+    return f"""
 WITH {_IMAGES_CTE}
 , dpts AS (SELECT DISTINCT image_id, lon, lat FROM pts)
 SELECT image_id, cad_number, rank, dist FROM (
@@ -236,27 +236,12 @@ SELECT image_id, cad_number, rank, dist FROM (
                     cen.cad_number ASC) AS rank,
          sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
             + (p.lat - cen.clat) * (p.lat - cen.clat)) AS dist
-  FROM dpts p CROSS JOIN {_centroids_values_sql()}
+  FROM dpts p CROSS JOIN (VALUES {rows}) AS cen(cad_number, clon, clat)
 ) WHERE rank <= {KNN_K}
 """
 
-# literal fast path ranks per DISTINCT image (the driver testdata holds
-# duplicate (orderkey, linenumber) pairs; a real image table would not)
-KNN_LITERAL_SQL = f"""
-WITH {_IMAGES_CTE}
-, dpts AS (SELECT DISTINCT image_id, lon, lat FROM pts)
-SELECT image_id, cad_number, rank, dist FROM (
-  SELECT p.image_id, cen.cad_number,
-         row_number() OVER (
-           PARTITION BY p.image_id
-           ORDER BY sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-                       + (p.lat - cen.clat) * (p.lat - cen.clat)) ASC,
-                    cen.cad_number ASC) AS rank,
-         sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-            + (p.lat - cen.clat) * (p.lat - cen.clat)) AS dist
-  FROM dpts p CROSS JOIN {_centroids_values_sql()}
-) WHERE rank <= {KNN_K}
-"""
+
+KNN_SQL = _knn_sql(_CENTROIDS)
 
 
 # a deliberately SPARSE centroid layer for the kNN completeness gate:
@@ -283,37 +268,14 @@ def knn_uncovered(spark: SparkSession, sf_dir: str) -> DataFrame:
     true kNN for every distinct image — exactly what the cross-join
     oracle states.  Row count == distinct images x k by construction."""
     img = distinct_images_from_lineitem(spark, sf_dir)
-    cen = spark.createDataFrame(
-        pd.DataFrame(SPARSE_CENTROIDS, columns=["cad_number", "clon", "clat"])
-    )
+    cen = spark.createDataFrame(_centroids_pdf(SPARSE_CENTROIDS))
     out = knn_grid(
         img, cen, TESTDATA_BOX, k=KNN_K, res=9, disk=1, layer_fallback=True
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-def _sparse_centroids_values_sql() -> str:
-    rows = ", ".join(
-        f"('{cad}', {clon!r}, {clat!r})" for cad, clon, clat in SPARSE_CENTROIDS
-    )
-    return f"(VALUES {rows}) AS cen(cad_number, clon, clat)"
-
-
-KNN_UNCOVERED_SQL = f"""
-WITH {_IMAGES_CTE}
-, dpts AS (SELECT DISTINCT image_id, lon, lat FROM pts)
-SELECT image_id, cad_number, rank, dist FROM (
-  SELECT p.image_id, cen.cad_number,
-         row_number() OVER (
-           PARTITION BY p.image_id
-           ORDER BY sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-                       + (p.lat - cen.clat) * (p.lat - cen.clat)) ASC,
-                    cen.cad_number ASC) AS rank,
-         sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-            + (p.lat - cen.clat) * (p.lat - cen.clat)) AS dist
-  FROM dpts p CROSS JOIN {_sparse_centroids_values_sql()}
-) WHERE rank <= {KNN_K}
-"""
+KNN_UNCOVERED_SQL = _knn_sql(SPARSE_CENTROIDS)
 
 
 # a res-9 cell-center LATTICE with 3-cell spacing, extended 3+ cells past
@@ -350,35 +312,12 @@ def knn_escalated(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every emitted row is TRUE kNN — exactly the cross-join oracle.
     Row count == distinct images x k: no short image is dropped."""
     img = distinct_images_from_lineitem(spark, sf_dir)
-    cen = spark.createDataFrame(
-        pd.DataFrame(KNN_LATTICE, columns=["cad_number", "clon", "clat"])
-    )
+    cen = spark.createDataFrame(_centroids_pdf(KNN_LATTICE))
     out = knn_grid(img, cen, TESTDATA_BOX, k=KNN_K, res=9, disk=1)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-def _knn_lattice_values_sql() -> str:
-    rows = ", ".join(
-        f"('{cad}', {clon!r}, {clat!r})" for cad, clon, clat in KNN_LATTICE
-    )
-    return f"(VALUES {rows}) AS cen(cad_number, clon, clat)"
-
-
-KNN_ESCALATED_SQL = f"""
-WITH {_IMAGES_CTE}
-, dpts AS (SELECT DISTINCT image_id, lon, lat FROM pts)
-SELECT image_id, cad_number, rank, dist FROM (
-  SELECT p.image_id, cen.cad_number,
-         row_number() OVER (
-           PARTITION BY p.image_id
-           ORDER BY sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-                       + (p.lat - cen.clat) * (p.lat - cen.clat)) ASC,
-                    cen.cad_number ASC) AS rank,
-         sqrt((p.lon - cen.clon) * (p.lon - cen.clon)
-            + (p.lat - cen.clat) * (p.lat - cen.clat)) AS dist
-  FROM dpts p CROSS JOIN {_knn_lattice_values_sql()}
-) WHERE rank <= {KNN_K}
-"""
+KNN_ESCALATED_SQL = _knn_sql(KNN_LATTICE)
 
 
 # --- checkpoint / resume lineage (M-family; checkpoint.py) -------------------
@@ -694,16 +633,16 @@ FROM par p LEFT JOIN e USING (doc_id)
 # --- dedup -------------------------------------------------------------------
 
 def knn_parcels_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle kNN fast path: centroids inlined as a literal struct
-    array, per-row sort/slice in codegen.  The operator assumes unique
-    image ids (true of a real image table); the driver testdata has
-    duplicate (orderkey, linenumber) pairs, so dedupe first to match the
-    per-distinct-key oracle."""
+    """kNN against a centroid list given in Python: the list becomes the
+    broadcast layer directly and every image ranks the whole layer in the
+    numpy top-k, one Arrow stage over the image scan.  The operator
+    assumes unique image ids (true of a real image table); the driver
+    testdata has duplicate (orderkey, linenumber) pairs, so dedupe first
+    to match the per-distinct-key oracle."""
     from rosreestr_xml_to_gis_converter_spark.operators.knn import knn_literal
 
     img = distinct_images_from_lineitem(spark, sf_dir)
-    cen = [tuple(r) for r in _centroids_pdf().itertuples(index=False)]
-    out = knn_literal(img, cen, TESTDATA_BOX, k=KNN_K)
+    out = knn_literal(img, _CENTROIDS, TESTDATA_BOX, k=KNN_K)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1495,7 +1434,7 @@ ENGINE_ORACLES = {
     "flagship_spatial_join_shuffle": FLAGSHIP_SQL,
     "knn_parcels": KNN_SQL,
     "knn_parcels_brute": KNN_SQL,
-    "knn_parcels_literal": KNN_LITERAL_SQL,
+    "knn_parcels_literal": KNN_SQL,
     "knn_uncovered": KNN_UNCOVERED_SQL,
     "knn_escalated": KNN_ESCALATED_SQL,
     "checkpoint_lineage": CHECKPOINT_LINEAGE_SQL,

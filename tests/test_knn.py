@@ -178,7 +178,7 @@ def test_escalation_exact_with_layer_gate_closed(spark, images, centroids):
 
 
 def test_escalation_auto_gate_opens_for_small_layer(spark, images):
-    """layer_fallback=None (the guarded collect) must accept a 5-row
+    """The default guarded collect (layer_fallback=False) must accept a 5-row
     layer: every image emits exactly k true-kNN rows even at res 9 /
     disk 1."""
     from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
@@ -192,11 +192,11 @@ def test_escalation_auto_gate_opens_for_small_layer(spark, images):
 
 
 def test_escalation_auto_gate_closes_on_small_broadcast_cap(spark, images, monkeypatch):
-    """The guarded collect (layer_fallback=None) derives its row cap from
-    BROADCAST_COVER_MAX_BYTES and ``disk``: with the cap shrunk to 3 rows
-    at disk 1, a 5-centroid layer raises LayerTooLargeError naming the
-    cap and ``layer_fallback=True`` before the layer table is built or
-    anything is broadcast.  ``layer_fallback=False`` is rejected."""
+    """The guarded collect (the default, ``layer_fallback=False``) derives
+    its row cap from BROADCAST_COVER_MAX_BYTES and ``disk``: with the cap
+    shrunk to 3 rows at disk 1, a 5-centroid layer raises
+    LayerTooLargeError naming the cap and ``layer_fallback=True`` before
+    the layer table is built or anything is broadcast."""
     from rosreestr_xml_to_gis_converter_spark.operators import knn
     from rosreestr_xml_to_gis_converter_spark.queries_engine import SPARSE_CENTROIDS
 
@@ -211,10 +211,9 @@ def test_escalation_auto_gate_closes_on_small_broadcast_cap(spark, images, monke
     monkeypatch.setattr(knn, "_layer_table", boom)
     monkeypatch.setattr(spark.sparkContext, "broadcast", boom)
     assert knn._max_layer_rows(1) == 3
-    with pytest.raises(knn.LayerTooLargeError, match=r"more than 3 rows.*layer_fallback=True"):
-        knn_grid(images, cen, TESTDATA_BOX, k=3, res=9, disk=1)
-    with pytest.raises(ValueError, match="removed"):
-        knn_grid(images, cen, TESTDATA_BOX, k=3, res=9, disk=1, layer_fallback=False)
+    for kw in ({}, {"layer_fallback": False}):
+        with pytest.raises(knn.LayerTooLargeError, match=r"more than 3 rows.*layer_fallback=True"):
+            knn_grid(images, cen, TESTDATA_BOX, k=3, res=9, disk=1, **kw)
 
 
 def _one_img_rows(spark, rows):

@@ -193,10 +193,8 @@ def test_kernel_points_bitwise_equal_column_geotag(spark):
     bit-identical to ``with_geotag`` + ``cell_col`` run through Spark:
     exact doubles and int64 cells, on phash 0, -1, 2^32 - 1, negative
     int64s, values on (and beside) cell edges at res 12, 14 and 28, and
-    null.  A null phash has null lon/lat in Spark and the null flag and
-    cell -1 in numpy; ``cell_col`` gives it the world's north-east corner
-    cell instead (``greatest``/``least`` skip nulls), which the kernels
-    do not reproduce."""
+    null.  A null phash has null lon/lat and a null cell in Spark, and
+    the null flag and cell -1 in numpy: neither matches any cover cell."""
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql import functions as F
@@ -229,7 +227,7 @@ def test_kernel_points_bitwise_equal_column_geotag(spark):
                 exp = want.column(name).to_numpy(zero_copy_only=False)[:-1]
                 assert np.array_equal(got[:-1].view(np.int64), exp.view(np.int64)), (box, res, name)
             assert np.array_equal(cell[:-1], want.column("cell").to_numpy(zero_copy_only=False)[:-1])
-            assert cell[-1] == -1
+            assert cell[-1] == -1 and want.column("cell")[-1].as_py() is None
     # fixture sanity: at every res, some points sit exactly on a cell edge
     assert all(on_edge.values()), on_edge
 
@@ -339,3 +337,86 @@ def test_salt_on_broadcast_path_raises(spark):
         spatial_join(images, cover, TESTDATA_BOX, salt=4)
     with pytest.raises(ValueError, match="salt"):
         spatial_join(images, prepare_cover(cover), TESTDATA_BOX, broadcast_cover=False, salt=4)
+
+
+def test_shuffled_join_drops_null_point_in_corner_cell(spark):
+    """A null phash has a null point, so its cell is null and it joins no
+    cover row, even when a full cover cell is the world's north-east
+    corner (the cell a null-skipping clamp would give it)."""
+    from rosreestr_xml_to_gis_converter_spark.index.grid import cell_id
+
+    res = 3
+    rect = np.array([[100.0, 50.0], [200.0, 50.0], [200.0, 100.0], [100.0, 100.0], [100.0, 50.0]])
+    cover = build_parcel_cover(spark, [("corner", [rect])], res)
+    corner = int(cell_id(7, 7, res))
+    assert (corner, True) in {(r.cell, r.full) for r in cover.collect()}
+    box = GeoBox(lon0=140.0, lat0=70.0, dlon=10.0, dlat=10.0)
+    images = spark.createDataFrame([("in", 0), ("null", None)], "image_id string, phash long")
+    for kw in ({}, {"broadcast_cover": False}, {"broadcast_cover": False, "salt": 4}):
+        got = [tuple(r) for r in spatial_join(images, cover, box, **kw).collect()]
+        assert got == [("in", "corner", corner)], kw
+
+
+def test_cover_without_res_metadata_raises(spark):
+    """An expression over ``cell`` drops the resolution metadata; the join
+    must refuse the cover rather than assume a resolution."""
+    from pyspark.sql import functions as F
+
+    images = spark.createDataFrame([("a", 1)], "image_id string, phash long")
+    cover = build_parcel_cover(spark, _parcels_rings(), 9)
+    assert sj._cover_res(cover.select("*")) == 9
+    for bare in (cover.withColumn("cell", F.col("cell") + 0), cover.withColumn("cell", F.col("cell").cast("long"))):
+        for kw in ({}, {"broadcast_cover": False}):
+            with pytest.raises(ValueError, match="res"):
+                spatial_join(images, bare, TESTDATA_BOX, **kw)
+        with pytest.raises(ValueError, match="res"):
+            prepare_cover(bare)
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The plan lines below node ``i`` (deeper tree prefix)."""
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = []
+    for ln in lines[i + 1 :]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+@pytest.mark.parametrize("salt", [None, 4])
+def test_shuffled_join_plan_reads_images_once(spark, sf_dir, salt):
+    """The shuffled join (no broadcast anywhere) scans the image relation
+    once and reuses no exchange of it, shuffles it once on ``cell``
+    (the cover side has the other ``cell`` exchange), joins once and
+    refines every
+    joined row in one Arrow stage: no Union of a relational branch and a
+    refine branch, and no ``image_id`` spread under the ``cell``
+    exchange."""
+    import os
+
+    from rosreestr_xml_to_gis_converter_spark.synth import images_from_lineitem
+
+    img = images_from_lineitem(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    cover = build_parcel_cover(spark, _parcels_rings(), RES)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = spatial_join(img, cover, TESTDATA_BOX, broadcast_cover=False, salt=salt)
+        assert len(out.collect()) > 0
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    final = plan.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    scans = [ln for ln in lines if "FileScan" in ln]
+    assert len(scans) == 1 and "lineitem" in scans[0] and "ReusedExchange" not in final, final
+    cell_x = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(cell#" in ln]
+    image_x = [i for i in cell_x if any("FileScan" in b for b in _subtree(lines, i))]
+    assert len(cell_x) == 2 and len(image_x) == 1, final
+    assert len([ln for ln in lines if "Join" in ln]) == 1, final
+    assert "Union" not in final and "REPARTITION_BY_NUM" not in final, final
+    assert final.count("MapInArrow") == 1, final
